@@ -345,9 +345,7 @@ object BioQueries {
       val index = KmerIndex.buildWithPos(targets, params.k,
         params.mode.kmerAlphabet)
       val qk = QueryTable.buildFromProfiles(s, profiles,
-        params.query.copy(k = params.k, seedMatrix = params.mode.seedMatrix,
-          kmerAlphabetSize = params.mode.kmerAlphabet.length,
-          exactKmerMatching = true))
+        params.queryConfig.copy(exactKmerMatching = true))
       Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
         .groupBy(col("queryId").as("query_id"),
           col("targetId").as("target_id"))
@@ -458,9 +456,7 @@ object BioQueries {
       val index = KmerIndex.buildWithPos(targets, params.k,
         params.mode.kmerAlphabet)
       val qk = QueryTable.buildFromProfiles(s, profiles,
-        params.query.copy(k = params.k, seedMatrix = params.mode.seedMatrix,
-          kmerAlphabetSize = params.mode.kmerAlphabet.length,
-          exactKmerMatching = true))
+        params.queryConfig.copy(exactKmerMatching = true))
       val hits = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
         .select(col("queryId").as("query_id"),
           col("targetId").as("target_id"), col("diag"))

@@ -3,6 +3,8 @@ package graft.bio
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.ManifestIO
+
 /** End-to-end search driver — the `petasearch` / `easy-petasearch` workflow
   * (`src/workflow/petasearch.cpp`, `data/petasearch.sh`) collapsed into one
   * Spark program: the reference's four process boundaries become DataFrame
@@ -35,7 +37,13 @@ object PetaSearch {
       evalThr: Double = Align.DefaultEvalThr,
       xdrop: Int = Align.DefaultXdrop,
       mode: SearchMode = SearchMode.Protein,
-      query: QueryTable.Config = QueryTable.Config())
+      query: QueryTable.Config = QueryTable.Config()) {
+    /** `query` with this search's k, seed matrix and k-mer alphabet size:
+      * the config every query table of the search is built with.
+      */
+    def queryConfig: QueryTable.Config = query.copy(k = k,
+      seedMatrix = mode.seedMatrix, kmerAlphabetSize = mode.kmerAlphabet.length)
+  }
 
   /** C13 m8 formatting (`src/sra/convertsraalignments.cpp:297-311`):
     * `qname tname fident(%.3f) alnlen mismatch gapopen qstart qend tstart
@@ -170,16 +178,27 @@ object PetaSearch {
     * bias-adjusted thresholds, similar-k-mer expansion) per the reference's
     * defaults; pass `query = QueryTable.Config(exactKmerMatching = true,
     * maskMode = false, biasCorrection = false)` for the exact-only path.
+    * Targets carrying `dbId` are searched as side-by-side DBs (see
+    * [[searchPartitioned]]).
     */
   def search(spark: SparkSession, queries: DataFrame, targets: DataFrame,
       params: Params = Params(),
-      preparedQueryTable: Option[DataFrame] = None): DataFrame = {
-    val index = KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet)
-    val qk = preparedQueryTable.getOrElse(buildQueryTable(spark, queries, params))
-    val pf = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-    Align.run(spark, pf, queries, targets, params.evalThr, params.xdrop,
-      params.mode.gaps, params.mode.alignMatrix, params.mode.gumbel, params.k)
-  }
+      preparedQueryTable: Option[DataFrame] = None): DataFrame =
+    chain(spark, queries,
+      preparedQueryTable.getOrElse(buildQueryTable(spark, queries, params)),
+      KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet),
+      targets, params)
+
+  /** The one search chain behind every entry point: query table `qk` ->
+    * prefilter against `index` -> align against `targets`. The `dbId` and
+    * profile shapes ride on the input columns (see [[Align.run]]).
+    */
+  private def chain(spark: SparkSession, queries: DataFrame, qk: DataFrame,
+      index: DataFrame, targets: DataFrame, params: Params,
+      knownDbResCount: Option[Long] = None): DataFrame =
+    Align.run(spark, Prefilter.runWithDiag(qk, index, params.requiredKmerMatches),
+      queries, targets, params.evalThr, params.xdrop, params.mode.gaps,
+      params.mode.alignMatrix, params.mode.gumbel, params.k, knownDbResCount)
 
   /** Reverse complement of a nucleotide sequence column — codegen'd
     * built-ins only (translate + reverse), no UDF in the scan path.
@@ -209,12 +228,8 @@ object PetaSearch {
     // (or keep the session short).
     val index = KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet)
       .cache()
-    def oneStrand(qs: DataFrame): DataFrame = {
-      val qk = buildQueryTable(spark, qs, params)
-      val pf = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-      Align.run(spark, pf, qs, targets, params.evalThr, params.xdrop,
-        params.mode.gaps, params.mode.alignMatrix, params.mode.gumbel, params.k)
-    }
+    def oneStrand(qs: DataFrame): DataFrame =
+      chain(spark, qs, buildQueryTable(spark, qs, params), index, targets, params)
     val plus = oneStrand(queries).withColumn("strand", lit("+"))
     val rcQueries = queries.withColumn("seq", revComp(col("seq")))
     // alignment of revcomp(q) vs t == minus-strand hit of q: flip the query
@@ -245,17 +260,12 @@ object PetaSearch {
     */
   def searchProfiles(spark: SparkSession, profiles: DataFrame,
       targets: DataFrame, params: Params = Params()): DataFrame = {
-    val queries = Profiles.toSequences(spark, profiles)
-    val index = KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet)
-    val qk = QueryTable.buildFromProfiles(spark, profiles, params.query.copy(
-      k = params.k, seedMatrix = params.mode.seedMatrix,
-      kmerAlphabetSize = params.mode.kmerAlphabet.length))
-    val pf = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-    val profQueries = queries
+    val profQueries = Profiles.toSequences(spark, profiles)
       .join(profiles.select(col("seqId"), col("profile")), Seq("seqId"))
-    Align.runProfile(spark, pf, profQueries, targets, params.evalThr,
-      params.xdrop, params.mode.gaps, params.mode.alignMatrix,
-      params.mode.gumbel, params.k)
+    chain(spark, profQueries,
+      QueryTable.buildFromProfiles(spark, profiles, params.queryConfig),
+      KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet),
+      targets, params)
   }
 
   /** The query-side k-mer table (masking, bias thresholds, similar-k-mer
@@ -264,14 +274,22 @@ object PetaSearch {
     */
   def buildQueryTable(spark: SparkSession, queries: DataFrame,
       params: Params): DataFrame =
-    QueryTable.build(spark, queries, params.query.copy(
-      k = params.k, seedMatrix = params.mode.seedMatrix,
-      kmerAlphabetSize = params.mode.kmerAlphabet.length))
+    QueryTable.build(spark, queries, params.queryConfig)
 
   /** Ingest-once index build — `convert2sradb` + `createkmertable` as one
-    * job: sequences + unique-k-mer index persisted under `dbPath`
-    * (`sequences/` parquet; `kmers/` range-partitioned by kmer, sorted
-    * within partitions => DELTA_BINARY_PACKED runs + min/max pruning).
+    * job. The target DB's on-disk contract under `dbPath`:
+    *  - `sequences/`: the ingested FASTA (the [[Fasta.read]] columns),
+    *    parquet. [[searchIndexed]] joins it in the align stage; callers
+    *    join it for m8 names; [[appendToTargetDb]] reads its max id and
+    *    appends new batches to it.
+    *  - `kmers/`: the unique-k-mer index (kmer, seqId, seqLen, tpos),
+    *    range-partitioned by kmer and sorted within partitions
+    *    (DELTA_BINARY_PACKED runs + min/max pruning). [[searchIndexed]]'s
+    *    prefilter joins it; [[appendToTargetDb]] merges a batch into it.
+    *  - `meta/`: one row (dbResCount, nSeqs), both int64, written on the
+    *    driver. [[searchIndexed]] takes the evaluer's residue total from
+    *    it; [[appendToTargetDb]] adds a batch's totals to it. A DB without
+    *    `meta/` still works: both fall back to scanning `sequences/`.
     */
   def buildTargetDb(spark: SparkSession, targetFasta: String, dbPath: String,
       params: Params = Params()): Unit = {
@@ -281,12 +299,29 @@ object PetaSearch {
     KmerIndex.write(
       KmerIndex.buildWithPos(persisted, params.k, params.mode.kmerAlphabet),
       s"$dbPath/kmers")
-    // index metadata: the evaluer's residue total and the sequence count,
     // computed once at build time so query-time never rescans the corpus
-    persisted
-      .agg(sum(col("seqLen")).as("dbResCount"), count(lit(1)).as("nSeqs"))
-      .write.mode("overwrite").parquet(s"$dbPath/meta")
+    writeDbMeta(spark, dbPath, totals(persisted))
   }
+
+  /** (residues, sequences) of a sequence table; 0 residues when empty. */
+  private def totals(seqs: DataFrame): (Long, Long) = {
+    val r = seqs.agg(coalesce(sum(col("seqLen")), lit(0L)), count(lit(1))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def writeDbMeta(spark: SparkSession, dbPath: String,
+      t: (Long, Long)): Unit =
+    ManifestIO.writeMetaDir(spark.sparkContext.hadoopConfiguration,
+      s"$dbPath/meta", Seq("dbResCount" -> t._1, "nSeqs" -> t._2))
+
+  /** The DB's `meta/` totals, None for a DB built without `meta/`. */
+  private def readDbMeta(spark: SparkSession, dbPath: String): Option[(Long, Long)] =
+    ManifestIO.readFirstRecord(spark.sparkContext.hadoopConfiguration,
+      s"$dbPath/meta").map { g =>
+      // an empty corpus once stored a null residue total
+      def field(n: String) = if (g.getFieldRepetitionCount(n) > 0) g.getLong(n, 0) else 0L
+      (field("dbResCount"), field("nSeqs"))
+    }
 
   /** Incrementally add sequences to a persisted target DB: ingest ONLY the
     * new FASTA, never rescan the existing corpus. Exact, not approximate:
@@ -305,22 +340,10 @@ object PetaSearch {
     // coalesce: an empty existing table yields a null max (getLong would NPE)
     val offset = existing
       .agg(coalesce(max(col("seqId")), lit(-1L))).head().getLong(0) + 1
-    // old-corpus totals for the metadata update are snapshotted BEFORE the
-    // new batch lands — the fallback below scans `existing`'s path, and a
-    // post-append scan would double-count the batch
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dbPath/meta")
-    val hasMeta = metaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(metaPath)
-    val (oldRes, oldN) =
-      if (hasMeta) {
-        val r = spark.read.parquet(s"$dbPath/meta").head()
-        (r.getAs[Long]("dbResCount"), r.getAs[Long]("nSeqs"))
-      } else {
-        // pre-metadata DB: one-time column-pruned scan of the old corpus
-        val r = existing.agg(coalesce(sum(col("seqLen")), lit(0L)),
-          count(lit(1))).head()
-        (r.getLong(0), r.getLong(1))
-      }
+    // old-corpus totals are snapshotted BEFORE the new batch lands — the
+    // pre-metadata fallback scans `existing`'s path, and a post-append scan
+    // would double-count the batch
+    val (oldRes, oldN) = readDbMeta(spark, dbPath).getOrElse(totals(existing))
     val newSeqs = Fasta.read(spark, targetFasta)
       .withColumn("seqId", col("seqId") + lit(offset))
     newSeqs.write.mode("append").parquet(s"$dbPath/sequences")
@@ -328,34 +351,26 @@ object PetaSearch {
       .filter(col("seqId") >= offset)
     val newIdx = KmerIndex.buildWithPos(appended, params.k,
       params.mode.kmerAlphabet)
-    val merged = spark.read.parquet(s"$dbPath/kmers")
-      .unionByName(newIdx)
-      .groupBy(col("kmer"))
-      .agg(max_by(
-        struct(col("seqId"), col("seqLen"), col("tpos")),
-        struct(col("seqLen"), (-col("seqId")).as("negId"),
-          (-col("tpos")).as("negPos"))).as("rep"))
-      .select(col("kmer"), col("rep.seqId").as("seqId"),
-        col("rep.seqLen").as("seqLen"), col("rep.tpos").as("tpos"))
+    val merged = KmerIndex.representatives(
+      spark.read.parquet(s"$dbPath/kmers").unionByName(newIdx))
     // stage-and-swap: parquet can't overwrite a path it is reading
     KmerIndex.write(merged, s"$dbPath/kmers_staging")
     swapIn(spark, s"$dbPath/kmers_staging", s"$dbPath/kmers")
-    val (batchRes, batchN) = {
-      val r = appended.agg(coalesce(sum(col("seqLen")), lit(0L)),
-        count(lit(1))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    import spark.implicits._
-    Seq((oldRes + batchRes, oldN + batchN)).toDF("dbResCount", "nSeqs")
-      .write.mode("overwrite").parquet(s"$dbPath/meta")
+    val (batchRes, batchN) = totals(appended)
+    writeDbMeta(spark, dbPath, (oldRes + batchRes, oldN + batchN))
   }
 
-  /** Crash-safe stage-and-swap: the live directory is renamed aside before
-    * the staged one moves in, so there is no window where `dst` is missing
-    * with the only copy in staging — a crash leaves either the old data
-    * (recoverable by rerunning the append from staging) or the new data
-    * (plus a stale `_old` that the next swap clears). Renames are atomic on
-    * HDFS-like filesystems; delete-then-rename was not.
+  /** Stage-and-swap: the live directory is renamed aside before the staged
+    * one moves in, so there is no window where `dst` is missing with the
+    * only copy in staging — a crash leaves either the old index or the new
+    * one (plus a stale `_old` that the next swap clears). Renames are
+    * atomic on HDFS-like filesystems; delete-then-rename was not.
+    *
+    * The append around it is NOT crash-safe: the batch is already in
+    * `sequences/` when the swap runs, and `meta/` is written after it, so
+    * a crash before the meta write leaves stale totals, and rerunning the
+    * append appends the batch to `sequences/` a second time under new ids.
+    * Making the append idempotent is open item 3 in ROADMAP.md.
     */
   private def swapIn(spark: SparkSession, staging: String, dst: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -373,27 +388,15 @@ object PetaSearch {
 
   /** Query a persisted target DB (the reference's `petasearch` against
     * prebuilt k-mer tables): scans only the stored index — no target-side
-    * k-mer extraction at query time.
+    * k-mer extraction at query time — and takes the evaluer's residue total
+    * from `meta/` (a DB without it pays a corpus scan).
     */
   def searchIndexed(spark: SparkSession, queries: DataFrame, dbPath: String,
-      params: Params = Params()): DataFrame = {
-    val targets = spark.read.parquet(s"$dbPath/sequences")
-    val index = spark.read.parquet(s"$dbPath/kmers")
-    // one-row metadata read instead of a full-corpus seqLen aggregate;
-    // DBs built before metadata existed fall back to the scan
-    val metaPath = new org.apache.hadoop.fs.Path(s"$dbPath/meta")
-    val hasMeta = metaPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration).exists(metaPath)
-    val dbResCount: Option[Long] =
-      if (hasMeta)
-        Some(spark.read.parquet(s"$dbPath/meta").head().getAs[Long]("dbResCount"))
-      else None
-    val qk = buildQueryTable(spark, queries, params)
-    val pf = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-    Align.run(spark, pf, queries, targets, params.evalThr, params.xdrop,
-      params.mode.gaps, params.mode.alignMatrix, params.mode.gumbel, params.k,
-      knownDbResCount = dbResCount)
-  }
+      params: Params = Params()): DataFrame =
+    chain(spark, queries, buildQueryTable(spark, queries, params),
+      spark.read.parquet(s"$dbPath/kmers"),
+      spark.read.parquet(s"$dbPath/sequences"), params,
+      readDbMeta(spark, dbPath).map(_._1))
 
   /** Single-job multi-DB search over a `dbId`-partitioned corpus
     * (SURVEY §1.3/§3.2: "a targetlist becomes a partition column"): ONE
@@ -404,34 +407,13 @@ object PetaSearch {
     * balances partitions across the whole corpus.
     *
     * `targets` must carry (dbId, seqId, seq, seqLen); seqIds are per-DB.
+    * The result carries `dbId` ahead of the [[Align.run]] columns.
     */
   def searchPartitioned(spark: SparkSession, queries: DataFrame,
       targets: DataFrame, params: Params = Params()): DataFrame = {
-    val kmers = KmerCodec.explodeKmers(targets, "seq", params.k,
-      params.mode.kmerAlphabet)
-    val index = kmers
-      .groupBy(col("dbId"), col("kmer"))
-      .agg(max_by(
-        struct(col("seqId"), col("seqLen"), col("kmerPos")),
-        struct(col("seqLen"), (-col("seqId")).as("negId"),
-          (-col("kmerPos")).as("negPos"))).as("rep"))
-      .select(col("dbId"), col("kmer"), col("rep.seqId").as("targetId"),
-        col("rep.kmerPos").as("tpos"))
-    val qk = QueryTable.build(spark, queries, params.query.copy(
-      k = params.k, seedMatrix = params.mode.seedMatrix,
-      kmerAlphabetSize = params.mode.kmerAlphabet.length))
-    val hits = qk.join(index, Seq("kmer"))
-      .select(col("dbId"), col("targetId"), col("queryId"), col("kmerPos"),
-        col("kmer"), (col("kmerPos") - col("tpos")).cast("int").as("diag"))
-    val goodPairs = hits
-      .groupBy(col("dbId"), col("targetId"), col("queryId"))
-      .agg(count(lit(1)).as("n"))
-      .filter(col("n") > params.requiredKmerMatches)
-      .select(col("dbId"), col("targetId"), col("queryId"))
-    val pf = hits.join(goodPairs, Seq("dbId", "targetId", "queryId"), "left_semi")
-    Align.runPartitioned(spark, pf, queries, targets, params.evalThr,
-      params.xdrop, params.mode.gaps, params.mode.alignMatrix,
-      params.mode.gumbel, params.k)
+    require(targets.columns.contains("dbId"),
+      "searchPartitioned needs a dbId column on targets")
+    search(spark, queries, targets, params)
   }
 
   /** Multi-target-DB fan-out (J2/J5/U1): the reference's `targetlist`

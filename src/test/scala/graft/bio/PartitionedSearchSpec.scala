@@ -29,22 +29,20 @@ class PartitionedSearchSpec extends AnyFunSuite {
     val db0 = all.filter($"seqId" < 10)
     val db1 = all.filter($"seqId" >= 10)
       .withColumn("seqId", $"seqId" - 10)
-    val looped = PetaSearch.searchMany(spark, queries, Seq(db0, db1))
-      .select("queryId", "targetId", "bits", "eval")
-      .as[(Long, Long, Int, Double)].collect()
-    val partitioned = PetaSearch.searchPartitioned(spark, queries,
-      db0.withColumn("dbId", lit(0L)).unionByName(db1.withColumn("dbId", lit(1L))))
-      .select("dbId", "queryId", "targetId", "bits", "eval")
-      .as[(Long, Long, Long, Int, Double)].collect()
-    // compare as multisets of (dbId-resolved) rows: looped targets are
-    // per-DB ids in order db0 then db1 — same key space as partitioned
-    val loopedSet = looped.groupBy(identity).view.mapValues(_.length).toMap
-    val partSet = partitioned.map { case (db, q, t, b, e) => (q, t, b, e) -> db }
-    // row multiplicity: a (q,t,bits,eval) may appear once per DB
-    val partCounts = partSet.map(_._1).groupBy(identity).view.mapValues(_.length).toMap
-    assert(partCounts == loopedSet,
-      s"mismatch: only-looped=${loopedSet.keySet -- partCounts.keySet}, " +
-        s"only-part=${partCounts.keySet -- loopedSet.keySet}")
+    // every alignment column must agree, not only the scores
+    val cols = Seq("queryId", "targetId", "bits", "eval", "fident", "qStart",
+      "qEnd", "tStart", "tEnd", "backtrace", "alnLen", "mismatch", "gapOpen")
+    def rows(df: org.apache.spark.sql.DataFrame): Map[String, Int] =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|"))
+        .groupBy(identity).view.mapValues(_.length).toMap
+    val looped = rows(PetaSearch.searchMany(spark, queries, Seq(db0, db1)))
+    // compare as multisets: looped targets are per-DB ids, the same key
+    // space as partitioned, so a row may appear once per DB
+    val partitioned = rows(PetaSearch.searchPartitioned(spark, queries,
+      db0.withColumn("dbId", lit(0L)).unionByName(db1.withColumn("dbId", lit(1L)))))
+    assert(partitioned == looped,
+      s"mismatch: only-looped=${looped.keySet -- partitioned.keySet}, " +
+        s"only-part=${partitioned.keySet -- looped.keySet}")
     assert(partitioned.nonEmpty)
   }
 }

@@ -48,8 +48,8 @@ class ProfilesSpec extends AnyFunSuite {
     val p = Align.PairRow(0L, 0L, hits, s, s)
     val ev = new Evaluer(GumbelParams.Blosum62Ungapped, 1000L)
     val plain = Align.alignPair(p, m, ev, 1e3, 10, Aligner.Gaps(11, 1))
-    val viaProfile = Align.alignPairScored(p, m, ev, 1e3, 10,
-      Aligner.Gaps(11, 1), KmerIndex.DefaultK, Some(prof))
+    val viaProfile = Align.alignPair(p.copy(profile = Some(prof)), m, ev, 1e3,
+      10, Aligner.Gaps(11, 1))
     assert(plain.isDefined && viaProfile.isDefined)
     assert(plain.get == viaProfile.get)
     assert(t.length == s.length)
@@ -67,8 +67,8 @@ class ProfilesSpec extends AnyFunSuite {
     val p = Align.PairRow(0L, 0L, hits, s, s)
     val ev = new Evaluer(GumbelParams.Blosum62Ungapped, 1000L)
     val plain = Align.alignPair(p, m, ev, 1e3, 10, Aligner.Gaps(11, 1)).get
-    val viaProfile = Align.alignPairScored(p, m, ev, 1e3, 10,
-      Aligner.Gaps(11, 1), KmerIndex.DefaultK, Some(prof)).get
+    val viaProfile = Align.alignPair(p.copy(profile = Some(prof)), m, ev, 1e3,
+      10, Aligner.Gaps(11, 1)).get
     // BLOSUM62 self-alignment averages ~6 bits/residue of raw score; the
     // profile path caps each position at +2, so its bit score must be lower
     assert(viaProfile.bits < plain.bits)
@@ -135,10 +135,16 @@ class ProfilesSpec extends AnyFunSuite {
       lines.map(l => if (l.startsWith(">")) l
       else l.replace("-", "").replace(".", "")).mkString("\n"))
     val m8 = PetaSearch.easyProfileSearch(spark, msaFile.getAbsolutePath,
-      tgtFile.getAbsolutePath).collect()
-    assert(m8.nonEmpty)
+      tgtFile.getAbsolutePath).collect().map(_.toSeq.mkString("\t")).toSeq
+    // frozen full 12-column m8, in output order (golden_profile_m8.tsv);
     // every hit is attributed to the profile (first MSA record's name)
-    assert(m8.forall(_.getString(0) == "WmCas7x3"))
+    val expected = {
+      val src = scala.io.Source.fromInputStream(
+        getClass.getResourceAsStream("/golden_profile_m8.tsv"), "UTF-8")
+      try src.getLines().toSeq finally src.close()
+    }
+    assert(m8 == expected,
+      s"profile golden drift: missing=${expected.diff(m8)}, new=${m8.diff(expected)}")
   }
 
   test("profile table converts to a searchable sequences table") {
