@@ -42,6 +42,18 @@ final class Matrices private (
   def score(a: Char, b: Char): Int = scores(aa2num(a & 0xff))(aa2num(b & 0xff))
 
   def xOrdinal: Int = alphabetSize - 1
+
+  /** Per residue ordinal `a`: every emittable residue `c` (X excluded) as
+    * `(scores(a)(c), c)`, sorted by score descending — the similar-k-mer
+    * expansion's candidate list for a window position holding `a`
+    * ([[QueryTable.similarKmers]]). It depends on nothing but the matrix,
+    * so it is built once per matrix, not per window: the counterpart of
+    * the reference's precomputed extended matrices
+    * (`ExtendedSubstitutionMatrix.cpp`).
+    */
+  lazy val kmerCandidates: Array[Array[(Int, Int)]] =
+    Array.tabulate(alphabetSize)(a =>
+      Matrices.byScoreDesc(java.util.Arrays.copyOf(scores(a), alphabetSize - 1)))
 }
 
 object Matrices {
@@ -111,6 +123,13 @@ object Matrices {
     * NucleotideMatrix(..., 1.0, 0.0)).
     */
   lazy val nucleotide: Matrices = build("nucleotide", "/matrices/nucleotide.out", 1.0, 0.0)
+
+  /** `(row(c), c)` for every column `c`, sorted by score descending; the
+    * sort is stable, so equal scores keep ascending `c` — an order the
+    * expansion's top-k cutoff depends on.
+    */
+  private[bio] def byScoreDesc(row: Array[Int]): Array[(Int, Int)] =
+    row.indices.map(c => (row(c), c)).sortBy(-_._1).toArray
 
   def byName(name: String): Matrices = name match {
     case "blosum62" => blosum62

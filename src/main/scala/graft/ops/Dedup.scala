@@ -569,6 +569,13 @@ object Dedup {
     * where any absolute number is eventually exceeded by EVERY common
     * shingle or by NONE — a corpus fraction (`maxDocFreqFrac`, which wins
     * when set; the doc count rides in as a 1-row broadcast).
+    *
+    * Shingles are compared as xxhash64 values, not strings, so two distinct
+    * shingles that collide count as one shingle. Among `n` distinct
+    * shingles the chance of any collision is ~n²/2⁶⁵ (~3e-8 at a million,
+    * ~3% at a billion); a collision can move the set sizes, document
+    * frequencies and `nCommon` only of documents holding a colliding
+    * shingle.
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
       queryPred: Column, shingleSize: Int = 2, minCommon: Int = 3,
@@ -592,6 +599,11 @@ object Dedup {
     * Orientation: containment of the QUERY side (qid's shingles inside
     * tid's) — run with the small/new side as queries to find what they
     * duplicate from the corpus.
+    *
+    * Shingles are compared as xxhash64 values, as in [[ngramJaccard]]: the
+    * chance of any collision among `n` distinct shingles is ~n²/2⁶⁵, and a
+    * collision moves the counts only of documents holding a colliding
+    * shingle.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       queryPred: Column, shingleSize: Int = 2, minCommon: Int = 3,
