@@ -29,20 +29,25 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/parquet-reader spin-up shouldn't be
-    // attributed to whichever query happens to run first
-    try {
-      graft.relational.RelQueries.q2JoinAgg.run(spark, sfDir).count()
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-      spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-      // the *_probe rows time the SEARCH path alone: build their index
-      // fixtures here, outside every timed window
-      graft.ops.SimilarityQueries.ensureAnnFixture(spark, sfDir)
-      graft.ops.SimilarityQueries.ensurePqFixture(spark, sfDir)
-      graft.ops.TextQueries.ensureBm25Fixture(spark, sfDir)
-      graft.ops.TextQueries.ensureDsirFixture(spark, sfDir)
-      graft.ops.TextQueries.ensurePhraseFixture(spark, sfDir)
-      graft.sources.Bucketed.ensureBucketedTables(spark, sfDir)
-    } catch { case _: Throwable => }
+    // attributed to whichever query happens to run first. The *_probe rows
+    // time the SEARCH path alone: build their index fixtures here, outside
+    // every timed window. A failed step is reported and the rest still run,
+    // so a missing fixture shows here and not as a slow timed query.
+    Seq[(String, () => Any)](
+      "q2_join_agg" -> (() => graft.relational.RelQueries.q2JoinAgg.run(spark, sfDir).count()),
+      "documents" -> (() => spark.read.parquet(s"$sfDir/documents.parquet").count()),
+      "embeddings" -> (() => spark.read.parquet(s"$sfDir/embeddings.parquet").count()),
+      "ann_fixture" -> (() => graft.ops.SimilarityQueries.ensureAnnFixture(spark, sfDir)),
+      "pq_fixture" -> (() => graft.ops.SimilarityQueries.ensurePqFixture(spark, sfDir)),
+      "bm25_fixture" -> (() => graft.ops.TextQueries.ensureBm25Fixture(spark, sfDir)),
+      "dsir_fixture" -> (() => graft.ops.TextQueries.ensureDsirFixture(spark, sfDir)),
+      "phrase_fixture" -> (() => graft.ops.TextQueries.ensurePhraseFixture(spark, sfDir)),
+      "bucketed_tables" -> (() => graft.sources.Bucketed.ensureBucketedTables(spark, sfDir))
+    ).foreach { case (step, run) =>
+      try run() catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup FAILED: $step: ${e.getMessage}")
+      }
+    }
     // Noise control: this host shows sustained multi-minute external-load
     // windows that poison back-to-back trials of the SAME query (round 3:
     // a min-of-3 still reported a 12x outlier). So trials are INTERLEAVED

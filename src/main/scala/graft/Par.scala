@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scale-adaptive scan widening (optimization guide §2: derive
   * partitioning from the input, never a constant tuned for one scale).
@@ -29,21 +29,39 @@ object Par {
     * executors freed by the current job's tail). For the multi-output
     * commit paths here (history + watermark tables, data + sidecar) the
     * writes touch DISJOINT directories, so overlap changes no on-disk
-    * state transition order a reader can observe within one output. The
-    * first failure propagates; all tasks are joined before return.
+    * state transition order a reader can observe within one output.
+    *
+    * Each task's thread tags its jobs (`SparkContext.addJobTag`; the job
+    * group the caller set is inherited untouched). The first failure
+    * cancels the jobs the other tasks are running, so a sibling write
+    * stops instead of committing next to a failed one; a job a sibling
+    * starts after that cancel is not stopped. All tasks are joined before
+    * return, and the first error is thrown with every later one attached
+    * through `addSuppressed`.
     */
   def jobs(tasks: (() => Unit)*): Unit = {
     if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val threads = tasks.map { t =>
-      val th = new Thread(() =>
-        try t() catch { case e: Throwable => err.compareAndSet(null, e) })
+    val sc = SparkSession.active.sparkContext
+    val tags = tasks.indices.map(i => s"graft-par-${java.util.UUID.randomUUID()}-$i")
+    val first = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val later = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val threads = tasks.zip(tags).map { case (t, tag) =>
+      val th = new Thread(() => {
+        sc.addJobTag(tag)
+        try t() catch { case e: Throwable =>
+          if (first.compareAndSet(null, e)) tags.filter(_ != tag).foreach(sc.cancelJobsWithTag)
+          else later.add(e)
+        }
+      })
       th.setDaemon(true)
       th.start()
       th
     }
     threads.foreach(_.join())
-    val e = err.get()
-    if (e != null) throw e
+    val e = first.get()
+    if (e != null) {
+      later.forEach(s => if (s ne e) e.addSuppressed(s))
+      throw e
+    }
   }
 }

@@ -17,11 +17,13 @@ import org.apache.spark.sql.SparkSession
   * 9.7→5.1 s).
   *
   * Applied at most once per session, from [[Tables.t]] (the funnel every
-  * declared query's table load passes through) and the harness mains.
-  * A value the session ALREADY carries beyond Spark's default is
-  * respected — an operator who tuned the floor deliberately keeps their
-  * setting; `SPARK_GRAFT_MIN_PARTITION_SIZE` overrides the engine
-  * default, and `SPARK_GRAFT_TUNE=off` disables the hook entirely.
+  * declared query's table load passes through) and the harness mains, and
+  * logged (key, old value, new value) when it overrides. A value the
+  * session ALREADY carries beyond Spark's default is respected — an
+  * operator who tuned the floor deliberately keeps their setting. An
+  * explicit `1MB` cannot be told apart from the default and IS overridden;
+  * `SPARK_GRAFT_TUNE=off` keeps it (and disables the hook entirely).
+  * `SPARK_GRAFT_MIN_PARTITION_SIZE` overrides the engine default.
   */
 object Tune {
   private val MinPartitionSizeKey =
@@ -36,8 +38,11 @@ object Tune {
     if (sys.env.get("SPARK_GRAFT_TUNE").contains("off")) return
     if (!tuned.add(spark)) return
     val cur = spark.conf.getOption(MinPartitionSizeKey)
-    if (cur.forall(_.equalsIgnoreCase(SparkDefault)))
-      spark.conf.set(MinPartitionSizeKey,
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
+    if (cur.forall(_.equalsIgnoreCase(SparkDefault))) {
+      val floor = sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k")
+      spark.conf.set(MinPartitionSizeKey, floor)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        s"$MinPartitionSizeKey: ${cur.getOrElse(SparkDefault)} -> $floor")
+    }
   }
 }

@@ -6,10 +6,11 @@ import org.apache.spark.sql.functions._
 /** The `blockalign` stage as a DataFrame transformation
   * (`src/sra/blockalign.cpp:164-493` re-expressed relationally):
   *
-  *  - A3: prefilter hit detail rows grouped per (targetId, queryId) with the
-  *    diagonal already attached (our index carries the representative's first
-  *    k-mer position, collapsing the reference's J3 binary-search re-lookup
-  *    `blockalign.cpp:268-298` into the prefilter join);
+  *  - A3: the prefilter's hit groups, one per qualifying (targetId, queryId),
+  *    taken as they are, with the diagonal already attached (our index
+  *    carries the representative's first k-mer position, collapsing the
+  *    reference's J3 binary-search re-lookup `blockalign.cpp:268-298` into
+  *    the prefilter join);
   *  - J4: joins to fetch target and query sequences (target join shuffles on
   *    targetId — the big side at petabase scale; query side is explicitly
   *    broadcast-hinted, since RDD-backed query tables carry no stats);
@@ -39,7 +40,8 @@ object Align {
       qSeq: String, tSeq: String,
       dbId: Option[Long] = None, profile: Option[Array[Byte]] = None)
 
-  /** prefilter([dbId,] targetId, queryId, kmerPos, kmer, diag) x sequences
+  /** prefilter([dbId,] targetId, queryId, hits) — the hit groups of
+    * [[Prefilter.runWithDiag]], in any order within a group — x sequences
     * -> alignments([dbId,] queryId, targetId, bits, fident, eval, qStart,
     * qEnd, qLen, tStart, tEnd, tLen, backtrace, alnLen, mismatch, gapOpen,
     * raw), sorted by (queryId, eval asc, bits desc, tLen, [dbId,] targetId)
@@ -82,16 +84,12 @@ object Align {
       else Map(None -> knownDbResCount.getOrElse(
         targetSeqs.agg(coalesce(sum(col("seqLen")), lit(0L))).as[Long].head()))
 
-    val pairs = prefilter
-      .groupBy((db ++ Seq("targetId", "queryId")).map(col): _*)
-      .agg(collect_list(struct(col("kmerPos"), col("kmer"), col("diag"))).as("hits"))
-
     // absent keys become typed nulls only after both joins, so neither the
     // target shuffle nor the query broadcast carries them
     val prof = if (querySeqs.columns.contains("profile")) Seq("profile") else Nil
     def orNull(present: Seq[String], name: String, tpe: String) =
       if (present.nonEmpty) col(name) else lit(null).cast(tpe).as(name)
-    val withSeqs = pairs
+    val withSeqs = prefilter
       .join(targetSeqs.select(db.map(col) ++ Seq(col("seqId").as("targetId"),
         col("seq").as("tSeq")): _*), db :+ "targetId")
       .join(broadcast(querySeqs.select(Seq(col("seqId").as("queryId"),

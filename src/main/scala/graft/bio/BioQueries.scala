@@ -1,6 +1,8 @@
 package graft.bio
 
 import graft.{Q, Tables => T}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The bio pipeline's relational skeleton exercised on the driver's generic
@@ -17,11 +19,64 @@ object BioQueries {
   /** Whitespace is stripped before windowing (documents are word streams;
     * un-stripped, every 9-window crosses a space and the index is empty).
     */
-  private def docsAsSeqs(s: org.apache.spark.sql.SparkSession, d: String) =
+  private def docsAsSeqs(s: SparkSession, d: String) =
     T.documents(s, d).select(
       col("doc_id").as("seqId"),
       regexp_replace(col("text"), "\\s+", "").as("seq"))
       .withColumn("seqLen", length(col("seq")).cast("int"))
+
+  /** The document queries' prefilter: query docs (doc_id % 20 = 0)
+    * against the unique-k-mer index of all docs. Returns (docs as
+    * sequences, hit groups).
+    */
+  private def docGroups(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val seqs = docsAsSeqs(s, d)
+    val index = KmerIndex.buildWithPos(seqs, K, Alpha)
+    val qk = Prefilter.queryKmers(seqs.filter(col("seqId") % 20 === 0), K, Alpha)
+    (seqs, Prefilter.runWithDiag(qk, index))
+  }
+
+  /** Per prefilter hit group ([[Prefilter.runWithDiag]]): the pair, its
+    * hit count as `countName`, its best diagonal — the one with the most
+    * hits, ties -> smallest — and the longest run of identical characters
+    * along that diagonal (ties -> leftmost), with 1-based inclusive
+    * coordinates. q carries (query_id, qtext, qlen), t (target_id, ttext,
+    * tlen). The two ALIGNED overlap substrings are sliced once, then a
+    * codegen'd per-row byte scan (ops.TextAnalysis.LongestIdentityRun) —
+    * no explode (|pairs| x seqLen row blowup + two window shuffles), no
+    * interpreted higher-order fold (measured 3x slower than even the
+    * explode). Leftmost-maximal tie rule = strict > while scanning,
+    * matching the oracles' (alnlen DESC, q0) window.
+    */
+  private def bestDiagonalRuns(groups: DataFrame, q: DataFrame, t: DataFrame,
+      countName: String): DataFrame = {
+    val perDiag = groups
+      .select(col("queryId").as("query_id"), col("targetId").as("target_id"),
+        size(col("hits")).cast("bigint").as(countName),
+        explode(col("hits.diag")).as("diag"))
+      .groupBy(col("query_id"), col("target_id"), col(countName), col("diag"))
+      .agg(count(lit(1)).as("nd"))
+    val wd = Window.partitionBy(col("query_id"), col("target_id"))
+      .orderBy(col("nd").desc, col("diag"))
+    val bestDiag = perDiag.withColumn("rn", row_number().over(wd))
+      .filter(col("rn") === 1).select("query_id", "target_id", countName, "diag")
+    val lo = greatest(col("diag"), lit(0))
+    val hiEx = least(col("qlen"), col("tlen") + col("diag"))
+    val overlap = hiEx - lo
+    bestDiag.join(q, Seq("query_id")).join(t, Seq("target_id"))
+      .filter(lo < hiEx)
+      .withColumn("run", graft.ops.TextAnalysis.longestIdentityRun(
+        col("qtext").substr(lo + 1, overlap),
+        col("ttext").substr(lo - col("diag") + 1, overlap)))
+      .filter(col("run.len") > 0)
+      .withColumn("q0", lo + col("run.start"))
+      .select(col("query_id"), col("target_id"), col(countName), col("diag"),
+        col("run.len").cast("bigint").as("alnlen"),
+        (col("q0") + 1).as("qstart"),
+        (col("q0") + col("run.len")).as("qend"),
+        (col("q0") - col("diag") + 1).as("tstart"),
+        (col("q0") + col("run.len") - col("diag")).as("tend"))
+  }
 
   /** SQL fragment computing (doc_id, n_chars, pos, kmer) over letter-only
     * 9-windows — the DuckDB mirror of explodeKmers + KmerEncode.
@@ -77,16 +132,10 @@ object BioQueries {
     */
   val bioPrefilter = Q(
     "bio_prefilter",
-    (s, d) => {
-      val seqs = docsAsSeqs(s, d)
-      val index = KmerIndex.buildWithPos(seqs, K, Alpha)
-      val qk = Prefilter.queryKmers(seqs.filter(col("seqId") % 20 === 0), K, Alpha)
-      qk.join(index.select(col("kmer"), col("seqId").as("target_id")), Seq("kmer"))
-        .groupBy(col("queryId").as("query_id"), col("target_id"))
-        .agg(count(lit(1)).as("n_matches"))
-        .filter(col("n_matches") > Prefilter.RequiredKmerMatches)
-        .orderBy(col("query_id"), col("target_id"))
-    },
+    (s, d) => docGroups(s, d)._2
+      .select(col("queryId").as("query_id"), col("targetId").as("target_id"),
+        size(col("hits")).cast("bigint").as("n_matches"))
+      .orderBy(col("query_id"), col("target_id")),
     Some(s"""
       WITH $duckKmersCte,
       perdoc AS (
@@ -136,55 +185,12 @@ object BioQueries {
   val bioM8Relational = Q(
     "bio_m8_relational",
     (s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val seqs = docsAsSeqs(s, d)
-      val index = KmerIndex.buildWithPos(seqs, K, Alpha)
-      val qk = Prefilter.queryKmers(seqs.filter(col("seqId") % 20 === 0), K, Alpha)
-      val hits = qk
-        .join(index.select(col("kmer"), col("seqId").as("targetId"), col("tpos")),
-          Seq("kmer"))
-        .select(col("queryId").as("query_id"), col("targetId").as("target_id"),
-          (col("kmerPos") - col("tpos")).cast("int").as("diag"))
-      val gated = hits.groupBy(col("query_id"), col("target_id"))
-        .agg(count(lit(1)).as("n_kmers"))
-        .filter(col("n_kmers") > Prefilter.RequiredKmerMatches)
-      val dc = hits
-        .join(gated.select("query_id", "target_id"),
-          Seq("query_id", "target_id"), "left_semi")
-        .groupBy(col("query_id"), col("target_id"), col("diag"))
-        .agg(count(lit(1)).as("nd"))
-      val wd = Window.partitionBy(col("query_id"), col("target_id"))
-        .orderBy(col("nd").desc, col("diag"))
-      val bestDiag = dc.withColumn("rn", row_number().over(wd))
-        .filter(col("rn") === 1).select("query_id", "target_id", "diag")
+      val (seqs, groups) = docGroups(s, d)
       val q = seqs.select(col("seqId").as("query_id"), col("seq").as("qtext"),
         col("seqLen").as("qlen"))
       val t = seqs.select(col("seqId").as("target_id"), col("seq").as("ttext"),
         col("seqLen").as("tlen"))
-      val lo = greatest(col("diag"), lit(0))
-      val hiEx = least(col("qlen"), col("tlen") + col("diag"))
-      // longest identity run along the diagonal: slice the two ALIGNED
-      // overlap substrings once, then a codegen'd per-row byte scan
-      // (ops.TextAnalysis.LongestIdentityRun) — no explode (|pairs| x
-      // seqLen row blowup + two window shuffles), no interpreted
-      // higher-order fold (measured 3x slower than even the explode).
-      // Leftmost-maximal tie rule = strict > while scanning, matching the
-      // oracle's (alnlen DESC, q0) window.
-      val overlap = hiEx - lo
-      bestDiag.join(q, Seq("query_id")).join(t, Seq("target_id"))
-        .filter(lo < hiEx)
-        .withColumn("run", graft.ops.TextAnalysis.longestIdentityRun(
-          col("qtext").substr(lo + 1, overlap),
-          col("ttext").substr(lo - col("diag") + 1, overlap)))
-        .filter(col("run.len") > 0)
-        .withColumn("q0", lo + col("run.start"))
-        .join(gated, Seq("query_id", "target_id"))
-        .select(col("query_id"), col("target_id"), col("n_kmers"), col("diag"),
-          col("run.len").cast("bigint").as("alnlen"),
-          (col("q0") + 1).as("qstart"),
-          (col("q0") + col("run.len")).as("qend"),
-          (col("q0") - col("diag") + 1).as("tstart"),
-          (col("q0") + col("run.len") - col("diag")).as("tend"))
+      bestDiagonalRuns(groups, q, t, "n_kmers")
         .orderBy(col("query_id"), col("target_id"))
     },
     Some(s"""
@@ -316,115 +322,125 @@ object BioQueries {
     ords.map(o => m.alphabet(o)).mkString
   }
 
-  /** The profile path's RELATIONAL PREFIX, hash-checked: masked-consensus
-    * k-mers (exact seeding — the profile twin of `--exact-kmer-matching`,
-    * ref `Parameters.cpp:2255`) joined against the A1 argmax target index,
-    * count-gated (strict >, `comparekmertables.cpp`), with C10 diagonals.
-    * The oracle takes the masked consensus and the degapped member
-    * sequences as LITERALS and independently replays every relational
-    * stage in DuckDB: 9-windowing, base-20 positional encoding, X-window
-    * drop, the argmax index (longest target, ties -> smallest id, min-pos
-    * representative), the k-mer join, the match-count gate, and
-    * kmerPos - tpos diagonals. PSSM-specific stages (consensus extraction,
+  /** The profile queries' prefilter: the Cas7-11 profile's query table
+    * (exact seeding — the profile twin of `--exact-kmer-matching`, ref
+    * `Parameters.cpp:2255`) against the A1 argmax index of the degapped
+    * members. Returns (targets(seqId, header, seq, seqLen), hit groups).
+    */
+  private def profileGroups(s: SparkSession): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val profiles = Seq((0L, "cas711_profile", Profiles.fromAlignedSeqs(msaAligned)))
+      .toDF("seqId", "header", "profile")
+    val targets = msaAligned.zipWithIndex.map { case (row, i) =>
+      val seq = row.replace("-", "").replace(".", "").toUpperCase
+      (i.toLong, s"member$i", seq, seq.length)
+    }.toDF("seqId", "header", "seq", "seqLen")
+    val params = PetaSearch.Params()
+    val index = KmerIndex.buildWithPos(targets, params.k, params.mode.kmerAlphabet)
+    val qk = QueryTable.buildFromProfiles(s, profiles,
+      params.queryConfig.copy(exactKmerMatching = true))
+    (targets, Prefilter.runWithDiag(qk, index, params.requiredKmerMatches))
+  }
+
+  /** DuckDB mirror of [[profileGroups]]' hit rows: the masked consensus
+    * and the degapped members as LITERALS, then 9-windowing, base-20
+    * positional encoding, X-window drop, the argmax index, the k-mer join,
+    * kmerPos - tpos diagonals and the match-count gate. A WITH list ending
+    * in `ts` (target_id, seq, n_chars), `qs` (cons), `hits` (query_id,
+    * target_id, kmer, diag) and `gated` (query_id, target_id).
+    */
+  private lazy val duckProfileHitsCte: String = {
+    val ka = Matrices.KmerAlphabet
+    val k = KmerIndex.DefaultK
+    val tvals = msaAligned.zipWithIndex.map { case (row, i) =>
+      val seq = row.replace("-", "").replace(".", "").toUpperCase
+      s"($i, '$seq')"
+    }.mkString(",\n      ")
+    s"""
+    WITH tseq(target_id, seq) AS (VALUES
+      $tvals),
+    ts AS (
+      SELECT target_id, seq, CAST(length(seq) AS BIGINT) AS n_chars
+      FROM tseq),
+    tki AS (
+      SELECT target_id, n_chars, seq,
+             unnest(generate_series(1, n_chars - ${k - 1})) AS i
+      FROM ts WHERE n_chars >= $k),
+    tkm AS (
+      SELECT target_id, n_chars, i - 1 AS pos,
+             substr(seq, CAST(i AS INT), $k) AS s
+      FROM tki),
+    tenc AS (
+      SELECT target_id, n_chars, pos,
+             CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
+                  * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
+             MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
+      FROM tkm, generate_series(1, $k) AS j(j)
+      GROUP BY target_id, n_chars, pos, s),
+    tvalid AS (
+      SELECT target_id, n_chars, pos, kmer FROM tenc WHERE minp > 0),
+    perdoc AS (
+      SELECT kmer, target_id, n_chars, CAST(MIN(pos) AS INT) AS tpos
+      FROM tvalid GROUP BY 1, 2, 3),
+    idx AS (
+      SELECT kmer, target_id, tpos FROM (
+        SELECT kmer, target_id, tpos,
+               ROW_NUMBER() OVER (PARTITION BY kmer
+                                  ORDER BY n_chars DESC, target_id) AS rn
+        FROM perdoc) WHERE rn = 1),
+    qs AS (
+      SELECT '$profMaskedConsensus' AS cons),
+    qki AS (
+      SELECT cons,
+             unnest(generate_series(1,
+               CAST(length(cons) AS BIGINT) - ${k - 1})) AS i
+      FROM qs WHERE length(cons) >= $k),
+    qkm AS (
+      SELECT i - 1 AS kmer_pos, substr(cons, CAST(i AS INT), $k) AS s
+      FROM qki),
+    qenc AS (
+      SELECT kmer_pos,
+             CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
+                  * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
+             MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
+      FROM qkm, generate_series(1, $k) AS j(j)
+      GROUP BY kmer_pos, s),
+    qvalid AS (SELECT kmer_pos, kmer FROM qenc WHERE minp > 0),
+    hits AS (
+      SELECT CAST(0 AS BIGINT) AS query_id,
+             CAST(i.target_id AS BIGINT) AS target_id, v.kmer,
+             CAST(v.kmer_pos - i.tpos AS INT) AS diag
+      FROM qvalid v JOIN idx i USING (kmer)),
+    gated AS (
+      SELECT query_id, target_id FROM hits
+      GROUP BY 1, 2 HAVING COUNT(*) > ${Prefilter.RequiredKmerMatches})"""
+  }
+
+  /** The profile path's RELATIONAL PREFIX, hash-checked: per hit group of
+    * [[profileGroups]] (count-gated, strict >, `comparekmertables.cpp`, with
+    * C10 diagonals) its hit count, distinct k-mers and diagonal range. The
+    * oracle ([[duckProfileHitsCte]]) replays every relational stage in
+    * DuckDB from literals. PSSM-specific stages (consensus extraction,
     * tantan masking, lattice similar-k-mer expansion, profile alignment)
     * stay spec/REFDIFF-covered — with this row the profile path is
     * partially hash-checked instead of rows-only.
     */
   val bioProfilePrefilter = Q(
     "bio_profile_prefilter",
-    (s, _) => {
-      import s.implicits._
-      val prof = Profiles.fromAlignedSeqs(msaAligned)
-      val profiles = Seq((0L, "cas711_profile", prof))
-        .toDF("seqId", "header", "profile")
-      val targets = msaAligned.zipWithIndex.map { case (row, i) =>
-        val seq = row.replace("-", "").replace(".", "").toUpperCase
-        (i.toLong, s"member$i", seq, seq.length)
-      }.toSeq.toDF("seqId", "header", "seq", "seqLen")
-      val params = PetaSearch.Params()
-      val index = KmerIndex.buildWithPos(targets, params.k,
-        params.mode.kmerAlphabet)
-      val qk = QueryTable.buildFromProfiles(s, profiles,
-        params.queryConfig.copy(exactKmerMatching = true))
-      Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-        .groupBy(col("queryId").as("query_id"),
-          col("targetId").as("target_id"))
-        .agg(count(lit(1)).as("n_hits"),
-          countDistinct(col("kmer")).as("n_kmers"),
-          min(col("diag")).as("min_diag"), max(col("diag")).as("max_diag"))
-        .orderBy(col("target_id"))
-    },
-    Some {
-      val ka = Matrices.KmerAlphabet
-      val k = KmerIndex.DefaultK
-      val tvals = msaAligned.zipWithIndex.map { case (row, i) =>
-        val seq = row.replace("-", "").replace(".", "").toUpperCase
-        s"($i, '$seq')"
-      }.mkString(",\n        ")
-      s"""
-      WITH tseq(target_id, seq) AS (VALUES
-        $tvals),
-      ts AS (
-        SELECT target_id, seq, CAST(length(seq) AS BIGINT) AS n_chars
-        FROM tseq),
-      tki AS (
-        SELECT target_id, n_chars, seq,
-               unnest(generate_series(1, n_chars - ${k - 1})) AS i
-        FROM ts WHERE n_chars >= $k),
-      tkm AS (
-        SELECT target_id, n_chars, i - 1 AS pos,
-               substr(seq, CAST(i AS INT), $k) AS s
-        FROM tki),
-      tenc AS (
-        SELECT target_id, n_chars, pos,
-               CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
-                    * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
-               MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
-        FROM tkm, generate_series(1, $k) AS j(j)
-        GROUP BY target_id, n_chars, pos, s),
-      tvalid AS (
-        SELECT target_id, n_chars, pos, kmer FROM tenc WHERE minp > 0),
-      perdoc AS (
-        SELECT kmer, target_id, n_chars, CAST(MIN(pos) AS INT) AS tpos
-        FROM tvalid GROUP BY 1, 2, 3),
-      idx AS (
-        SELECT kmer, target_id, tpos FROM (
-          SELECT kmer, target_id, tpos,
-                 ROW_NUMBER() OVER (PARTITION BY kmer
-                                    ORDER BY n_chars DESC, target_id) AS rn
-          FROM perdoc) WHERE rn = 1),
-      qs AS (
-        SELECT '$profMaskedConsensus' AS cons),
-      qki AS (
-        SELECT cons,
-               unnest(generate_series(1,
-                 CAST(length(cons) AS BIGINT) - ${k - 1})) AS i
-        FROM qs WHERE length(cons) >= $k),
-      qkm AS (
-        SELECT i - 1 AS kmer_pos, substr(cons, CAST(i AS INT), $k) AS s
-        FROM qki),
-      qenc AS (
-        SELECT kmer_pos,
-               CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
-                    * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
-               MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
-        FROM qkm, generate_series(1, $k) AS j(j)
-        GROUP BY kmer_pos, s),
-      qvalid AS (SELECT kmer_pos, kmer FROM qenc WHERE minp > 0),
-      hits AS (
-        SELECT CAST(0 AS BIGINT) AS query_id,
-               CAST(i.target_id AS BIGINT) AS target_id, v.kmer,
-               CAST(v.kmer_pos - i.tpos AS INT) AS diag
-        FROM qvalid v JOIN idx i USING (kmer)),
-      gated AS (
-        SELECT query_id, target_id FROM hits
-        GROUP BY 1, 2 HAVING COUNT(*) > ${Prefilter.RequiredKmerMatches})
+    (s, _) => profileGroups(s)._2
+      .select(col("queryId").as("query_id"), col("targetId").as("target_id"),
+        size(col("hits")).cast("bigint").as("n_hits"),
+        size(array_distinct(col("hits.kmer"))).cast("bigint").as("n_kmers"),
+        array_min(col("hits.diag")).as("min_diag"),
+        array_max(col("hits.diag")).as("max_diag"))
+      .orderBy(col("target_id")),
+    Some(s"""
+      $duckProfileHitsCte
       SELECT h.query_id, h.target_id, CAST(COUNT(*) AS BIGINT) AS n_hits,
              CAST(COUNT(DISTINCT h.kmer) AS BIGINT) AS n_kmers,
              MIN(h.diag) AS min_diag, MAX(h.diag) AS max_diag
       FROM hits h JOIN gated g USING (query_id, target_id)
-      GROUP BY 1, 2 ORDER BY target_id"""
-    },
+      GROUP BY 1, 2 ORDER BY target_id"""),
     bench = false) // fixed-size fixture, like the other profile rows
 
   /** The profile path's relational slice EXTENDED through the ungapped
@@ -444,118 +460,15 @@ object BioQueries {
     "bio_profile_relational",
     (s, _) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val prof = Profiles.fromAlignedSeqs(msaAligned)
-      val profiles = Seq((0L, "cas711_profile", prof))
-        .toDF("seqId", "header", "profile")
-      val targets = msaAligned.zipWithIndex.map { case (row, i) =>
-        val seq = row.replace("-", "").replace(".", "").toUpperCase
-        (i.toLong, s"member$i", seq, seq.length)
-      }.toSeq.toDF("seqId", "header", "seq", "seqLen")
-      val params = PetaSearch.Params()
-      val index = KmerIndex.buildWithPos(targets, params.k,
-        params.mode.kmerAlphabet)
-      val qk = QueryTable.buildFromProfiles(s, profiles,
-        params.queryConfig.copy(exactKmerMatching = true))
-      val hits = Prefilter.runWithDiag(qk, index, params.requiredKmerMatches)
-        .select(col("queryId").as("query_id"),
-          col("targetId").as("target_id"), col("diag"))
-      val gated = hits.groupBy(col("query_id"), col("target_id"))
-        .agg(count(lit(1)).as("n_hits"))
-      val dc = hits.groupBy(col("query_id"), col("target_id"), col("diag"))
-        .agg(count(lit(1)).as("nd"))
-      val wd = Window.partitionBy(col("query_id"), col("target_id"))
-        .orderBy(col("nd").desc, col("diag"))
-      val bestDiag = dc.withColumn("rn", row_number().over(wd))
-        .filter(col("rn") === 1).select("query_id", "target_id", "diag")
+      val (targets, groups) = profileGroups(s)
       val cons = profMaskedConsensus
       val q = Seq((0L, cons, cons.length)).toDF("query_id", "qtext", "qlen")
       val t = targets.select(col("seqId").as("target_id"),
         col("seq").as("ttext"), col("seqLen").as("tlen"))
-      val lo = greatest(col("diag"), lit(0))
-      val hiEx = least(col("qlen"), col("tlen") + col("diag"))
-      val overlap = hiEx - lo
-      bestDiag.join(q, Seq("query_id")).join(t, Seq("target_id"))
-        .filter(lo < hiEx)
-        .withColumn("run", graft.ops.TextAnalysis.longestIdentityRun(
-          col("qtext").substr(lo + 1, overlap),
-          col("ttext").substr(lo - col("diag") + 1, overlap)))
-        .filter(col("run.len") > 0)
-        .withColumn("q0", lo + col("run.start"))
-        .join(gated, Seq("query_id", "target_id"))
-        .select(col("query_id"), col("target_id"), col("n_hits"),
-          col("diag"), col("run.len").cast("bigint").as("alnlen"),
-          (col("q0") + 1).as("qstart"),
-          (col("q0") + col("run.len")).as("qend"),
-          (col("q0") - col("diag") + 1).as("tstart"),
-          (col("q0") + col("run.len") - col("diag")).as("tend"))
-        .orderBy(col("target_id"))
+      bestDiagonalRuns(groups, q, t, "n_hits").orderBy(col("target_id"))
     },
-    Some {
-      val ka = Matrices.KmerAlphabet
-      val k = KmerIndex.DefaultK
-      val tvals = msaAligned.zipWithIndex.map { case (row, i) =>
-        val seq = row.replace("-", "").replace(".", "").toUpperCase
-        s"($i, '$seq')"
-      }.mkString(",\n        ")
-      s"""
-      WITH tseq(target_id, seq) AS (VALUES
-        $tvals),
-      ts AS (
-        SELECT target_id, seq, CAST(length(seq) AS BIGINT) AS n_chars
-        FROM tseq),
-      tki AS (
-        SELECT target_id, n_chars, seq,
-               unnest(generate_series(1, n_chars - ${k - 1})) AS i
-        FROM ts WHERE n_chars >= $k),
-      tkm AS (
-        SELECT target_id, n_chars, i - 1 AS pos,
-               substr(seq, CAST(i AS INT), $k) AS s
-        FROM tki),
-      tenc AS (
-        SELECT target_id, n_chars, pos,
-               CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
-                    * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
-               MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
-        FROM tkm, generate_series(1, $k) AS j(j)
-        GROUP BY target_id, n_chars, pos, s),
-      tvalid AS (
-        SELECT target_id, n_chars, pos, kmer FROM tenc WHERE minp > 0),
-      perdoc AS (
-        SELECT kmer, target_id, n_chars, CAST(MIN(pos) AS INT) AS tpos
-        FROM tvalid GROUP BY 1, 2, 3),
-      idx AS (
-        SELECT kmer, target_id, tpos FROM (
-          SELECT kmer, target_id, tpos,
-                 ROW_NUMBER() OVER (PARTITION BY kmer
-                                    ORDER BY n_chars DESC, target_id) AS rn
-          FROM perdoc) WHERE rn = 1),
-      qs AS (
-        SELECT '$profMaskedConsensus' AS cons),
-      qki AS (
-        SELECT cons,
-               unnest(generate_series(1,
-                 CAST(length(cons) AS BIGINT) - ${k - 1})) AS i
-        FROM qs WHERE length(cons) >= $k),
-      qkm AS (
-        SELECT i - 1 AS kmer_pos, substr(cons, CAST(i AS INT), $k) AS s
-        FROM qki),
-      qenc AS (
-        SELECT kmer_pos,
-               CAST(SUM((strpos('$ka', substr(s, CAST(j.j AS INT), 1)) - 1)
-                    * POWER(${ka.length}, j.j - 1)) AS BIGINT) AS kmer,
-               MIN(strpos('$ka', substr(s, CAST(j.j AS INT), 1))) AS minp
-        FROM qkm, generate_series(1, $k) AS j(j)
-        GROUP BY kmer_pos, s),
-      qvalid AS (SELECT kmer_pos, kmer FROM qenc WHERE minp > 0),
-      hits AS (
-        SELECT CAST(0 AS BIGINT) AS query_id,
-               CAST(i.target_id AS BIGINT) AS target_id, v.kmer,
-               CAST(v.kmer_pos - i.tpos AS INT) AS diag
-        FROM qvalid v JOIN idx i USING (kmer)),
-      gated AS (
-        SELECT query_id, target_id FROM hits
-        GROUP BY 1, 2 HAVING COUNT(*) > ${Prefilter.RequiredKmerMatches}),
+    Some(s"""
+      $duckProfileHitsCte,
       cnt AS (
         SELECT h.query_id, h.target_id, CAST(COUNT(*) AS BIGINT) AS n_hits
         FROM hits h JOIN gated g USING (query_id, target_id)
@@ -610,8 +523,7 @@ object BioQueries {
              b.q0 + 1 AS qstart, b.q1 + 1 AS qend,
              b.q0 - b.diag + 1 AS tstart, b.q1 - b.diag + 1 AS tend
       FROM best b JOIN cnt c USING (query_id, target_id)
-      ORDER BY target_id"""
-    },
+      ORDER BY target_id"""),
     bench = false) // fixed-size fixture, like the other profile rows
 
   def all: Seq[Q] = Seq(bioKmerIndex, bioPrefilter, bioM8Relational,

@@ -80,12 +80,4 @@ object Maintenance {
   def compactAnnIndex(spark: SparkSession, dbPath: String): Unit =
     compactParquetDir(spark, s"${dbPath.stripSuffix("/")}/vectors",
       Seq("label"))
-
-  /** Compact an IVF-PQ index's codes table (label-partitioned, like
-    * [[compactAnnIndex]]). Codebooks, centroids, and the high-watermark
-    * are untouched.
-    */
-  def compactPqIndex(spark: SparkSession, dbPath: String): Unit =
-    compactParquetDir(spark, s"${dbPath.stripSuffix("/")}/codes",
-      Seq("label"))
 }

@@ -2088,14 +2088,6 @@ object Versioned {
       table: String, keyCols: Seq[String]): Int =
     mergeMorImpl(upserts, deleteKeys, table, keyCols, None).get
 
-  /** Merge-on-read UPSERT: [[mergeMor]] with no extra deletes — new rows
-    * land, the keys' older rows mask. The MOR twin of [[upsert]].
-    */
-  def upsertMor(updates: DataFrame, table: String, keyCol: String): Int = {
-    import org.apache.spark.sql.functions._
-    mergeMor(updates, updates.select(col(keyCol)), table, keyCol)
-  }
-
   /** Exactly-once micro-batch [[mergeMor]] (the streaming CDC face — see
     * `EventsStream.cdcMorSink`): the batch id commits as a manifest txn
     * row in the SAME rename as the data and delete files, so a

@@ -139,14 +139,6 @@ object DedupStream {
   private val labelsBucketCache =
     new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
-  /** Drop the cached bucket-count pin for a labels table — call after
-    * deleting/recreating the table out-of-band in the same JVM (the
-    * meta-existence check in [[processClusterBatch]] covers the common
-    * delete-everything case automatically).
-    */
-  def invalidateLabelsMeta(labelsPath: String): Unit =
-    labelsBucketCache.remove(labelsPath)
-
   /** Read-or-create the pinned bucket count of a hash-bucketed on-disk
     * table (the cluster labels table, the curate hash table): nBuckets is
     * part of the LAYOUT — a later run with a different value would probe
