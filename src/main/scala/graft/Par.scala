@@ -26,10 +26,9 @@ object Par {
   /** Run INDEPENDENT Spark actions concurrently from the driver (guide
     * §2.6: actions are only sequential because driver code calls them
     * sequentially — overlapping lets the next job's tasks back-fill
-    * executors freed by the current job's tail). For the multi-output
-    * commit paths here (history + watermark tables, data + sidecar) the
-    * writes touch DISJOINT directories, so overlap changes no on-disk
-    * state transition order a reader can observe within one output.
+    * executors freed by the current job's tail). A persisted index's
+    * outputs overlap only while they stage (`sources.IndexCommit`); its
+    * publish and pin run afterwards on the driver, in order.
     *
     * Each task's thread tags its jobs (`SparkContext.addJobTag`; the job
     * group the caller set is inherited untouched). The first failure

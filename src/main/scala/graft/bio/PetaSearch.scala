@@ -3,7 +3,7 @@ package graft.bio
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.ManifestIO
+import graft.sources.{IndexCommit, ManifestIO}
 
 /** End-to-end search driver — the `petasearch` / `easy-petasearch` workflow
   * (`src/workflow/petasearch.cpp`, `data/petasearch.sh`) collapsed into one
@@ -290,29 +290,37 @@ object PetaSearch {
     *    driver. [[searchIndexed]] takes the evaluer's residue total from
     *    it; [[appendToTargetDb]] adds a batch's totals to it. A DB without
     *    `meta/` still works: both fall back to scanning `sequences/`.
+    * Each directory is committed through `sources.IndexCommit`:
+    * `sequences/`, then `kmers/`, then `meta/` as the pin.
     */
   def buildTargetDb(spark: SparkSession, targetFasta: String, dbPath: String,
       params: Params = Params()): Unit = {
-    val seqs = Fasta.read(spark, targetFasta)
-    seqs.write.mode("overwrite").parquet(s"$dbPath/sequences")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(s"$dbPath/sequences",
+      IndexCommit.Replace,
+      Fasta.read(spark, targetFasta).write.mode("overwrite").parquet(_))))
     val persisted = spark.read.parquet(s"$dbPath/sequences")
-    KmerIndex.write(
+    // totals computed once at build time so query-time never rescans the
+    // corpus
+    commitKmers(spark, dbPath,
       KmerIndex.buildWithPos(persisted, params.k, params.mode.kmerAlphabet),
-      s"$dbPath/kmers")
-    // computed once at build time so query-time never rescans the corpus
-    writeDbMeta(spark, dbPath, totals(persisted))
+      totals(persisted))
   }
+
+  /** `kmers/` through a whole-directory swap, then the (dbResCount, nSeqs)
+    * pin.
+    */
+  private def commitKmers(spark: SparkSession, dbPath: String,
+      kmers: DataFrame, t: (Long, Long)): Unit =
+    IndexCommit.commit(spark,
+      Seq(IndexCommit.Output(s"$dbPath/kmers", IndexCommit.Replace,
+        KmerIndex.write(kmers, _))),
+      pin = Some(s"$dbPath/meta" -> Seq("dbResCount" -> t._1, "nSeqs" -> t._2)))
 
   /** (residues, sequences) of a sequence table; 0 residues when empty. */
   private def totals(seqs: DataFrame): (Long, Long) = {
     val r = seqs.agg(coalesce(sum(col("seqLen")), lit(0L)), count(lit(1))).head()
     (r.getLong(0), r.getLong(1))
   }
-
-  private def writeDbMeta(spark: SparkSession, dbPath: String,
-      t: (Long, Long)): Unit =
-    ManifestIO.writeMetaDir(spark.sparkContext.hadoopConfiguration,
-      s"$dbPath/meta", Seq("dbResCount" -> t._1, "nSeqs" -> t._2))
 
   /** The DB's `meta/` totals, None for a DB built without `meta/`. */
   private def readDbMeta(spark: SparkSession, dbPath: String): Option[(Long, Long)] =
@@ -333,9 +341,17 @@ object PetaSearch {
     * this is the difference between an O(new batch) nightly ingest and an
     * O(corpus) re-extraction — the reference has no equivalent
     * (createkmertable always rebuilds its table whole).
+    *
+    * The merged `kmers/` and the new totals commit like a build's, but the
+    * append is NOT idempotent: the batch lands in `sequences/` before that
+    * commit, so a crash before the pin leaves stale totals, and rerunning
+    * the append adds the batch to `sequences/` a second time under new
+    * ids. Making it idempotent is ROADMAP item 2.
     */
   def appendToTargetDb(spark: SparkSession, targetFasta: String,
       dbPath: String, params: Params = Params()): Unit = {
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration,
+      Seq("sequences", "kmers", "meta").map(d => s"$dbPath/$d"))
     val existing = spark.read.parquet(s"$dbPath/sequences")
     // coalesce: an empty existing table yields a null max (getLong would NPE)
     val offset = existing
@@ -353,37 +369,8 @@ object PetaSearch {
       params.mode.kmerAlphabet)
     val merged = KmerIndex.representatives(
       spark.read.parquet(s"$dbPath/kmers").unionByName(newIdx))
-    // stage-and-swap: parquet can't overwrite a path it is reading
-    KmerIndex.write(merged, s"$dbPath/kmers_staging")
-    swapIn(spark, s"$dbPath/kmers_staging", s"$dbPath/kmers")
     val (batchRes, batchN) = totals(appended)
-    writeDbMeta(spark, dbPath, (oldRes + batchRes, oldN + batchN))
-  }
-
-  /** Stage-and-swap: the live directory is renamed aside before the staged
-    * one moves in, so there is no window where `dst` is missing with the
-    * only copy in staging — a crash leaves either the old index or the new
-    * one (plus a stale `_old` that the next swap clears). Renames are
-    * atomic on HDFS-like filesystems; delete-then-rename was not.
-    *
-    * The append around it is NOT crash-safe: the batch is already in
-    * `sequences/` when the swap runs, and `meta/` is written after it, so
-    * a crash before the meta write leaves stale totals, and rerunning the
-    * append appends the batch to `sequences/` a second time under new ids.
-    * Making the append idempotent is open item 3 in ROADMAP.md.
-    */
-  private def swapIn(spark: SparkSession, staging: String, dst: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dstPath = new org.apache.hadoop.fs.Path(dst)
-    val oldPath = new org.apache.hadoop.fs.Path(dst + "_old")
-    val fs = dstPath.getFileSystem(conf)
-    fs.delete(oldPath, true) // stale leftover from an interrupted swap
-    if (fs.exists(dstPath))
-      require(fs.rename(dstPath, oldPath),
-        s"failed to move $dst aside to $oldPath")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), dstPath),
-      s"failed to swap $staging into $dst")
-    fs.delete(oldPath, true)
+    commitKmers(spark, dbPath, merged, (oldRes + batchRes, oldN + batchN))
   }
 
   /** Query a persisted target DB (the reference's `petasearch` against

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.IndexCommit
 
 /** Deduplication operators for large text corpora — the petasearch
   * unique-k-mer skeleton (SURVEY A1/F1/J1/A2) generalized to documents.
@@ -349,30 +350,13 @@ object Dedup {
     * incremental curation O(batch) instead of re-shingling the corpus.
     */
   def buildDedupIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String, shingleSize: Int = 2, numHashes: Int = 8): Unit = {
-    minhashSignatures(shingles(df, idCol, textCol, shingleSize), numHashes)
-      .write.mode("overwrite").parquet(s"$path/signatures")
-    val spark = df.sparkSession
-    graft.sources.ManifestIO.writeMetaDir(
-      spark.sparkContext.hadoopConfiguration, s"$path/meta",
-      Seq("shingle_size" -> shingleSize, "num_hashes" -> numHashes))
-    // a rebuild may change the pinned params — drop the cached copy, and
-    // drop any streaming replay high-watermark left by a previous stream
-    // (a fresh query restarts batchIds at 0; a stale marker would make
-    // its early batches look already-committed and skip their appends)
-    metaCache.remove(path)
-    StreamCommitMarker.clear(spark, path)
-  }
-
-  /** Per-JVM cache of each index's pinned (shingle_size, num_hashes):
-    * meta is immutable between [[buildDedupIndex]] calls (which
-    * invalidate), so streaming ingest stops paying a parquet head() per
-    * micro-batch. An index rebuilt WITH DIFFERENT PARAMS by another JVM
-    * mid-stream would be read stale here — but that scenario corrupts the
-    * signature table itself long before the cache matters.
-    */
-  private val metaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
+      path: String, shingleSize: Int = 2, numHashes: Int = 8): Unit =
+    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
+      s"$path/signatures", IndexCommit.Replace,
+      minhashSignatures(shingles(df, idCol, textCol, shingleSize), numHashes)
+        .write.mode("overwrite").parquet(_))),
+      pin = Some(s"$path/meta" ->
+        Seq("shingle_size" -> shingleSize, "num_hashes" -> numHashes)))
 
   /** Max distinct (band, bucket) keys broadcast to prune the stored side
     * of a dedup-index search/append. The design case is an incremental
@@ -420,7 +404,11 @@ object Dedup {
       path: String, rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = DefaultMaxBucket,
       maxBroadcastKeys: Long = DefaultMaxBroadcastKeys): DataFrame = {
-    val spark = newDocs.sparkSession
+    // as a stream batch, first drop the signature files an earlier,
+    // unpinned attempt added: the pairs then see the pre-batch index
+    val conf = newDocs.sparkSession.sparkContext.hadoopConfiguration
+    IndexCommit.recover(conf, Seq(s"$path/signatures"),
+      IndexCommit.streamBatch.map(_ => s"$path/meta"))
     val (newSigs, numHashes) = sigsForIndex(newDocs, idCol, textCol, path)
     val cached = newSigs.cache()
     // count() pins the cache AND supplies the prune-strategy bound in one
@@ -429,7 +417,9 @@ object Dedup {
       maxBucket,
       touchedFits(cached.count(), numHashes, rowsPerBand, maxBroadcastKeys))
       .localCheckpoint() // eager: snapshot pairs BEFORE the append lands
-    cached.write.mode("append").parquet(s"$path/signatures")
+    IndexCommit.commit(newDocs.sparkSession, Seq(IndexCommit.Output(
+      s"$path/signatures", IndexCommit.Add, cached.write.parquet(_))),
+      IndexCommit.batchPin(conf, s"$path/meta"))
     cached.unpersist()
     pairs
   }
@@ -466,18 +456,17 @@ object Dedup {
         rowsPerBand, maxBroadcastKeys), excludeProbeFromStored)
   }
 
-  /** Batch signatures under a stored index's pinned params (read once per
-    * JVM per path — see [[metaCache]]).
+  /** Batch signatures under a stored index's pinned params (the pin is
+    * read on the driver, no Spark job).
     */
   private def sigsForIndex(docs: DataFrame, idCol: String, textCol: String,
       path: String): (DataFrame, Int) = {
-    val (shingleSize, numHashes) = metaCache.computeIfAbsent(path, { p =>
-      val meta = graft.sources.ManifestIO.readFirstRecord(
-        docs.sparkSession.sparkContext.hadoopConfiguration, s"$p/meta")
-        .getOrElse(throw new IllegalStateException(
-          s"dedup index meta at $p/meta is unreadable or empty"))
+    val meta = graft.sources.ManifestIO.readFirstRecord(
+      docs.sparkSession.sparkContext.hadoopConfiguration, s"$path/meta")
+      .getOrElse(throw new IllegalStateException(
+        s"dedup index meta at $path/meta is unreadable or empty"))
+    val (shingleSize, numHashes) =
       (meta.getInteger("shingle_size", 0), meta.getInteger("num_hashes", 0))
-    })
     (minhashSignatures(
       shingles(docs, idCol, textCol, shingleSize), numHashes), numHashes)
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.sources.IndexCommit
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -11,14 +12,9 @@ import org.apache.spark.sql.functions.col
   * opens before it reads a row. Compaction is the standard counterpart
   * maintenance pass (every LSM/lakehouse has one): rewrite the
   * accumulated directory into few large files, content-identical, during
-  * a quiet window.
-  *
-  * Single-writer contract, like every index mutation here: run compaction
-  * while no stream is appending to the same index. The swap is
-  * rename-based (write to a temp sibling, then two renames), so readers
-  * see either the old or the new layout; a crash between the renames
-  * leaves the old data intact under `<dir>__old` for manual recovery —
-  * nothing is deleted until the new layout is in place.
+  * a quiet window. The rewrite is an [[IndexCommit]] `Replace` (readers
+  * see the old or the new layout, and a crash leaves one of them), under
+  * its single-writer contract: no stream appends to the index meanwhile.
   */
 object Maintenance {
 
@@ -30,54 +26,45 @@ object Maintenance {
     * change.
     */
   def compactParquetDir(spark: SparkSession, dir: String,
-      partitionCols: Seq[String], numFiles: Int = 32): Unit = {
-    val base = dir.stripSuffix("/")
-    val src = spark.read.parquet(base)
-    val routed =
-      if (partitionCols.isEmpty) src.repartition(numFiles)
-      else src.repartition(partitionCols.map(col): _*)
-    val tmp = s"${base}__compact_tmp"
-    val w = routed.write.mode("overwrite")
-    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-      .parquet(tmp)
-    swapDir(spark, base, tmp)
-  }
+      partitionCols: Seq[String], numFiles: Int = 32): Unit =
+    compact(spark, dir, partitionCols, numFiles, None)
 
-  /** Rename-based directory swap: stage `target` aside, move `tmp` into
-    * its place, then delete the staged copy. Readers see the old or the
-    * new directory, never a mix; a crash between the renames leaves the
-    * old data under `<target>__old`.
+  /** With `pin`, files of a stream batch that never pinned are dropped
+    * first, so compaction cannot fold them in under a name its replay
+    * would not find.
     */
-  private[graft] def swapParquetDir(spark: SparkSession, target: String,
-      tmp: String): Unit = swapDir(spark, target, tmp)
-
-  private[ops] def swapDir(spark: SparkSession, target: String,
-      tmp: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(target)
-    val t = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"${target}__old")
-    val fs = p.getFileSystem(conf)
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(p, old), s"could not stage $target aside")
-    require(fs.rename(t, p), s"could not move new layout into $target")
-    fs.delete(old, true)
+  private def compact(spark: SparkSession, dir: String,
+      partitionCols: Seq[String], numFiles: Int, pin: Option[String]): Unit = {
+    val base = dir.stripSuffix("/")
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration, Seq(base), pin)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(base, IndexCommit.Replace,
+      { stage =>
+        val src = spark.read.parquet(base)
+        val routed =
+          if (partitionCols.isEmpty) src.repartition(numFiles)
+          else src.repartition(partitionCols.map(col): _*)
+        val w = routed.write.mode("overwrite")
+        (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+          .parquet(stage)
+      })))
   }
 
-  /** Compact a dedup index's signature table (flat layout). The pinned
-    * meta and the streaming high-watermark are untouched: replay
-    * semantics and signature params survive compaction.
+  /** Compact a dedup index's signature table (flat layout). The pin and
+    * its stream high-watermark are untouched: replay semantics and
+    * signature params survive compaction.
     */
   def compactDedupIndex(spark: SparkSession, indexPath: String,
-      numFiles: Int = 32): Unit =
-    compactParquetDir(spark, s"${indexPath.stripSuffix("/")}/signatures",
-      Seq.empty, numFiles)
+      numFiles: Int = 32): Unit = {
+    val base = indexPath.stripSuffix("/")
+    compact(spark, s"$base/signatures", Seq.empty, numFiles, Some(s"$base/meta"))
+  }
 
   /** Compact an IVF ANN index's vector table: one file per label
     * partition, so a probe's DPP-pruned scan opens exactly as many files
-    * as clusters probed. Centroids and the high-watermark are untouched.
+    * as clusters probed. Centroids and the pin are untouched.
     */
-  def compactAnnIndex(spark: SparkSession, dbPath: String): Unit =
-    compactParquetDir(spark, s"${dbPath.stripSuffix("/")}/vectors",
-      Seq("label"))
+  def compactAnnIndex(spark: SparkSession, dbPath: String): Unit = {
+    val base = dbPath.stripSuffix("/")
+    compact(spark, s"$base/vectors", Seq("label"), 32, Some(s"$base/meta"))
+  }
 }

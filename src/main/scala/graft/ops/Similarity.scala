@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.IndexCommit
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -376,7 +377,9 @@ object Similarity {
   }
 
   /** Persist an IVF index: k-means labels + corpus PARTITIONED BY label
-    * (probing then prunes whole directories at scan time) + centroid table.
+    * (probing then prunes whole directories at scan time) + centroid table
+    * + the pin (`meta`, n_clusters). Both artifacts derive from the
+    * materialized assignment and stage concurrently.
     */
   def buildAnnIndex(corpus: DataFrame, dbPath: String, nClusters: Int,
       iters: Int = 5): Unit = {
@@ -384,18 +387,12 @@ object Similarity {
     try {
       labels.count()
       val labeled = corpus.join(labels, Seq("vec_id"))
-      // both artifacts derive from the materialized assignment and land
-      // in disjoint directories — overlap the writes (guide §2.6); the
-      // old path serialized them behind a read-back of the vectors table
-      // it had just written
-      graft.Par.jobs(
-        () => labeled.write.mode("overwrite").partitionBy("label")
-          .parquet(s"$dbPath/vectors"),
-        () => centroids(labeled, "label")
-          .write.mode("overwrite").parquet(s"$dbPath/centroids"))
-      // rebuild invalidates any streaming replay marker (see the scaladoc
-      // on StreamCommitMarker — stale markers silently drop fresh batches)
-      StreamCommitMarker.clear(corpus.sparkSession, dbPath)
+      IndexCommit.commit(corpus.sparkSession, Seq(
+        IndexCommit.Output(s"$dbPath/vectors", IndexCommit.Replace,
+          labeled.write.mode("overwrite").partitionBy("label").parquet(_)),
+        IndexCommit.Output(s"$dbPath/centroids", IndexCommit.Replace,
+          centroids(labeled, "label").write.mode("overwrite").parquet(_))),
+        pin = Some(s"$dbPath/meta" -> Seq("n_clusters" -> nClusters)))
     } finally labels.unpersist()
   }
 
@@ -409,29 +406,28 @@ object Similarity {
     * because the stored centroids are already near a local optimum.
     *
     * Rewrites vectors (bucket-routed: one file per label — a compaction
-    * for free) and centroids via the rename-swap used by
-    * `Maintenance.compactParquetDir`, then clears the streaming replay
-    * marker (relabeling is a rebuild event: a fresh stream's batch 0 must
-    * not be mistaken for a replay). Single-writer: run in a quiet window.
+    * for free) and centroids, then re-pins without a stream watermark
+    * (relabeling is a rebuild event: a fresh stream's batch 0 must not be
+    * mistaken for a replay). Single-writer: run in a quiet window.
     */
   def rebalanceAnnIndex(spark: org.apache.spark.sql.SparkSession,
       dbPath: String, iters: Int = 2): Unit = {
     val base = dbPath.stripSuffix("/")
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration,
+      Seq(s"$base/vectors", s"$base/centroids", s"$base/meta"))
     val c = spark.read.parquet(s"$base/vectors")
       .select(col("vec_id"), col("embedding"),
         norm(col("embedding")).as("vn"))
       .localCheckpoint()
     val cents0 = spark.read.parquet(s"$base/centroids").localCheckpoint()
-    val relabeled = lloyd(c, cents0, iters)
-    val vt = s"$base/vectors__rebal_tmp"
-    val ct = s"$base/centroids__rebal_tmp"
-    relabeled.repartition(col("label"))
-      .write.mode("overwrite").partitionBy("label").parquet(vt)
-    centroids(spark.read.parquet(vt), "label")
-      .write.mode("overwrite").parquet(ct)
-    Maintenance.swapDir(spark, s"$base/vectors", vt)
-    Maintenance.swapDir(spark, s"$base/centroids", ct)
-    StreamCommitMarker.clear(spark, base)
+    val relabeled = lloyd(c, cents0, iters).localCheckpoint()
+    IndexCommit.commit(spark, Seq(
+      IndexCommit.Output(s"$base/vectors", IndexCommit.Replace,
+        relabeled.repartition(col("label"))
+          .write.mode("overwrite").partitionBy("label").parquet(_)),
+      IndexCommit.Output(s"$base/centroids", IndexCommit.Replace,
+        centroids(relabeled, "label").write.mode("overwrite").parquet(_))),
+      pin = Some(s"$base/meta" -> Seq("n_clusters" -> cents0.count().toInt)))
   }
 
   /** The top-`n` nearest centroids per query row by cosine (broadcast —
@@ -475,9 +471,11 @@ object Similarity {
   def appendToAnnIndex(corpus: DataFrame, dbPath: String): Unit = {
     val spark = corpus.sparkSession
     val cents = spark.read.parquet(s"$dbPath/centroids")
-    assignToStoredCentroids(corpus, cents)
-      .write.mode("append").partitionBy("label")
-      .parquet(s"$dbPath/vectors")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(s"$dbPath/vectors",
+      IndexCommit.Add, assignToStoredCentroids(corpus, cents)
+        .write.partitionBy("label").parquet(_))),
+      IndexCommit.batchPin(spark.sparkContext.hadoopConfiguration,
+        s"$dbPath/meta"))
   }
 
   /** Query a persisted IVF index: probe the stored centroids, scan ONLY the
@@ -526,26 +524,26 @@ object Similarity {
     // assignment pass over the corpus. (vec_id, label) rows are ~16 bytes.
     val labels = kmeans(corpus, nClusters, iters).cache()
     try {
-      val spark = corpus.sparkSession
       // the coarse k-means and the PQ codebook training are independent
       // passes over the same corpus — overlap them (guide §2.6), then
-      // overlap the two independent artifact writes that consume them
+      // stage the three artifacts that consume them concurrently
+      var books: DataFrame = null
       graft.Par.jobs(
         () => labels.count(), // materialize the cached coarse assignment
-        () => pqTrain(corpus, dim, nSub, pqK, iters)
-          .write.mode("overwrite").parquet(s"$dbPath/codebooks"))
+        () => books = pqTrain(corpus, dim, nSub, pqK, iters))
       val labeled = corpus.join(labels, Seq("vec_id"))
-      graft.Par.jobs(
-        () => pqEncode(corpus, spark.read.parquet(s"$dbPath/codebooks"),
-          dim, nSub)
+      def out(dir: String, w: String => Unit) =
+        IndexCommit.Output(s"$dbPath/$dir", IndexCommit.Replace, w)
+      IndexCommit.commit(corpus.sparkSession, Seq(
+        out("codes", pqEncode(corpus, books, dim, nSub)
           .join(labels, Seq("vec_id"))
-          .write.mode("overwrite").partitionBy("label")
-          .parquet(s"$dbPath/codes"),
+          .write.mode("overwrite").partitionBy("label").parquet(_)),
+        out("codebooks", books.write.mode("overwrite").parquet(_)),
         // coarse centroids from the raw vectors (codes can't reconstruct
         // them)
-        () => centroids(labeled, "label")
-          .write.mode("overwrite").parquet(s"$dbPath/centroids"))
-      StreamCommitMarker.clear(spark, dbPath)
+        out("centroids", centroids(labeled, "label")
+          .write.mode("overwrite").parquet(_))),
+        pin = Some(s"$dbPath/meta" -> Seq("n_clusters" -> nClusters)))
     } finally labels.unpersist()
   }
 
@@ -563,10 +561,12 @@ object Similarity {
     val books = spark.read.parquet(s"$dbPath/codebooks")
     val assigned = assignToStoredCentroids(corpus, cents)
       .select(col("vec_id"), col("label"))
-    pqEncode(corpus, books, dim, nSub)
-      .join(assigned, Seq("vec_id"))
-      .write.mode("append").partitionBy("label")
-      .parquet(s"$dbPath/codes")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(s"$dbPath/codes",
+      IndexCommit.Add, pqEncode(corpus, books, dim, nSub)
+        .join(assigned, Seq("vec_id"))
+        .write.partitionBy("label").parquet(_))),
+      IndexCommit.batchPin(spark.sparkContext.hadoopConfiguration,
+        s"$dbPath/meta"))
   }
 
   /** Query a persisted IVF-PQ index: probe the stored coarse centroids,
@@ -1107,21 +1107,16 @@ object Similarity {
     * smaller scan artifact the rpTopK scaladoc promises) plus the raw
     * vectors (`vectors`, the rerank side) and a param-pinning meta row.
     * Same single-writer frozen-artifact contract as the ANN/PQ builders.
+    * Build and append publish vectors before proj, so every candidate
+    * the projected scan returns can be reranked.
     */
   def buildRpIndex(corpus: DataFrame, dbPath: String, dProj: Int,
       dims: Int = 64): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     require(dProj >= 1 && dProj <= dims,
       s"dProj must be in [1, $dims], got $dProj")
-    corpus.select(col("vec_id"),
-        rpProject(col("embedding"), dProj, dims).as("pv"))
-      .withColumn("pn", norm(col("pv")))
-      .write.mode("overwrite").parquet(s"$dbPath/proj")
-    corpus.select(col("vec_id"), col("embedding"))
-      .write.mode("overwrite").parquet(s"$dbPath/vectors")
-    Seq((dProj, dims)).toDF("d_proj", "dims")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dbPath/meta")
+    IndexCommit.commit(corpus.sparkSession,
+      rpOutputs(corpus, dbPath, dProj, dims, IndexCommit.Replace),
+      pin = Some(s"$dbPath/meta" -> Seq("d_proj" -> dProj, "dims" -> dims)))
   }
 
   /** O(batch) append: project the batch through the PINNED matrix params
@@ -1130,14 +1125,20 @@ object Similarity {
   def appendToRpIndex(corpus: DataFrame, dbPath: String): Unit = {
     val spark = corpus.sparkSession
     val m = spark.read.parquet(s"$dbPath/meta").head()
-    val (dProj, dims) = (m.getAs[Int]("d_proj"), m.getAs[Int]("dims"))
-    corpus.select(col("vec_id"),
-        rpProject(col("embedding"), dProj, dims).as("pv"))
-      .withColumn("pn", norm(col("pv")))
-      .write.mode("append").parquet(s"$dbPath/proj")
-    corpus.select(col("vec_id"), col("embedding"))
-      .write.mode("append").parquet(s"$dbPath/vectors")
+    IndexCommit.commit(spark, rpOutputs(corpus, dbPath, m.getAs[Int]("d_proj"),
+      m.getAs[Int]("dims"), IndexCommit.Add))
   }
+
+  private def rpOutputs(corpus: DataFrame, dbPath: String, dProj: Int,
+      dims: Int, how: IndexCommit.Publish): Seq[IndexCommit.Output] = Seq(
+    IndexCommit.Output(s"$dbPath/vectors", how,
+      corpus.select(col("vec_id"), col("embedding"))
+        .write.mode("overwrite").parquet(_)),
+    IndexCommit.Output(s"$dbPath/proj", how,
+      corpus.select(col("vec_id"),
+          rpProject(col("embedding"), dProj, dims).as("pv"))
+        .withColumn("pn", norm(col("pv")))
+        .write.mode("overwrite").parquet(_)))
 
   /** Search the stored RP index: the approximate scan reads ONLY the
     * narrow projected table; raw vectors are touched for the |Q|·rerank

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.sources.IndexCommit
 
 /** Text-analysis operators for corpus curation: language ID, quality
   * scoring, token counting, fingerprinting. All codegen'd built-ins — no
@@ -859,33 +860,32 @@ object TextAnalysis {
     * rows; readers aggregate — at most nBuckets distinct keys, so the
     * read-side fold is O(buckets) regardless of append count) and
     * `<path>/meta` pins (n_buckets, alpha) the way the dedup index pins
-    * its shingle params. Rebuild clears any streaming replay marker.
+    * its shingle params.
     */
   def buildDsirIndex(df: DataFrame, idCol: String, textCol: String,
       isTarget: Column, path: String, nBuckets: Int = 256,
-      alpha: Double = 1.0): Unit = {
-    val spark = df.sparkSession
-    dsirCounts(dsirFeatures(df, idCol, textCol, isTarget, nBuckets))
-      .write.mode("overwrite").parquet(s"$path/buckets")
-    graft.sources.ManifestIO.writeMetaDir(
-      spark.sparkContext.hadoopConfiguration, s"$path/meta",
-      Seq("n_buckets" -> nBuckets, "alpha" -> alpha))
-    StreamCommitMarker.clear(spark, path)
-  }
+      alpha: Double = 1.0): Unit =
+    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
+      s"$path/buckets", IndexCommit.Replace,
+      dsirCounts(dsirFeatures(df, idCol, textCol, isTarget, nBuckets))
+        .write.mode("overwrite").parquet(_))),
+      pin = Some(s"$path/meta" -> Seq("n_buckets" -> nBuckets, "alpha" -> alpha)))
 
   /** Fold one batch into the stored distributions: O(batch) — one
     * aggregation over the batch's features, appended as delta rows.
     */
   def appendToDsirIndex(batch: DataFrame, idCol: String, textCol: String,
       isTarget: Column, path: String): Unit = {
-    val spark = batch.sparkSession
-    val meta = graft.sources.ManifestIO.readFirstRecord(
-      spark.sparkContext.hadoopConfiguration, s"$path/meta")
+    val conf = batch.sparkSession.sparkContext.hadoopConfiguration
+    val meta = graft.sources.ManifestIO.readFirstRecord(conf, s"$path/meta")
       .getOrElse(throw new IllegalStateException(
         s"dsir index meta at $path/meta is unreadable or empty"))
     val nBuckets = meta.getInteger("n_buckets", 0)
-    dsirCounts(dsirFeatures(batch, idCol, textCol, isTarget, nBuckets))
-      .write.mode("append").parquet(s"$path/buckets")
+    IndexCommit.commit(batch.sparkSession, Seq(IndexCommit.Output(
+      s"$path/buckets", IndexCommit.Add,
+      dsirCounts(dsirFeatures(batch, idCol, textCol, isTarget, nBuckets))
+        .write.parquet(_))),
+      IndexCommit.batchPin(conf, s"$path/meta"))
   }
 
   /** Score a batch against the STORED distributions: (id, log_w). The
@@ -1016,30 +1016,16 @@ object TextAnalysis {
     * NOT stored: a search reads its terms' full posting lists anyway, so
     * df falls out of a count over what was already fetched — one less
     * table to keep consistent under appends.
+    *
+    * Build and append publish postings, then doclens, then stats: a doc
+    * counted in doclens/stats always has its postings.
     */
   def buildBm25Index(df: DataFrame, idCol: String, textCol: String,
       path: String, nBuckets: Int = 256): Unit = {
     val base = path.stripSuffix("/")
-    val (postings, doclens, stats) = bm25Delta(df, idCol, textCol, nBuckets)
-    val spark = df.sparkSession
-    // postings vs doclens+stats land in disjoint directories from
-    // independent compute — overlap the writes (guide §2.6); route
-    // posting rows to their bucket BEFORE the partitioned write: without
-    // this every task writes a file into every bucket directory it
-    // touches (tasks x buckets small files); with it, one file per bucket
-    graft.Par.jobs(
-      () => postings.repartition(col("tb")).write.mode("overwrite")
-        .partitionBy("tb").parquet(s"$base/postings"),
-      () => {
-        doclens.write.mode("overwrite").parquet(s"$base/doclens")
-        stats.write.mode("overwrite").parquet(s"$base/stats")
-      })
-    // one int, one row: driver-side parquet (a Spark job here was pure
-    // scheduling overhead — the ManifestIO discipline)
-    graft.sources.ManifestIO.writeMetaDir(
-      spark.sparkContext.hadoopConfiguration, s"$base/meta",
-      Seq("n_buckets" -> nBuckets))
-    StreamCommitMarker.clear(spark, base)
+    IndexCommit.commit(df.sparkSession,
+      bm25Outputs(df, idCol, textCol, base, nBuckets, IndexCommit.Replace),
+      pin = Some(s"$base/meta" -> Seq("n_buckets" -> nBuckets)))
   }
 
   /** Fold a new document batch into a [[buildBm25Index]] index: postings
@@ -1051,18 +1037,31 @@ object TextAnalysis {
   def appendToBm25Index(df: DataFrame, idCol: String, textCol: String,
       path: String): Unit = {
     val base = path.stripSuffix("/")
-    val nBuckets = graft.sources.ManifestIO.readIntMeta(
-      df.sparkSession.sparkContext.hadoopConfiguration, s"$base/meta",
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    val nBuckets = graft.sources.ManifestIO.readIntMeta(conf, s"$base/meta",
       "n_buckets").getOrElse(throw new IllegalStateException(
       s"bm25 index meta at $base/meta is unreadable or empty"))
+    IndexCommit.commit(df.sparkSession,
+      bm25Outputs(df, idCol, textCol, base, nBuckets, IndexCommit.Add),
+      IndexCommit.batchPin(conf, s"$base/meta"))
+  }
+
+  /** The three BM25 outputs in publish order. Posting rows route to their
+    * bucket BEFORE the partitioned write: without this every task writes a
+    * file into every bucket directory it touches (tasks x buckets small
+    * files); with it, one file per bucket.
+    */
+  private def bm25Outputs(df: DataFrame, idCol: String, textCol: String,
+      base: String, nBuckets: Int,
+      how: IndexCommit.Publish): Seq[IndexCommit.Output] = {
     val (postings, doclens, stats) = bm25Delta(df, idCol, textCol, nBuckets)
-    graft.Par.jobs(
-      () => postings.repartition(col("tb")).write.mode("append")
-        .partitionBy("tb").parquet(s"$base/postings"),
-      () => {
-        doclens.write.mode("append").parquet(s"$base/doclens")
-        stats.write.mode("append").parquet(s"$base/stats")
-      })
+    Seq(
+      IndexCommit.Output(s"$base/postings", how, postings.repartition(col("tb"))
+        .write.mode("overwrite").partitionBy("tb").parquet(_)),
+      IndexCommit.Output(s"$base/doclens", how,
+        doclens.write.mode("overwrite").parquet(_)),
+      IndexCommit.Output(s"$base/stats", how,
+        stats.write.mode("overwrite").parquet(_)))
   }
 
   private def bm25Delta(df: DataFrame, idCol: String, textCol: String,
@@ -1449,11 +1448,10 @@ object TextAnalysis {
         posexplode(split(lower(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
       .withColumn("tb", hashBucket(col("tok"), nBuckets).cast("int"))
-    postings.repartition(col("tb")).write.mode("overwrite").partitionBy("tb")
-      .parquet(s"$base/postings")
-    graft.sources.ManifestIO.writeMetaDir(
-      df.sparkSession.sparkContext.hadoopConfiguration, s"$base/meta",
-      Seq("n_buckets" -> nBuckets))
+    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
+      s"$base/postings", IndexCommit.Replace, postings.repartition(col("tb"))
+        .write.mode("overwrite").partitionBy("tb").parquet(_))),
+      pin = Some(s"$base/meta" -> Seq("n_buckets" -> nBuckets)))
   }
 
   /** Fold a new document batch into a [[buildPositionalIndex]] index:
@@ -1473,8 +1471,9 @@ object TextAnalysis {
         posexplode(split(lower(col(textCol)), "\\s+")).as(Seq("pos", "tok")))
       .filter(length(col("tok")) > 0)
       .withColumn("tb", hashBucket(col("tok"), nBuckets).cast("int"))
-    postings.repartition(col("tb")).write.mode("append").partitionBy("tb")
-      .parquet(s"$base/postings")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(s"$base/postings",
+      IndexCommit.Add, postings.repartition(col("tb"))
+        .write.mode("overwrite").partitionBy("tb").parquet(_))))
   }
 
   /** Phrase query against a [[buildPositionalIndex]] index: identical

@@ -3,6 +3,7 @@ package graft.relational
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.sources.IndexCommit
 
 /** SCD type-2 dimension maintenance: [[build]] derives the full history
   * from a change log (q32's logic as a reusable, native-typed op), and
@@ -22,31 +23,32 @@ import org.apache.spark.sql.functions._
   *     shares the boundary timestamp (fresh event_id) is safely orderable
   *     by the same (ts, event_id) key the fold sorts on, and folds in
   *     exactly as a full rebuild would
-  *   - `scd2_meta` — the pinned bucket count (nBuckets is part of the
+  *   - `meta` — the pin: the bucket count (nBuckets is part of the
   *     on-disk LAYOUT: a different value on a later merge would route
   *     users to other partitions and strand stale rows in directories a
-  *     partial rewrite never touches — mismatches fail loudly)
+  *     partial rewrite never touches — mismatches fail loudly) and, when
+  *     a stream feeds the table, its batch high-watermark
   *
   * Scale shape — merge is O(batch) in BOTH compute and I/O:
   *   - compute: current rows arrive via one left-semi join on the (small)
   *     batch-user set, the fold windows over seed+batch rows;
   *   - read: history/last scans are PRUNED to the ≤ nBuckets partition
   *     directories holding batch users (directory-level `isin` filter);
-  *   - write: dynamic partition overwrite rewrites ONLY those buckets —
+  *   - write: a partition swap rewrites ONLY those buckets —
   *     untouched buckets' files are never opened, rewritten, or deleted
   *     (the `clusterMaintSink` labels-table pattern). Bucketing by USER
   *     hash makes the partial rewrite sound: a user's bucket never
   *     changes, so a merge can never migrate a row out of a partition
   *     and leave a stale copy behind.
-  * A crash mid-merge therefore has a blast radius of the touched buckets
-  * only, never the whole table; [[init]] over an existing table stages to
-  * a temp sibling and rename-swaps (`Maintenance.swapParquetDir`) so a
-  * rebuild can't destroy readable history either. No full-log
-  * reprocessing anywhere; the full rebuild exists once, at [[build]] time.
+  * Both [[init]] and [[merge]] commit through `sources.IndexCommit`:
+  * history, then last, then the pin. A crash can leave history ahead of
+  * the watermark (the torn state [[merge]] detects and replays
+  * idempotently), never behind it. No full-log reprocessing anywhere;
+  * the full rebuild exists once, at [[build]] time.
   */
 object Scd2 {
 
-  /** Bucket count is part of the layout; see `scd2_meta` above. */
+  /** Bucket count is part of the layout; see `meta` above. */
   val DefaultBuckets = 64
 
   private def bucketOf(c: Column, n: Int): Column =
@@ -57,40 +59,18 @@ object Scd2 {
     */
   val UseStored: Int = -1
 
-  // meta path -> (meta dir mtime, n_buckets): the mtime guards the cache
-  // against a REPLACED meta (a re-init from another JVM), not just a
-  // deleted one — a stale pin would silently mis-prune every later read
-  private val bucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
-
-  /** Read the pinned bucket count. Steady streaming pays a driver-side
-    * stat per trigger, not a parquet read (the mtime-validated JVM
-    * cache); a missing meta next to an EXISTING table fails loudly —
-    * minting a count for a table whose layout is already on disk is
-    * exactly the stale-row corruption the pin exists to prevent.
+  /** Read the pinned bucket count (driver-side, one int). A missing pin
+    * next to an EXISTING table fails loudly — minting a count for a table
+    * whose layout is already on disk is exactly the stale-row corruption
+    * the pin exists to prevent.
     */
-  private def pinnedBuckets(spark: SparkSession, path: String): Int = {
-    val meta = s"${path.stripSuffix("/")}/scd2_meta"
-    val metaFsPath = new org.apache.hadoop.fs.Path(meta)
-    val fs = metaFsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaFsPath)) {
-      bucketCache.remove(meta)
+  private def pinnedBuckets(spark: SparkSession, path: String): Int =
+    graft.sources.ManifestIO.readIntMeta(spark.sparkContext.hadoopConfiguration,
+      s"${path.stripSuffix("/")}/meta", "n_buckets").getOrElse(
       throw new IllegalStateException(
-        s"scd2 table at $path has no scd2_meta pin — refusing to guess " +
+        s"scd2 table at $path has no readable meta pin — refusing to guess " +
           "the bucket layout (a wrong guess strands stale rows); " +
-          "rebuild via Scd2.init or restore the meta table")
-    }
-    val mtime = fs.getFileStatus(metaFsPath).getModificationTime
-    bucketCache.compute(meta, { (_, cached) =>
-      if (cached != null && cached._1 == mtime) cached
-      // driver-side read: the pin is one int — a Spark job per cache
-      // miss was pure scheduling overhead (ManifestIO discipline)
-      else (mtime, graft.sources.ManifestIO.readIntMeta(
-        spark.sparkContext.hadoopConfiguration, meta, "n_buckets")
-        .getOrElse(throw new IllegalStateException(
-          s"scd2 meta at $meta is unreadable or empty")))
-    })._2
-  }
+          "rebuild via Scd2.init"))
 
   /** Full-history build: collapse each user's event stream to change
     * points, stamp validity intervals and versions. Both window passes
@@ -151,9 +131,7 @@ object Scd2 {
     */
   def historyFor(spark: SparkSession, path: String,
       users: DataFrame): DataFrame = {
-    // shared mtime-validated pin reader: a read path never mints layout,
-    // and a re-initialized table (even from another JVM) invalidates the
-    // cache via the meta mtime instead of silently mis-pruning
+    // a read path never mints layout
     val nb: Int = pinnedBuckets(spark, path)
     val touched = users.select(bucketOf(col("user_id"), nb).as("ubucket"))
       .distinct().collect().map(_.getLong(0)).toSeq
@@ -216,16 +194,14 @@ object Scd2 {
   }
 
   /** Write a fresh history + watermark table from a full change log.
-    * Rebuilding over an EXISTING table stages each output to a temp
-    * sibling and rename-swaps, so readers see old-or-new, never a
-    * half-written table. With `changesTo`, the whole built history is
-    * also emitted as `insert` rows — the feed's bootstrap batch,
-    * identical to `changesBetween(empty, built)`.
+    * Rebuilding over an EXISTING table swaps each output in, so readers
+    * see old-or-new, never a half-written table. With `changesTo`, the
+    * whole built history is also emitted as `insert` rows — the feed's
+    * bootstrap batch, identical to `changesBetween(empty, built)`.
     */
   def init(events: DataFrame, path: String,
       nBuckets: Int = DefaultBuckets,
       changesTo: Option[String] = None): Unit = {
-    val spark = events.sparkSession
     require(nBuckets > 0, s"init needs a concrete bucket count, got $nBuckets")
     // one window-fold compute feeds both the feed write and the table
     // write when the outbox is on
@@ -236,70 +212,36 @@ object Scd2 {
         lit("insert").as("change_type"), col("state"),
         col("valid_from"), col("valid_to")), dir)
     }
-    // history and watermark land in DISJOINT directories from disjoint
-    // compute — overlap the two write jobs (guide §2.6) instead of
-    // serializing them on the driver
-    graft.Par.jobs(
-      () => writeBucketed(hist
-        .withColumn("ubucket", bucketOf(col("user_id"), nBuckets)),
-        s"$path/history"),
-      () => writeBucketed(events.groupBy(col("user_id"))
+    commitTables(events.sparkSession, path, IndexCommit.Replace,
+      hist.withColumn("ubucket", bucketOf(col("user_id"), nBuckets))
+        .repartition(col("ubucket")),
+      events.groupBy(col("user_id"))
         .agg(max(struct(col("ts"), col("event_id"))).as("_w"))
         .select(col("user_id"), col("_w.ts").as("last_ts"),
           col("_w.event_id").as("last_eid"),
-          bucketOf(col("user_id"), nBuckets).as("ubucket")),
-        s"$path/last"))
-    // the meta pin lands LAST, itself rename-swapped: a crash anywhere
-    // above leaves the OLD pin with either the old layout (clean) or the
-    // new one — and a stale pin fails the next merge's require loudly
-    // instead of silently mis-bucketing (the pre-fix ordering overwrote
-    // the pin FIRST, so a crash left a new pin describing an old layout).
-    // The residual window is the gap between the history/last renames and
-    // this one — single-writer contract, documented.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val meta = s"${path.stripSuffix("/")}/scd2_meta"
-    val metaFsPath = new org.apache.hadoop.fs.Path(meta)
-    val fs = metaFsPath.getFileSystem(conf)
-    // one int, one row: written driver-side (ManifestIO discipline — a
-    // Spark job here was pure scheduling overhead), same rename-swap
-    def writeMeta(dir: String): Unit = {
-      val d = new org.apache.hadoop.fs.Path(dir)
-      if (fs.exists(d)) fs.delete(d, true)
-      fs.mkdirs(d)
-      graft.sources.ManifestIO.writeIntMeta(conf,
-        s"$dir/part-00000-meta.parquet", "n_buckets", nBuckets)
-    }
-    if (!fs.exists(metaFsPath)) writeMeta(meta)
-    else {
-      val tmp = s"${meta}__rebuild_tmp"
-      writeMeta(tmp)
-      graft.ops.Maintenance.swapParquetDir(spark, meta, tmp)
-    }
-    // a re-init may change the layout: the JVM pin must follow it
-    bucketCache.put(meta,
-      (fs.getFileStatus(metaFsPath).getModificationTime, nBuckets))
+          bucketOf(col("user_id"), nBuckets).as("ubucket"))
+        .repartition(col("ubucket")),
+      nBuckets, always = true)
   }
 
-  /** Overwrite-or-swap: direct write when `target` doesn't exist yet,
-    * temp-sibling + rename-swap when it does (a rebuild must not destroy
-    * the readable table on a crash mid-write). Rows hash-route by bucket
-    * first so each partition directory lands as ONE file — without the
-    * repartition every shuffle partition writes into every bucket dir
-    * (up to partitions × buckets files per write; measured 2× the whole
-    * q33 row's cost in small-file overhead).
+  /** The two table writes of [[init]] and [[merge]] as one commit: both
+    * stage concurrently (disjoint directories, disjoint compute), then
+    * history publishes before last, and the pin lands last — written on a
+    * rebuild (`always`) or to carry a stream batch. Callers route
+    * rows by bucket first so each partition directory lands as ONE file —
+    * without the repartition every shuffle partition writes into every
+    * bucket dir (up to partitions × buckets files per write; measured 2×
+    * the whole q33 row's cost in small-file overhead).
     */
-  private def writeBucketed(df: DataFrame, target: String): Unit = {
-    val spark = df.sparkSession
-    val routed = df.repartition(col("ubucket"))
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) {
-      routed.write.partitionBy("ubucket").parquet(target)
-    } else {
-      val tmp = s"${target}__rebuild_tmp"
-      routed.write.mode("overwrite").partitionBy("ubucket").parquet(tmp)
-      graft.ops.Maintenance.swapParquetDir(spark, target, tmp)
-    }
+  private def commitTables(spark: SparkSession, path: String,
+      how: IndexCommit.Publish, history: DataFrame, last: DataFrame,
+      nBuckets: Int, always: Boolean): Unit = {
+    val base = path.stripSuffix("/")
+    def out(dir: String, df: DataFrame) = IndexCommit.Output(s"$base/$dir", how,
+      df.write.mode("overwrite").partitionBy("ubucket").parquet(_))
+    IndexCommit.commit(spark, Seq(out("history", history), out("last", last)),
+      Some(s"$base/meta" -> Seq("n_buckets" -> nBuckets))
+        .filter(_ => always || IndexCommit.streamBatch.isDefined))
   }
 
   /** [[merge]] when the history exists, [[init]] otherwise — the form a
@@ -308,11 +250,18 @@ object Scd2 {
   def mergeOrInit(spark: SparkSession, path: String, batch: DataFrame,
       nBuckets: Int = UseStored,
       changesTo: Option[String] = None): Unit = {
+    recover(spark, path)
     val p = new org.apache.hadoop.fs.Path(s"$path/history")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) merge(spark, path, batch, nBuckets, changesTo)
     else init(batch, path,
       if (nBuckets == UseStored) DefaultBuckets else nBuckets, changesTo)
+  }
+
+  private def recover(spark: SparkSession, path: String): Unit = {
+    val base = path.stripSuffix("/")
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration,
+      Seq("history", "last", "meta").map(d => s"$base/$d"))
   }
 
   /** Fold `batch` (new events, per-user later than the stored watermark)
@@ -331,6 +280,7 @@ object Scd2 {
   def merge(spark: SparkSession, path: String, batch: DataFrame,
       nBuckets: Int = UseStored,
       changesTo: Option[String] = None): Unit = {
+    recover(spark, path)
     // the table's pinned layout is authoritative; an explicitly passed
     // count is a cross-check, not a choice (a caller can't re-bucket by
     // argument — that's what init is for)
@@ -392,14 +342,17 @@ object Scd2 {
       .join(cur.select(col("user_id"), col("valid_from").as("_cvf")),
         Seq("user_id"), "full")
       .select(col("user_id"),
-        when(torn, curHigh).otherwise(lastW).as("_wm"))
+        when(torn, curHigh).otherwise(lastW).as("_wm"), lastW.as("_lw"))
     // ONE broadcast join gates the whole batch; the checkpoint
     // materializes it once so the stale count and the fresh selection
-    // don't re-run the gate per action
+    // don't re-run the gate per action. `_seen` marks events at or before
+    // the STORED tuple: in the torn state the events between it and the
+    // effective gate were folded by the crashed run, so they still
+    // advance `last` — the replay repairs the watermark as well
+    val ev = struct(col("ts").as("wts"), col("event_id").as("wid"))
     val gated = batch.join(broadcast(wm), Seq("user_id"), "left")
-      .withColumn("_stale", col("_wm").isNotNull &&
-        struct(col("ts").as("wts"), col("event_id").as("wid")) <=
-          col("_wm"))
+      .withColumn("_stale", col("_wm").isNotNull && ev <= col("_wm"))
+      .withColumn("_seen", col("_lw").isNotNull && ev <= col("_lw"))
       .localCheckpoint()
     val stale = gated.filter(col("_stale")).count()
     if (stale > 0)
@@ -461,7 +414,7 @@ object Scd2 {
       .filter(col("_u").isNull || !col("is_current"))
       .drop("_u", "ubucket")
     val merged = passThrough.unionByName(folded)
-    val lastNew = fresh.groupBy(col("user_id"))
+    val lastNew = gated.filter(!col("_seen")).groupBy(col("user_id"))
       .agg(max(struct(col("ts"), col("event_id"))).as("_w"))
       .select(col("user_id"), col("_w.ts").as("_new_ts"),
         col("_w.event_id").as("_new_eid"))
@@ -485,14 +438,11 @@ object Scd2 {
         col("_w.last_eid").as("last_eid"))
     val lastMerged = lastKeep.unionByName(lastUpd)
     // snapshot-before-write: both outputs read the directories they are
-    // about to overwrite. Bucket-routed first (the writeBucketed rule):
-    // each touched partition directory lands as one file per merge.
-    // The outbox write and the two snapshot checkpoints are mutually
-    // independent (reads of history/last + the fold; the feed directory
-    // is disjoint), as are the two final overwrites — each pair overlaps
-    // (guide §2.6) instead of running serially on the driver; the
-    // changes-before-history-overwrite crash ordering is preserved
-    // because all phase-1 work completes before any table write starts.
+    // about to replace. The outbox write and the two snapshot checkpoints
+    // are mutually independent (reads of history/last + the fold; the
+    // feed directory is disjoint), so they overlap (guide §2.6); all of
+    // them complete before the commit stages anything, which keeps the
+    // changes-before-history crash ordering.
     var mergedOut: DataFrame = null
     var lastOut: DataFrame = null
     graft.Par.jobs(
@@ -505,12 +455,7 @@ object Scd2 {
         .withColumn("ubucket", bucketOf(col("user_id"), stored))
         .repartition(col("ubucket"))
         .localCheckpoint())
-    graft.Par.jobs(
-      () => mergedOut.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ubucket").parquet(s"$path/history"),
-      () => lastOut.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ubucket").parquet(s"$path/last"))
+    commitTables(spark, path, IndexCommit.ReplaceParts, mergedOut, lastOut,
+      stored, always = false)
   }
 }

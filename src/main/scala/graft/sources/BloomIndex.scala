@@ -92,8 +92,7 @@ object BloomIndex {
     // loss is possible — the cast is identity).
     val back = spark.read.parquet(tablePath)
       .select(col(keyCol).cast(kind).as("k"), input_file_name().as("f"))
-    val tmp = sidecarPath(tablePath) + "__new"
-    back
+    val bits = back
       .select(col("f"), explode(contribs(mBits, k)).as("c"))
       .groupBy(col("f"), col("c.w").as("w"))
       .agg(bit_or(col("c.m")).as("bits"))
@@ -105,15 +104,8 @@ object BloomIndex {
       // equality predicates on it and probe in the right domain
       .withColumn("key_col", lit(keyCol))
       .withColumn("key_kind", lit(kind))
-      .write.mode("overwrite").parquet(tmp)
-    val fs = new org.apache.hadoop.fs.Path(tablePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val target = new org.apache.hadoop.fs.Path(sidecarPath(tablePath))
-    if (fs.exists(target))
-      graft.ops.Maintenance.swapParquetDir(spark, sidecarPath(tablePath), tmp)
-    else
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp), target),
-        s"sidecar commit failed at $target")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
+      IndexCommit.Replace, bits.write.mode("overwrite").parquet(_))))
   }
 
   /** Append a batch: new key-hash-partitioned files inside the table plus

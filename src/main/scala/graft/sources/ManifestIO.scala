@@ -297,29 +297,7 @@ private[graft] object ManifestIO {
     out.result()
   }
 
-  /** Write a one-row, one-int-column meta parquet (driver-side, no
-    * Spark job) — the shape of pinned-layout metadata like Scd2's
-    * `scd2_meta`. Byte-compatible with the old
-    * `Seq(v).toDF(name).coalesce(1).write.parquet` output.
-    */
-  def writeIntMeta(conf: Configuration, file: String, name: String,
-      value: Int): Unit = {
-    val schema = MessageTypeParser.parseMessageType(
-      s"message spark_schema { optional int32 $name; }")
-    val w = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new Path(file), conf))
-      .withConf(conf)
-      .withType(schema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val g = new SimpleGroup(schema)
-      g.append(name, value)
-      w.write(g)
-    } finally w.close()
-  }
-
-  /** Read the single int of a [[writeIntMeta]]-shaped meta directory
+  /** Read one int field of a [[writeMetaDir]] meta directory
     * (driver-side; also reads the legacy Spark-written form). None when
     * the directory is missing/empty or the field is absent.
     */
@@ -332,11 +310,10 @@ private[graft] object ManifestIO {
       else None
     }
 
-  /** Replace meta directory `dir` with ONE driver-written parquet file
-    * holding a single row of named scalar fields (Int/Long/Double/
-    * String) — the generic form of [[writeIntMeta]] for the one-row
-    * pinned-parameter metas every persisted index keeps. Readers (Spark
-    * and [[readFirstRecord]] alike) see the same physical schema the old
+  /** The pin of [[IndexCommit]]: ONE driver-written parquet file holding
+    * a single row of named scalar fields (Int/Long/Double/String), written
+    * to `<dir>__stage` and swapped in for `dir`. Readers (Spark and
+    * [[readFirstRecord]] alike) see the same physical schema the old
     * `Seq(...).toDF(...).coalesce(1).write.parquet` produced.
     */
   def writeMetaDir(conf: Configuration, dir: String,
@@ -350,9 +327,9 @@ private[graft] object ManifestIO {
         case (n, v) => throw new IllegalArgumentException(
           s"unsupported meta field $n: ${v.getClass}")
       }.mkString("message spark_schema { ", " ", " }"))
-    val d = new Path(dir)
+    val d = new Path(IndexCommit.stageOf(dir))
     val fs = d.getFileSystem(conf)
-    if (fs.exists(d)) fs.delete(d, true)
+    fs.delete(d, true)
     fs.mkdirs(d)
     val w = ExampleParquetWriter
       .builder(HadoopOutputFile.fromPath(
@@ -372,6 +349,7 @@ private[graft] object ManifestIO {
       }
       w.write(g)
     } finally w.close()
+    IndexCommit.publish(conf, dir, IndexCommit.Replace)
   }
 
   /** First record of the first non-hidden part file under parquet

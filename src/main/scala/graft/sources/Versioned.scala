@@ -25,7 +25,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * All manifest/commit/expire filesystem traffic goes through the Hadoop
   * `FileSystem` API resolved from the table path (the same idiom as
-  * [[BloomIndex]] and `Maintenance.swapDir`), so the table runs wherever
+  * [[BloomIndex]] and [[IndexCommit]]), so the table runs wherever
   * Spark's Hadoop layer does. SUBSTRATE CONTRACT: rename-as-commit needs
   * a store with atomic directory rename under a single writer — local
   * FS and HDFS qualify; plain object stores (S3 without a rename layer)

@@ -100,19 +100,16 @@ object ZOrder {
 
   /** Re-cluster the whole table (original + appends) into one fresh
     * Morton layout — the LSM-style maintenance counterpart of
-    * [[appendZOrdered]], with the same rename-swap visibility contract as
+    * [[appendZOrdered]], committed as an [[IndexCommit]] `Replace` like
     * every compactor in `ops.Maintenance` (readers see old or new layout,
-    * never a mix; old data survives under `<path>__old` until the swap
-    * lands). Content-identical; single-writer window.
+    * never a mix). Content-identical; single-writer window.
     */
   def compactZOrdered(spark: org.apache.spark.sql.SparkSession,
       path: String, exprA: Column, exprB: Column, bits: Int = 16,
       nFiles: Int = 32): Unit = {
     val base = path.stripSuffix("/")
-    val tmp = s"${base}__zorder_tmp"
-    writeZOrdered(spark.read.parquet(base), tmp, exprA, exprB, bits,
-      nFiles)
-    graft.ops.Maintenance.swapParquetDir(spark, base, tmp)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(base, IndexCommit.Replace,
+      writeZOrdered(spark.read.parquet(base), _, exprA, exprB, bits, nFiles))))
   }
 
   /** `df` Morton-clustered IN-ROW but not yet written: range-partitioned

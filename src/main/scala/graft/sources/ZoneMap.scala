@@ -171,26 +171,18 @@ object ZoneMap {
   }
 
   /** Land freshly computed sidecar rows atomically: one driver-written
-    * part file staged aside, then rename into place (or rename-swap when
-    * replacing) — the one commit idiom every sidecar write shares. No
-    * Spark job: the sidecar is O(files × stat cols) of metadata.
+    * part file, committed as an [[IndexCommit]] `Replace` — the one commit
+    * idiom every sidecar write shares. No Spark job: the sidecar is
+    * O(files × stat cols) of metadata.
     */
   private def commitSidecar(spark: SparkSession, tablePath: String,
       rows: Seq[ManifestIO.SidecarRow]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, tablePath)
-    val target = new Path(sidecarPath(tablePath))
-    val tmp = new Path(sidecarPath(tablePath) + "__new")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    fs.mkdirs(tmp)
-    ManifestIO.writeSidecar(conf,
-      new Path(tmp, "part-00000-zm.parquet").toString, rows)
-    if (fs.exists(target))
-      graft.ops.Maintenance.swapParquetDir(spark, sidecarPath(tablePath),
-        tmp.toString)
-    else
-      require(fs.rename(tmp, target),
-        s"sidecar commit failed at $target")
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
+      IndexCommit.Replace, { stage =>
+        fsOf(spark, tablePath).mkdirs(new Path(stage))
+        ManifestIO.writeSidecar(conf, s"$stage/part-00000-zm.parquet", rows)
+      })))
   }
 
   /** Append sidecar rows as one new part file: staged under a hidden

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.IndexCommit
 
 /** Streaming near-duplicate detection — the streaming face of
   * `ops.Dedup.simhashPairs`: per-row 64-bit SimHash, (maxHamming+1)-band
@@ -78,18 +79,15 @@ object DedupStream {
     * on an empty frame) — its meta pins the signature params for every
     * batch. Pairs land under `pairsOutPath/batch=<id>`.
     *
-    * Signature ingest is EXACTLY-ONCE under replay: the max committed
-    * batchId persists alongside the index (`<indexPath>/stream_commit`,
-    * written after each successful append), and a redelivered batch at or
-    * below that high-watermark skips the append and recomputes its pairs
-    * READ-ONLY via `searchDedupIndex` — the output is identical, because
-    * the replayed batch's signatures are already in the index and the
-    * either-side-new gate reports the same pair set. Residual window: a
-    * crash BETWEEN the signature append and the marker write replays as
-    * one duplicate append (marker-after-data is the losing side of
-    * two-phase commit without a transactional table format; the window is
-    * one tiny parquet write wide, and duplicated signatures band into the
-    * same buckets, so pair OUTPUT stays correct even then).
+    * Signature ingest is EXACTLY-ONCE under replay. Each append commits
+    * through `sources.IndexCommit`: its signature files carry the batchId
+    * and the index pin (`<indexPath>/meta`) takes it as the high-watermark
+    * last. A redelivered batch at or below the watermark skips the append
+    * and recomputes its pairs READ-ONLY via `searchDedupIndex` — the
+    * output is identical, because the replayed batch's signatures are
+    * already in the index and the either-side-new gate reports the same
+    * pair set. A batch that crashed before its pin replays as new: its
+    * files from the first attempt are dropped before the pairs are read.
     */
   def indexAppendSink(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, pairsOutPath: String, rowsPerBand: Int = 2,
@@ -113,78 +111,49 @@ object DedupStream {
       textCol: String, indexPath: String, pairsOutPath: String,
       rowsPerBand: Int = 2, threshold: Double = 0.5,
       maxBucket: Int = graft.ops.Dedup.DefaultMaxBucket): Unit = {
-    val spark = batch.sparkSession
     val pairs =
-      if (batchId <= committedBatchId(spark, indexPath)) {
+      if (!isNew(batch, indexPath, batchId)) {
         // REPLAY: signatures already committed — recompute pairs read-only
         graft.ops.Dedup.searchDedupIndex(batch, idCol, textCol, indexPath,
           rowsPerBand, threshold, maxBucket,
           excludeProbeFromStored = true)
-      } else {
-        val p = graft.ops.Dedup.appendToDedupIndex(batch, idCol, textCol,
-          indexPath, rowsPerBand, threshold, maxBucket)
-        commitBatchId(spark, indexPath, batchId)
-        p
-      }
+      } else IndexCommit.inBatch(batchId)(graft.ops.Dedup.appendToDedupIndex(
+        batch, idCol, textCol, indexPath, rowsPerBand, threshold, maxBucket))
     pairs.write.mode("overwrite").parquet(s"$pairsOutPath/batch=$batchId")
   }
-
-  /** Per-JVM cache of each labels table's pinned bucket count — see the
-    * layout note in [[processClusterBatch]]. Unlike `Dedup.metaCache`,
-    * (re)creation happens inside [[processClusterBatch]] itself, so the
-    * cache is validated against the meta file's existence each trigger:
-    * deleting the table (meta included) drops the stale entry instead of
-    * letting it spuriously pass — or fail — the bucket-count pin.
-    */
-  private val labelsBucketCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   /** Read-or-create the pinned bucket count of a hash-bucketed on-disk
     * table (the cluster labels table, the curate hash table): nBuckets is
     * part of the LAYOUT — a later run with a different value would probe
     * buckets the old rows aren't in, or strand stale rows in partitions a
-    * partial rewrite never touches. The pinned value caches per JVM (the
-    * sigsForIndex pattern — steady streaming stops paying a 1-row parquet
-    * read per trigger), and the cache is validated against the meta
-    * file's existence so a deleted-and-recreated table re-pins from the
-    * CURRENT run's value instead of spuriously passing — or failing — on
-    * the old one.
+    * partial rewrite never touches. The pin is read on the driver each
+    * trigger, so a deleted-and-recreated table re-pins from the CURRENT
+    * run's value. The table and its pin are recovered first: the sink is
+    * their single writer.
     */
   private def pinnedBuckets(spark: org.apache.spark.sql.SparkSession,
-      metaPath: String, cacheKey: String, nBuckets: Int): Int = {
-    import spark.implicits._
-    val metaFsPath = new org.apache.hadoop.fs.Path(metaPath)
-    val metaFs =
-      metaFsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!metaFs.exists(metaFsPath)) labelsBucketCache.remove(cacheKey)
-    labelsBucketCache.computeIfAbsent(cacheKey, { _ =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      graft.sources.ManifestIO.readIntMeta(conf, metaPath, "n_buckets")
-        .getOrElse {
-          graft.sources.ManifestIO.writeMetaDir(conf, metaPath,
-            Seq("n_buckets" -> nBuckets))
-          nBuckets
-        }
-    })
+      metaPath: String, table: String, nBuckets: Int): Int = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    IndexCommit.recover(conf, Seq(table, metaPath))
+    graft.sources.ManifestIO.readIntMeta(conf, metaPath, "n_buckets")
+      .getOrElse {
+        graft.sources.ManifestIO.writeMetaDir(conf, metaPath,
+          Seq("n_buckets" -> nBuckets))
+        nBuckets
+      }
   }
 
-  /** Persist the replay high-watermark after a successful append (shared
-    * by every exactly-once sink; see [[committedBatchId]]).
-    *
-    * SINGLE WRITER: one streaming query owns an index path at a time —
-    * two queries sharing a path would clobber each other's marker
-    * (last-writer-wins overwrite) and corrupt both replay guards. An
-    * in-place index rebuild (`Dedup.buildDedupIndex`,
-    * `Similarity.buildAnnIndex`/`buildPqIndex`) deletes the marker so a
-    * fresh query's batchIds (restarting at 0) are not mistaken for
-    * replays.
+  /** Whether `batchId` is above the index's pinned watermark, i.e. still
+    * has to commit (the shared guard of every exactly-once sink; see
+    * [[committedBatchId]]). Recovers the pin first: the sink is the
+    * index's single writer.
     */
-  private def commitBatchId(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, batchId: Long): Unit = {
-    import spark.implicits._
-    Seq(batchId).toDF("batch_id").coalesce(1)
-      .write.mode("overwrite")
-      .parquet(graft.ops.StreamCommitMarker.path(indexPath))
+  private def isNew(batch: DataFrame, indexPath: String,
+      batchId: Long): Boolean = {
+    val spark = batch.sparkSession
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration,
+      Seq(s"${indexPath.stripSuffix("/")}/meta"))
+    batchId > committedBatchId(spark, indexPath)
   }
 
   /** Streaming end-to-end incremental curation: per micro-batch, dedup
@@ -209,7 +178,8 @@ object DedupStream {
     * batchId high-watermark, the batch's pairs directory overwrites
     * itself, and the label merge is IDEMPOTENT — re-merging pairs already
     * folded in relabels the same components to the same minima, so a
-    * redelivered batch rewrites the same buckets with the same rows.
+    * redelivered batch rewrites the same buckets with the same rows. The
+    * touched buckets swap in through `sources.IndexCommit`.
     */
   def clusterMaintSink(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, pairsOutPath: String, labelsPath: String,
@@ -264,13 +234,12 @@ object DedupStream {
       .join(affected, Seq("lbucket"), "left_semi")
       .join(delta.select(col("node")), Seq("node"), "left_anti")
       .select(col("node"), col("component"))
-    delta.unionByName(keep)
+    val labels = delta.unionByName(keep)
       .withColumn("lbucket", bucket(col("node")))
       .localCheckpoint()
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("lbucket")
-      .parquet(labelsPath)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(labelsPath,
+      IndexCommit.ReplaceParts,
+      labels.write.mode("overwrite").partitionBy("lbucket").parquet(_))))
   }
 
   /** Streaming end-to-end curation — the streaming twin of
@@ -367,16 +336,13 @@ object DedupStream {
       .localCheckpoint()
 
     // 3. near-dup vs the persisted index — exactly-once signature append
-    val pairs = (if (batchId <= committedBatchId(spark, indexPath))
+    val pairs = (if (!isNew(exact, indexPath, batchId))
         graft.ops.Dedup.searchDedupIndex(exact, idCol, textCol, indexPath,
           cfg.rowsPerBand, cfg.nearDupThreshold,
           excludeProbeFromStored = true)
-      else {
-        val p = graft.ops.Dedup.appendToDedupIndex(exact, idCol, textCol,
-          indexPath, cfg.rowsPerBand, cfg.nearDupThreshold)
-        commitBatchId(spark, indexPath, batchId)
-        p
-      }).localCheckpoint()
+      else IndexCommit.inBatch(batchId)(graft.ops.Dedup.appendToDedupIndex(
+        exact, idCol, textCol, indexPath, cfg.rowsPerBand,
+        cfg.nearDupThreshold))).localCheckpoint()
     val kept = exact.join(pairs.select(col("b").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
@@ -388,30 +354,14 @@ object DedupStream {
       .parquet(s"$hashesPath/batch=$batchId")
   }
 
-  /** The persisted replay high-watermark; -1 when no batch committed yet
-    * (fresh index — the marker directory does not exist) or when the
-    * marker is unreadable/empty (a crash mid-overwrite can leave a
-    * truncated part file, which surfaces as SparkException/IOException,
-    * not just AnalysisException): degrading to -1 re-runs the batch — one
-    * duplicate append, the same documented residual window — instead of
-    * crash-looping the stream forever on a torn marker. The degradation
-    * is WARNed so a persistent read problem is visible.
+  /** The persisted replay high-watermark: the `batch_id` of the index's
+    * pin (`<indexPath>/meta`), read on the driver; -1 when no batch has
+    * committed since the index was built.
     */
   def committedBatchId(spark: org.apache.spark.sql.SparkSession,
       indexPath: String): Long =
-    try {
-      val rows = spark.read
-        .parquet(graft.ops.StreamCommitMarker.path(indexPath)).collect()
-      if (rows.isEmpty) -1L else rows.map(_.getAs[Long]("batch_id")).max
-    } catch {
-      case _: org.apache.spark.sql.AnalysisException => -1L // no marker yet
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(DedupStream.getClass).warn(
-          s"unreadable stream_commit marker at $indexPath (${e.getClass
-            .getSimpleName}: ${e.getMessage}) — treating as no commit; " +
-            "the next batch may append once more (at-least-once window)")
-        -1L
-    }
+    IndexCommit.watermark(spark.sparkContext.hadoopConfiguration,
+      s"${indexPath.stripSuffix("/")}/meta")
 
   /** Streaming ingest into a persisted IVF ANN index: each micro-batch
     * runs `ops.Similarity.appendToAnnIndex` via foreachBatch — frozen
@@ -420,11 +370,10 @@ object DedupStream {
     * per trigger and existing partitions never rewrite. The index at
     * `dbPath` must exist (`Similarity.buildAnnIndex`).
     *
-    * EXACTLY-ONCE under replay via the same persisted batchId
+    * EXACTLY-ONCE under replay via the same pinned batchId
     * high-watermark as [[indexAppendSink]]: a redelivered batch at or
-    * below `<dbPath>/stream_commit` is skipped outright (an ANN append
-    * has no per-batch output to recompute). Same residual
-    * crash-between-append-and-marker window, one tiny parquet write wide.
+    * below it is skipped outright (an ANN append has no per-batch output
+    * to recompute), and one that crashed before its pin replays as new.
     */
   def annAppendSink(vectors: DataFrame,
       dbPath: String): DataStreamWriter[Row] =
@@ -434,11 +383,8 @@ object DedupStream {
 
   /** One micro-batch of [[annAppendSink]], exposed for replay testing. */
   def processAnnBatch(batch: DataFrame, batchId: Long, dbPath: String): Unit = {
-    val spark = batch.sparkSession
-    if (batchId > committedBatchId(spark, dbPath)) {
-      graft.ops.Similarity.appendToAnnIndex(batch, dbPath)
-      commitBatchId(spark, dbPath, batchId)
-    }
+    if (isNew(batch, dbPath, batchId))
+      IndexCommit.inBatch(batchId)(graft.ops.Similarity.appendToAnnIndex(batch, dbPath))
   }
 
   /** Streaming SCD2 dimension maintenance: each micro-batch of events
@@ -467,13 +413,10 @@ object DedupStream {
     */
   def processScd2Batch(batch: DataFrame, batchId: Long,
       path: String, changesDir: Option[String] = None): Unit = {
-    val spark = batch.sparkSession
-    if (batchId > committedBatchId(spark, path)) {
-      graft.relational.Scd2.mergeOrInit(spark, path, batch,
-        changesTo = changesDir.map(d =>
-          s"${d.stripSuffix("/")}/batch=$batchId"))
-      commitBatchId(spark, path, batchId)
-    }
+    if (isNew(batch, path, batchId))
+      IndexCommit.inBatch(batchId)(graft.relational.Scd2.mergeOrInit(
+        batch.sparkSession, path, batch,
+        changesTo = changesDir.map(d => s"${d.stripSuffix("/")}/batch=$batchId")))
   }
 
   /** Streaming ingest into a persisted DSIR distribution index: each
@@ -494,12 +437,9 @@ object DedupStream {
   /** One micro-batch of [[dsirAppendSink]], exposed for replay testing. */
   def processDsirBatch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, isTarget: Column, indexPath: String): Unit = {
-    val spark = batch.sparkSession
-    if (batchId > committedBatchId(spark, indexPath)) {
-      graft.ops.TextAnalysis.appendToDsirIndex(
-        batch, idCol, textCol, isTarget, indexPath)
-      commitBatchId(spark, indexPath, batchId)
-    }
+    if (isNew(batch, indexPath, batchId))
+      IndexCommit.inBatch(batchId)(graft.ops.TextAnalysis.appendToDsirIndex(
+        batch, idCol, textCol, isTarget, indexPath))
   }
 
   /** Streaming ingest into a persisted BM25 inverted index: each
@@ -519,19 +459,16 @@ object DedupStream {
   /** One micro-batch of [[bm25AppendSink]], exposed for replay testing. */
   def processBm25Batch(batch: DataFrame, batchId: Long, idCol: String,
       textCol: String, indexPath: String): Unit = {
-    val spark = batch.sparkSession
-    if (batchId > committedBatchId(spark, indexPath)) {
-      graft.ops.TextAnalysis.appendToBm25Index(batch, idCol, textCol,
-        indexPath)
-      commitBatchId(spark, indexPath, batchId)
-    }
+    if (isNew(batch, indexPath, batchId))
+      IndexCommit.inBatch(batchId)(graft.ops.TextAnalysis.appendToBm25Index(
+        batch, idCol, textCol, indexPath))
   }
 
   /** Streaming ingest into a persisted IVF-PQ index — [[annAppendSink]]'s
     * twin over `ops.Similarity.appendToPqIndex`: frozen stored centroids
     * route each batch vector, the STORED codebooks encode it, and only
     * codes land in the label partitions. Same exactly-once replay contract
-    * (persisted batchId high-watermark at `<dbPath>/stream_commit`).
+    * (the batchId high-watermark in the index pin).
     */
   def pqAppendSink(vectors: DataFrame, dbPath: String, dim: Int,
       nSub: Int): DataStreamWriter[Row] =
@@ -542,11 +479,9 @@ object DedupStream {
   /** One micro-batch of [[pqAppendSink]], exposed for replay testing. */
   def processPqBatch(batch: DataFrame, batchId: Long, dbPath: String,
       dim: Int, nSub: Int): Unit = {
-    val spark = batch.sparkSession
-    if (batchId > committedBatchId(spark, dbPath)) {
-      graft.ops.Similarity.appendToPqIndex(batch, dbPath, dim, nSub)
-      commitBatchId(spark, dbPath, batchId)
-    }
+    if (isNew(batch, dbPath, batchId))
+      IndexCommit.inBatch(batchId)(graft.ops.Similarity.appendToPqIndex(
+        batch, dbPath, dim, nSub))
   }
 
   /** Streaming near-dup pairs: every emitted hit pairs a new document with

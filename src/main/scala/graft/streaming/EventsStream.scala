@@ -462,7 +462,9 @@ object EventsStream {
     * min/max — plus the (mn, mx) bounds as a one-row meta table, so every
     * later batch is binned against the SAME edges (comparable fractions,
     * the q52 rule). Laplace-smoothed fractions (+0.5 per bin) keep PSI
-    * finite when a batch misses a bin entirely.
+    * finite when a batch misses a bin entirely. The histogram publishes
+    * before the bounds are pinned, so the pin never describes bins that
+    * are not on disk.
     */
   def writeDriftBaseline(df: DataFrame, valueCol: String,
       path: String): Unit = {
@@ -475,12 +477,12 @@ object EventsStream {
     require(mx > mn,
       s"drift baseline: $valueCol is constant ($mn) — equi-width bins " +
         "are undefined; PSI over a constant needs no histogram")
-    val spark = df.sparkSession
-    graft.sources.ManifestIO.writeMetaDir(
-      spark.sparkContext.hadoopConfiguration, s"$p/meta",
-      Seq("mn" -> mn, "mx" -> mx))
-    histogram(df, valueCol, mn, mx).coalesce(1)
-      .write.mode("overwrite").parquet(s"$p/hist")
+    graft.sources.IndexCommit.commit(df.sparkSession,
+      Seq(graft.sources.IndexCommit.Output(s"$p/hist",
+        graft.sources.IndexCommit.Replace,
+        histogram(df, valueCol, mn, mx).coalesce(1)
+          .write.mode("overwrite").parquet(_))),
+      pin = Some(s"$p/meta" -> Seq("mn" -> mn, "mx" -> mx)))
   }
 
   private def histogram(df: DataFrame, valueCol: String, mn: Double,

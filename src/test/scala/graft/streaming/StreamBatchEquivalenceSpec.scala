@@ -697,6 +697,43 @@ class StreamBatchEquivalenceSpec extends AnyFunSuite {
     DedupStream.processAnnBatch(vecs(6 until 9), 0L, annDir)
     assert(spark.read.parquet(s"$annDir/vectors").count() == 9L,
       "ANN batch 0 after rebuild was dropped as a replay")
+
+    // and for the PQ, BM25 and DSIR indexes: (build, stream batch 0, rows
+    // the index holds for the build's input alone)
+    val docs = (0L until 6L).map(doc).toDF("doc_id", "text")
+    val isT = col("doc_id") % 2 === 0
+    def dsirDocs(p: String) = spark.read.parquet(s"$p/buckets")
+      .agg(sum(col("cs") + col("ct"))).head().getLong(0)
+    Seq[(String, String => Unit, String => Unit, String => Long)](
+      ("rebuildpq",
+        graft.ops.Similarity.buildPqIndex(vecs(0 until 6), _, nClusters = 2,
+          dim = 8, nSub = 2, pqK = 2, iters = 1),
+        DedupStream.processPqBatch(vecs(6 until 9), 0L, _, 8, 2),
+        p => spark.read.parquet(s"$p/codes").count()),
+      ("rebuildbm25",
+        graft.ops.TextAnalysis.buildBm25Index(docs.filter(col("doc_id") < 4),
+          "doc_id", "text", _, nBuckets = 4),
+        DedupStream.processBm25Batch(docs.filter(col("doc_id") >= 4), 0L,
+          "doc_id", "text", _),
+        p => spark.read.parquet(s"$p/doclens").count()),
+      ("rebuilddsir",
+        graft.ops.TextAnalysis.buildDsirIndex(docs.filter(col("doc_id") < 4),
+          "doc_id", "text", isT, _, nBuckets = 16),
+        DedupStream.processDsirBatch(docs.filter(col("doc_id") >= 4), 0L,
+          "doc_id", "text", isT, _),
+        dsirDocs)).foreach { case (name, build, batch0, size) =>
+      val p = java.nio.file.Files.createTempDirectory(name).toString
+      build(p)
+      val built = size(p)
+      batch0(p)
+      assert(DedupStream.committedBatchId(spark, p) == 0L, name)
+      build(p)
+      assert(DedupStream.committedBatchId(spark, p) == -1L,
+        s"$name: rebuild left the old replay high-watermark behind")
+      assert(size(p) == built, name)
+      batch0(p)
+      assert(size(p) > built, s"$name: batch 0 after rebuild was dropped as a replay")
+    }
   }
 
   test("near-MaxValue horizon means keep-everything, not overflow-suppressed") {
