@@ -83,7 +83,7 @@ private[graft] object IndexCommit {
     recover(conf, others.map(_.dir) ++ pin.map(_._1))
     recover(conf, adds.map(_.dir), pin.filter(_ => streamBatch.isDefined).map(_._1))
     graft.Par.jobs(outputs.map(o => () => o.write(stageOf(o.dir))): _*)
-    outputs.foreach(o => publish(conf, o.dir, o.publish, streamBatch))
+    outputs.foreach(o => publish(conf, o.dir, o.publish))
     pin.foreach { case (dir, fields) =>
       ManifestIO.writeMetaDir(conf, dir,
         fields.filter(_._1 != Watermark) ++ streamBatch.map(Watermark -> _))
@@ -155,8 +155,8 @@ private[graft] object IndexCommit {
     }
   }
 
-  private[sources] def publish(conf: Configuration, dir: String, how: Publish,
-      batchId: Option[Long] = None): Unit = {
+  private[sources] def publish(conf: Configuration, dir: String,
+      how: Publish): Unit = {
     val (live, stage, old) = paths(dir)
     val fs = live.getFileSystem(conf)
     how match {
@@ -184,7 +184,7 @@ private[graft] object IndexCommit {
           else if (s.isDirectory) add(s.getPath, new Path(to, n))
           else {
             fs.mkdirs(to)
-            move(fs, s.getPath, new Path(to, batchId.fold(n)(b => s"b$b-$n")))
+            move(fs, s.getPath, new Path(to, streamBatch.fold(n)(b => s"b$b-$n")))
           }
         }
         add(stage, live)
