@@ -1,33 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, normalized
-      // back to timestamp in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the suite generates well over the default 100 unique codegen
-      // classes, so the class cache thrashes and pass 2 recompiles every
-      // stage from scratch — the min-across-passes then never sees a
-      // compile-free run
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // AQE partition-coalescing FLOOR (default 1m): columnar-compressed
-      // shuffle bytes underestimate CPU-bound row work by orders of
-      // magnitude here (a 1.2 MB hamming-verify stage is ~1M candidate
-      // pairs), and the byte floor serialized such stages onto one core.
-      // 64k keeps them wide; at scale stage bytes dwarf either floor, so
-      // the setting is inert there (measured: mm_phash_pairs 3.6->2.0 s,
-      // dedup_ngram_jaccard 4.2->2.5 s, graph_bfs 9.7->5.1 s).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // untimed warmup: JVM/codegen/parquet-reader spin-up shouldn't be
     // attributed to whichever query happens to run first. The *_probe rows
     // time the SEARCH path alone: build their index fixtures here, outside
@@ -126,7 +101,10 @@ object Bench {
     // git-tracked, so full per-query precision lands in the round snapshot
     try java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
       (line + "\n").getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case e: Throwable =>
+      System.err.println(
+        s"[bench] bench_out.json write FAILED: ${e.getMessage}")
+    }
     spark.stop()
     println(line)
     // The driver parses only the last ~2000 chars of stdout, and 90 query

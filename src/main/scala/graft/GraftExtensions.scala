@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** SQL surface for graft's custom Catalyst expressions, so
   * `spark.sql("SELECT kmer_encode(s, 'ACDE...')")` works next to the Column
-  * API. Register either via
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
+  * API. Register either via a session builder's
+  * `.withExtensions(new GraftExtensions)` or
   * `GraftExtensions.register(spark)` on a live session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.SparkSession
   * 9.7→5.1 s).
   *
   * Applied at most once per session, from [[Tables.t]] (the funnel every
-  * declared query's table load passes through) and the harness mains, and
+  * declared query's table load passes through), and
   * logged (key, old value, new value) when it overrides. A value the
   * session ALREADY carries beyond Spark's default is respected — an
   * operator who tuned the floor deliberately keeps their setting. An
@@ -26,9 +26,11 @@ import org.apache.spark.sql.SparkSession
   * `SPARK_GRAFT_MIN_PARTITION_SIZE` overrides the engine default.
   */
 object Tune {
-  private val MinPartitionSizeKey =
+  private[graft] val MinPartitionSizeKey =
     "spark.sql.adaptive.coalescePartitions.minPartitionSize"
   private val SparkDefault = "1MB"
+  private[graft] def floor: String =
+    sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k")
 
   private val tuned = java.util.Collections.synchronizedSet(
     java.util.Collections.newSetFromMap(
@@ -39,7 +41,6 @@ object Tune {
     if (!tuned.add(spark)) return
     val cur = spark.conf.getOption(MinPartitionSizeKey)
     if (cur.forall(_.equalsIgnoreCase(SparkDefault))) {
-      val floor = sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k")
       spark.conf.set(MinPartitionSizeKey, floor)
       org.slf4j.LoggerFactory.getLogger(getClass).info(
         s"$MinPartitionSizeKey: ${cur.getOrElse(SparkDefault)} -> $floor")

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long, normalized
-      // back to timestamp in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 43 queries generate well over the default 100 unique codegen
-      // classes — keep them all compiled (see Bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // match Bench's AQE coalescing floor (see Bench.scala): correctness
-      // must run the same plans the bench times
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for fast local single-query
     // differentials (tools/check.py); the driver sets nothing => all.

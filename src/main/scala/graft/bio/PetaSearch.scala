@@ -462,18 +462,4 @@ object PetaSearch {
     val alis = search(spark, queries, targets, params)
     toM8(alis, queries, targets)
   }
-
-  /** FASTA-in / custom-column-out (`--format-output`): same search, columns
-    * picked from the toM8Custom vocabulary.
-    */
-  def easySearchCustom(spark: SparkSession, queryFasta: String,
-      targetFasta: String, columns: Seq[String],
-      params: Params = Params()): DataFrame = {
-    val queries = Fasta.read(spark, queryFasta).cache()
-    val targets =
-      if (targetFasta == queryFasta) queries
-      else Fasta.read(spark, targetFasta).cache()
-    val alis = search(spark, queries, targets, params)
-    toM8Custom(alis, queries, targets, columns)
-  }
 }

@@ -113,7 +113,7 @@ object AsofJoin {
     *                    row through the key shuffle and its window sort —
     *                    at 100 TB a multi-KB document row in `_lrow` is
     *                    the dominant shuffle payload (measured: see
-    *                    `tools/AsofScale`), so project early and join any
+    *                    `tools/Scale asof`), so project early and join any
     *                    remaining columns back by id afterwards if truly
     *                    needed. Empty (default) = carry everything.
     */

@@ -372,8 +372,8 @@ object Dedup {
   /** Touched-key upper bound deciding the prune strategy: signature rows ×
     * bands (every signed doc lands in every band; distinct-ing bucket
     * values only shrinks it). Takes the COUNT, not a frame: append counts
-    * its already-cached signature frame (free beyond the cache
-    * materialization it needs anyway) and search counts the input docs —
+    * its checkpointed signature frame (the count is the pass that
+    * materializes the checkpoint) and search counts the input docs —
     * re-counting an uncached upstream per call was the waste the
     * round-7 advice flagged in per-micro-batch ingest.
     */
@@ -410,17 +410,19 @@ object Dedup {
     IndexCommit.recover(conf, Seq(s"$path/signatures"),
       IndexCommit.streamBatch.map(_ => s"$path/meta"))
     val (newSigs, numHashes) = sigsForIndex(newDocs, idCol, textCol, path)
-    val cached = newSigs.cache()
-    // count() pins the cache AND supplies the prune-strategy bound in one
-    // pass — the raw input frame is never executed a second time
-    val pairs = indexPairs(cached, path, numHashes, rowsPerBand, threshold,
+    // a checkpoint private to this call, not cache(): CacheManager shares
+    // one entry between identical plans, so an unpersist here would also
+    // drop a caller's (or a concurrent append's) cache of the same
+    // signatures. count() materializes it AND supplies the prune-strategy
+    // bound in one pass — the raw input frame is never executed twice
+    val sigs = newSigs.localCheckpoint(eager = false)
+    val pairs = indexPairs(sigs, path, numHashes, rowsPerBand, threshold,
       maxBucket,
-      touchedFits(cached.count(), numHashes, rowsPerBand, maxBroadcastKeys))
+      touchedFits(sigs.count(), numHashes, rowsPerBand, maxBroadcastKeys))
       .localCheckpoint() // eager: snapshot pairs BEFORE the append lands
     IndexCommit.commit(newDocs.sparkSession, Seq(IndexCommit.Output(
-      s"$path/signatures", IndexCommit.Add, cached.write.parquet(_))),
+      s"$path/signatures", IndexCommit.Add, sigs.write.parquet(_))),
       IndexCommit.batchPin(conf, s"$path/meta"))
-    cached.unpersist()
     pairs
   }
 

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.bio.{Align, PetaSearch, QueryTable}
-import org.apache.spark.sql.SparkSession
+import graft.bio.PetaSearch
 
 /** CLI-equivalent of the reference's `easy-petasearch QUERY_FASTA
   * TARGET_FASTA RESULT_M8` (`src/workflow/easypetasearch.cpp`):
@@ -73,33 +72,21 @@ object EasyPetasearch {
     require(!(profileSearch && bothStrands),
       "--profile-search and --both-strands are mutually exclusive: a PSSM " +
         "profile has no nucleotide reverse complement")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("easy-petasearch")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
     val m8 =
       if (profileSearch)
         PetaSearch.easyProfileSearch(spark, queryFasta, targetFasta, params)
-      else if (bothStrands) {
+      else {
         val queries = graft.bio.Fasta.read(spark, queryFasta).cache()
         val targets =
           if (targetFasta == queryFasta) queries
           else graft.bio.Fasta.read(spark, targetFasta).cache()
-        val alis = PetaSearch.searchBothStrands(spark, queries, targets, params)
-        outfmt match {
-          case Some(cols) => PetaSearch.toM8Custom(alis, queries, targets, cols)
-          case None => PetaSearch.toM8(alis, queries, targets)
-        }
-      } else outfmt match {
-        case Some(cols) =>
-          PetaSearch.easySearchCustom(spark, queryFasta, targetFasta, cols, params)
-        case None =>
-          PetaSearch.easySearch(spark, queryFasta, targetFasta, params)
+        val alis =
+          if (bothStrands)
+            PetaSearch.searchBothStrands(spark, queries, targets, params)
+          else PetaSearch.search(spark, queries, targets, params)
+        outfmt.fold(PetaSearch.toM8(alis, queries, targets))(
+          PetaSearch.toM8Custom(alis, queries, targets, _))
       }
     PetaSearch.writeM8(m8, outDir)
     // the m8 write materialized every cached frame (both-strands corpus,

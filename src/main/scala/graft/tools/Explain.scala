@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.Registry
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print formatted physical plans for selected queries.
   * `runMain graft.tools.Explain [sfDir] [name ...]` (no names = a default
@@ -14,18 +13,11 @@ object Explain {
     val names =
       if (args.length > 1) args.tail.toSeq
       else Seq("q2_join_agg", "bio_prefilter", "emb_cosine_topk", "q1_agg")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session()
     spark.sparkContext.setLogLevel("ERROR")
-    val byName = Registry.byName
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      byName.get(n) match {
+      Registry.byName.get(n) match {
         case Some(q) => q.run(spark, sfDir).explain("formatted")
         case None => println(s"unknown query: $n")
       }

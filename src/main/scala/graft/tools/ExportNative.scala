@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.bio.{Fasta, KmerIndex, SraInterop}
-import org.apache.spark.sql.SparkSession
 
 /** Export a FASTA to the reference's NATIVE formats — SRA DB
   * (`convert2sradb` layout) and k-mer table (`createkmertable` layout) —
@@ -22,13 +21,8 @@ object ExportNative {
       "usage: ExportNative <fasta> <outDbBase> [k]")
     val (fasta, outBase) = (args(0), args(1))
     val k = if (args.length > 2) args(2).toInt else KmerIndex.DefaultK
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .appName("export-native")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${graft.Session.cpus}]"))
     try {
       val seqs = Fasta.read(spark, fasta).cache()
       SraInterop.writeSraDb(seqs, outBase)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Dev tool: derive a K×-larger synthetic corpus from an existing sf dir
   * by unioning K salted replicas (the BASELINE.md §e scale spot-bench).
@@ -37,11 +37,7 @@ object MakeScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("target/scale/sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     // one global stride across all tables: max source id, rounded up to a
     // multiple of every registry %-modulus (lcm(10,20,50,100) = 100),
     // floored at the historical 1,000,000
@@ -60,19 +56,20 @@ object MakeScale {
     }.max
     val stride = math.max(1000000L, (maxId / 100L + 1L) * 100L)
     println(s"[makescale] stride=$stride (max source id $maxId)")
-    // persist the stride next to the output: downstream tools (PhashScale)
-    // must group replicas by id/stride, and a manually-synced env var
+    // persist the stride next to the output: downstream scale legs (phash,
+    // hardneg) must group replicas by id/stride, and a manually-synced env var
     // silently corrupts their measurement whenever the derived stride
     // exceeds the historical default (review finding)
-    spark.createDataFrame(java.util.List.of(
-        org.apache.spark.sql.Row(stride)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("stride",
-          org.apache.spark.sql.types.LongType))))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dst/scale_meta")
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    spark.range(0, 1, 1, 1).select(F.lit(stride).as("stride"))
+      .write.mode("overwrite").parquet(s"$dst/scale_meta")
+    /** `t`'s k replicas, replica i = `f(source table, i)`, written to dst. */
+    def replicate(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
+      val in = spark.read.parquet(s"$src/$t.parquet")
+      (0 until k).map(f(in, _)).reduce(_ unionByName _)
+        .repartition(32).write.mode("overwrite").parquet(s"$dst/$t.parquet")
+    }
     val stop = Seq("the", "a", "of", "and", "is", "to", "in")
-    val docsK = (0 until k).map { i =>
+    replicate("documents") { (docs, i) =>
       val salted = F.array_join(
         F.transform(F.split(F.col("text"), "\\s+"), t =>
           F.when(F.lower(t).isin(stop: _*), t)
@@ -82,20 +79,15 @@ object MakeScale {
         (F.col("doc_id") + F.lit(i * stride)).as("doc_id"),
         salted.as("text"),
         F.col("lang"), F.col("source"), F.col("n_chars"))
-    }.reduce(_ unionByName _)
-    docsK.repartition(32).write.mode("overwrite")
-      .parquet(s"$dst/documents.parquet")
-    val emb = spark.read.parquet(s"$src/embeddings.parquet")
-    val embK = (0 until k).map { i =>
+    }
+    replicate("embeddings") { (emb, i) =>
       emb.select(
         (F.col("vec_id") + F.lit(i * stride)).as("vec_id"),
         F.transform(F.col("embedding"), (x, j) =>
           x + F.lit(0.02f * i) * F.when(j % 2 === 0, F.lit(1.0f))
             .otherwise(F.lit(-1.0f))).as("embedding"),
         F.col("label"))
-    }.reduce(_ unionByName _)
-    embK.repartition(32).write.mode("overwrite")
-      .parquet(s"$dst/embeddings.parquet")
+    }
     // events replicate on the USER axis (user_id + replica stride,
     // event_id re-keyed, ts untouched): every per-user construct —
     // windows, sessions, funnels, SCD2 histories, as-of matches — is
@@ -105,16 +97,13 @@ object MakeScale {
     // (per-hour window groups keep k× the rows, the shuffle's real
     // scale axis). Closes the standing "events rows have no ×10 leg"
     // gap (BASELINE §e).
-    val ev = spark.read.parquet(s"$src/events.parquet")
-    val evK = (0 until k).map { i =>
+    replicate("events") { (ev, i) =>
       ev.select(
         (F.col("event_id") + F.lit(i * stride)).as("event_id"),
         F.col("ts"),
         (F.col("user_id") + F.lit(i * stride)).as("user_id"),
         F.col("event_type"), F.col("value"), F.col("props"))
-    }.reduce(_ unionByName _)
-    evK.repartition(32).write.mode("overwrite")
-      .parquet(s"$dst/events.parquet")
+    }
     // orders/lineitem replicate on the ORDERKEY axis — and DELIBERATELY
     // amplify skew: within every replica, the lineitem rows of 50% of
     // orderkeys (key % 100 < 50) are re-routed onto ONE global hot key
@@ -125,21 +114,16 @@ object MakeScale {
     // sort that key's rows in one task while saltedHotKeys spreads them.
     // Everything else re-keys by +i*stride: per-replica join fan-out is
     // exactly the source's, disjoint across replicas.
-    val ord = spark.read.parquet(s"$src/orders.parquet")
-    val li = spark.read.parquet(s"$src/lineitem.parquet")
-    val hotKey = ord.agg(F.min(F.col("o_orderkey"))).head().getLong(0)
-    val ordK = (0 until k).map { i =>
+    val hotKey = spark.read.parquet(s"$src/orders.parquet")
+      .agg(F.min(F.col("o_orderkey"))).head().getLong(0)
+    replicate("orders") { (ord, i) =>
       ord.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(i * stride))
-    }.reduce(_ unionByName _)
-    ordK.repartition(32).write.mode("overwrite")
-      .parquet(s"$dst/orders.parquet")
-    val liK = (0 until k).map { i =>
+    }
+    replicate("lineitem") { (li, i) =>
       li.withColumn("l_orderkey",
         F.when(F.col("l_orderkey") % 100 < 50, F.lit(hotKey))
           .otherwise(F.col("l_orderkey") + F.lit(i * stride)))
-    }.reduce(_ unionByName _)
-    liK.repartition(32).write.mode("overwrite")
-      .parquet(s"$dst/lineitem.parquet")
+    }
     // dimension tables pass through UNCHANGED: orders keep o_custkey
     // un-offset, so every replica joins the same 1× dims — the realistic
     // scale shape (facts grow with time, dims don't) and exactly what a

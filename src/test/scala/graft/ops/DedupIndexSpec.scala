@@ -82,6 +82,25 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(p.columns.toSeq == Seq("a", "b", "est_jaccard"))
   }
 
+  test("append leaves a caller's cache of the same signatures in place") {
+    val dir = java.nio.file.Files.createTempDirectory("dedupidxc").toString
+    Dedup.buildDedupIndex((0L until 20L).map(doc).toDF("doc_id", "text"),
+      "doc_id", "text", dir, shingleSize = 2, numHashes = 8)
+    val docs = (20L until 40L).map(doc).toDF("doc_id", "text")
+    // the caller's frame has the append's own signature plan, so the two
+    // would share one CacheManager entry
+    val sigs = Dedup.minhashSignatures(
+      Dedup.shingles(docs, "doc_id", "text", 2), 8).cache()
+    assert(sigs.count() == 20L)
+    val pairs = Dedup.appendToDedupIndex(docs, "doc_id", "text", dir,
+      rowsPerBand = 2, threshold = 0.5).collect()
+    assert(sigs.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the append dropped the caller's cache")
+    assert(pairs.nonEmpty && pairs.forall(r => r.getLong(1) >= 20L))
+    assert(spark.read.parquet(s"$dir/signatures").count() == 40L)
+    sigs.unpersist()
+  }
+
   test("broadcast guard: big batches prune the stored side with a shuffled semi-join, not a broadcast") {
     val dir = java.nio.file.Files.createTempDirectory("dedupidxg").toString
     Dedup.buildDedupIndex((0L until 20L).map(doc).toDF("doc_id", "text"),
