@@ -268,19 +268,10 @@ object BioQueries {
     * stripped, wrapped sequence lines joined) — shared by the profile
     * queries below.
     */
-  private lazy val msaAligned: Vector[String] = {
-    val in = getClass.getResourceAsStream("/MSA_Cas7-11_multiline.fa")
-    val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-    val msa = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    lines.foreach { l =>
-      if (l.startsWith(">")) {
-        if (cur.nonEmpty) { msa += cur.toString; cur.clear() }
-      } else cur ++= l.trim
-    }
-    if (cur.nonEmpty) msa += cur.toString
-    msa.toVector
-  }
+  private lazy val msaAligned: Vector[String] = Fasta.localRecords(
+    scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/MSA_Cas7-11_multiline.fa"), "UTF-8")
+      .getLines()).map(_._2)
 
   /** F4 profile search: one PSSM profile built from the bundled Cas7-11 MSA
     * (all 21 aligned rows), searched against the degapped member sequences —

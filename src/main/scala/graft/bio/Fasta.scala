@@ -49,6 +49,26 @@ object Fasta {
       .select("seqId", "header", "name", "seq", "seqLen")
   }
 
+  /** (name, residues) of each record that has residues, parsed on the
+    * driver from FASTA lines: wrapped lines trimmed and joined as they are
+    * (no cleaning, gaps kept), name = the header up to its first space. For
+    * small local files (an MSA, a dev tool's probe set); a corpus goes
+    * through [[read]].
+    */
+  def localRecords(lines: Iterator[String]): Vector[(String, String)] = {
+    val out = Vector.newBuilder[(String, String)]
+    var name = ""
+    val cur = new StringBuilder
+    def flush(): Unit =
+      if (cur.nonEmpty) { out += name -> cur.toString; cur.clear() }
+    lines.foreach { l =>
+      if (l.startsWith(">")) { flush(); name = l.drop(1).takeWhile(_ != ' ') }
+      else cur ++= l.trim
+    }
+    flush()
+    out.result()
+  }
+
   /** FASTQ ingest (4-line records: @header / seq / + / qual; quality lines
     * may START with '@', so records cannot be split by a delimiter).
     *

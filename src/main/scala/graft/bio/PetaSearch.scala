@@ -302,18 +302,18 @@ object PetaSearch {
     // totals computed once at build time so query-time never rescans the
     // corpus
     commitKmers(spark, dbPath,
-      KmerIndex.buildWithPos(persisted, params.k, params.mode.kmerAlphabet),
+      KmerIndex.candidates(persisted, params.k, params.mode.kmerAlphabet),
       totals(persisted))
   }
 
-  /** `kmers/` through a whole-directory swap, then the (dbResCount, nSeqs)
-    * pin.
+  /** `kmers/` (the A1 winners of `candidates`, see [[KmerIndex.write]])
+    * through a whole-directory swap, then the (dbResCount, nSeqs) pin.
     */
   private def commitKmers(spark: SparkSession, dbPath: String,
-      kmers: DataFrame, t: (Long, Long)): Unit =
+      candidates: DataFrame, t: (Long, Long)): Unit =
     IndexCommit.commit(spark,
       Seq(IndexCommit.Output(s"$dbPath/kmers", IndexCommit.Replace,
-        KmerIndex.write(kmers, _))),
+        KmerIndex.write(candidates, _))),
       pin = Some(s"$dbPath/meta" -> Seq("dbResCount" -> t._1, "nSeqs" -> t._2)))
 
   /** (residues, sequences) of a sequence table; 0 residues when empty. */
@@ -331,16 +331,18 @@ object PetaSearch {
       (field("dbResCount"), field("nSeqs"))
     }
 
-  /** Incrementally add sequences to a persisted target DB: ingest ONLY the
-    * new FASTA, never rescan the existing corpus. Exact, not approximate:
-    * the A1 representative rule (longest sequence, ties to smallest id,
-    * then smallest position) is an associative max, so re-reducing the
-    * STORED winners against the new batch's winners yields the identical
+  /** Incrementally add sequences to a persisted target DB: extract k-mers
+    * from ONLY the new FASTA, never from the existing corpus. Exact, not
+    * approximate: the A1 representative rule (longest sequence, ties to
+    * smallest id, then smallest position) is an associative max, so reducing
+    * the STORED winners together with the new batch's raw k-mer candidates,
+    * in the one range exchange of [[KmerIndex.write]], yields the identical
     * index to a full rebuild (spec-pinned equality). New sequences take ids
-    * after the current maximum; metadata updates by addition. At 100 TB
-    * this is the difference between an O(new batch) nightly ingest and an
-    * O(corpus) re-extraction — the reference has no equivalent
-    * (createkmertable always rebuilds its table whole).
+    * after the current maximum; metadata updates by addition. Only the
+    * extraction is O(new batch): the exchange and the `kmers/` rewrite still
+    * carry every stored row, so the append is O(DB) in shuffle and write.
+    * The reference has no equivalent (createkmertable always rebuilds its
+    * table whole).
     *
     * The merged `kmers/` and the new totals commit like a build's, but the
     * append is NOT idempotent: the batch lands in `sequences/` before that
@@ -365,10 +367,8 @@ object PetaSearch {
     newSeqs.write.mode("append").parquet(s"$dbPath/sequences")
     val appended = spark.read.parquet(s"$dbPath/sequences")
       .filter(col("seqId") >= offset)
-    val newIdx = KmerIndex.buildWithPos(appended, params.k,
-      params.mode.kmerAlphabet)
-    val merged = KmerIndex.representatives(
-      spark.read.parquet(s"$dbPath/kmers").unionByName(newIdx))
+    val merged = spark.read.parquet(s"$dbPath/kmers").unionByName(
+      KmerIndex.candidates(appended, params.k, params.mode.kmerAlphabet))
     val (batchRes, batchN) = totals(appended)
     commitKmers(spark, dbPath, merged, (oldRes + batchRes, oldN + batchN))
   }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.bio.{Matrices, QueryTable}
+import graft.bio.{Fasta, Matrices, QueryTable}
 
 /** Dev tool: similar-k-mer expansion sets for sampled windows, same format
   * as the reference-probe harness around `FixedKmerGenerator` — for the F2
@@ -14,14 +14,8 @@ object KmerExpandDump {
     val thr = args(1).toInt
     val maxKmers = args(2).toInt
     val k = 9
-    val lines = scala.io.Source.fromFile(args(0)).getLines().toVector
-    val rows = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    lines.foreach { l =>
-      if (l.startsWith(">")) { if (cur.nonEmpty) { rows += cur.toString; cur.clear() } }
-      else cur ++= l.trim
-    }
-    if (cur.nonEmpty) rows += cur.toString
+    val rows = Fasta.localRecords(scala.io.Source.fromFile(args(0)).getLines())
+      .map(_._2)
     val out = new StringBuilder
     rows.zipWithIndex.foreach { case (seq, s) =>
       val ords = seq.map(c => m.aa2num(c & 0xff)).toArray

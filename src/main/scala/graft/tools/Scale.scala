@@ -125,18 +125,36 @@ object Scale {
     // total output scales exactly ×n. Wall-clock should then show the
     // ~linear index-build term: index build, prefilter join, and align all
     // key on dbId, so ×n is n× the work at the same parallelism.
-    Leg("bio", Nil, "x1 vs x<n> replica DBs, n default 10") { (r, _, n) =>
+    // The persisted-DB arms put the n replicas in ONE DB as distinct seqIds
+    // (every k-mer occurs n times: the worst case for the index write's
+    // range exchange, which has no map-side combine), then append one more
+    // replica, which must add no k-mer.
+    Leg("bio", Nil, "x1 vs x<n> replicas, n default 10") { (r, _, n) =>
       val spark = r.spark
       // the bundled Cas7-11 fixture, degapped (the bio_selfsearch corpus)
       val in = getClass.getResourceAsStream("/MSA_Cas7-11_multiline.fa")
-      val tmp = java.nio.file.Files.writeString(
-        java.nio.file.Files.createTempFile("cas711", ".fa"),
-        scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(l => if (l.startsWith(">")) l else l.replaceAll("[-.]", ""))
-          .mkString("\n")).toFile
-      tmp.deleteOnExit()
-      val queries = Fasta.read(spark, tmp.getAbsolutePath).localCheckpoint()
+      val fasta = scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(l => if (l.startsWith(">")) l else l.replaceAll("[-.]", ""))
+        .mkString("\n")
+      /** A FASTA file of copies `from until to`, each under its own names. */
+      def copies(from: Int, to: Int): String = {
+        val f = java.nio.file.Files.writeString(
+          java.nio.file.Files.createTempFile("cas711", ".fa"),
+          (from until to).map(i => fasta.replace(">", s">r${i}_"))
+            .mkString("\n")).toFile
+        f.deleteOnExit()
+        f.getAbsolutePath
+      }
+      val queries = Fasta.read(spark, copies(0, 1)).localCheckpoint()
       def run(replicas: Int): (Arm, Map[Long, Long]) = {
+        val (db, fa, one) = (s"target/scale/bio_db_x$replicas",
+          copies(0, replicas), copies(replicas, replicas + 1))
+        r.arm(s"buildTargetDb x$replicas")(PetaSearch.buildTargetDb(spark, fa, db))
+        val unique = spark.read.parquet(s"$db/kmers").count()
+        r.phase(s"appendToTargetDb x$replicas+1")(
+          PetaSearch.appendToTargetDb(spark, one, db))
+        require(spark.read.parquet(s"$db/kmers").count() == unique,
+          "an appended replica changed the unique k-mer count")
         // every sequence in every DB under the same per-DB seqIds — the
         // output-invariant construction (a 21-seq × n frame; the cross
         // join is the corpus DEFINITION here, not a query plan)

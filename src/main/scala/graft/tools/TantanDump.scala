@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.bio.{Matrices, Tantan}
+import graft.bio.{Fasta, Matrices, Tantan}
 
 /** Dev tool: per-sequence masked-position bitmaps from our tantan model,
   * same format as the reference-probe harness — for differential masking
@@ -11,24 +11,16 @@ import graft.bio.{Matrices, Tantan}
 object TantanDump {
   def main(args: Array[String]): Unit = {
     val m = Matrices.vtml80Seed
-    val lines = scala.io.Source.fromFile(args(0)).getLines().toVector
     val out = new StringBuilder
-    var name = ""
-    val cur = new StringBuilder
-    def flush(): Unit = if (cur.nonEmpty) {
-      val ords = cur.toString.map(c => m.aa2num(c & 0xff)).toArray
-      val masked = Tantan.mask(ords, m)
-      out ++= name
-      out += ' '
-      ords.indices.foreach(i => out += (if (masked(i) != ords(i)) '1' else '0'))
-      out += '\n'
-      cur.clear()
+    Fasta.localRecords(scala.io.Source.fromFile(args(0)).getLines()).foreach {
+      case (name, seq) =>
+        val ords = seq.map(c => m.aa2num(c & 0xff)).toArray
+        val masked = Tantan.mask(ords, m)
+        out ++= name
+        out += ' '
+        ords.indices.foreach(i => out += (if (masked(i) != ords(i)) '1' else '0'))
+        out += '\n'
     }
-    lines.foreach { l =>
-      if (l.startsWith(">")) { flush(); name = l.drop(1).takeWhile(_ != ' ') }
-      else cur ++= l.trim
-    }
-    flush()
     print(out)
   }
 }

@@ -117,6 +117,69 @@ class ModesSpec extends AnyFunSuite {
     assert(ri == rf && ri.nonEmpty)
   }
 
+  test("appendToTargetDb: batch k-mers shared with the stored index take over by the A1 rule") {
+    val rnd = new scala.util.Random(17)
+    def protein(n: Int) =
+      Array.fill(n)("ACDEFGHIKLMNPQRSTVWY"(rnd.nextInt(20))).mkString
+    val stored = (0 until 3).map(i => (s"s$i", protein(80)))
+    val motif = stored(2)._2.take(20)
+    val batch = Seq(
+      // longer and holds all of s0's k-mers: the batch row wins them
+      ("longer", protein(10) + stored(0)._2 + protein(10)),
+      // equal length, larger id: the stored s1 keeps every k-mer
+      ("copy", stored(1)._2),
+      // longer than s2 and repeats s2's first 12 k-mers: it wins them, each
+      // at its FIRST position
+      ("repeat", protein(10) + motif + protein(15) + motif + protein(40)))
+    val faA = writeFasta(stored)
+    val faB = writeFasta(batch)
+    val faAll = writeFasta(stored ++ batch)
+    val dbInc = java.nio.file.Files.createTempDirectory("dbtake").toString
+    val dbFull = java.nio.file.Files.createTempDirectory("dbtakefull").toString
+    PetaSearch.buildTargetDb(spark, faA, dbInc)
+    PetaSearch.appendToTargetDb(spark, faB, dbInc)
+    PetaSearch.buildTargetDb(spark, faAll, dbFull)
+
+    // the A1 rule in plain Scala over every k-mer occurrence:
+    // (kmer, seqId, seqLen, tpos) rows, longest, then smallest id, then
+    // smallest position
+    val cands = KmerIndex.candidates(Fasta.read(spark, faAll)).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3))).toSeq
+    val expected = cands.groupBy(_._1).values
+      .map(_.maxBy { case (_, id, len, pos) => (len, -id, -pos) }).toSet
+    def rows(db: String) = spark.read.parquet(s"$db/kmers").collect()
+      .map(r => (r.getAs[Long]("kmer"), r.getAs[Long]("seqId"),
+        r.getAs[Int]("seqLen"), r.getAs[Int]("tpos"))).toSeq
+    def assertExpected(db: String): Unit = {
+      val got = rows(db)
+      val (extra, missing) = (got.toSet -- expected, expected -- got.toSet)
+      assert(got.size == got.toSet.size && extra.isEmpty && missing.isEmpty,
+        s"$db: ${got.size} rows; unexpected ${extra.take(3)} of ${extra.size}," +
+          s" missing ${missing.take(3)} of ${missing.size}")
+    }
+    assertExpected(dbInc)
+    assertExpected(dbFull)
+
+    // each branch of the merge is exercised: ids 0-2 stored, 3-5 the batch
+    val storedKmers = cands.filter(_._2 < 3).map(_._1).toSet
+    def wonBy(id: Long) = expected.filter(_._2 == id).map(_._1)
+    assert(storedKmers.intersect(wonBy(3)).size == 72) // longer takes s0's
+    assert(wonBy(4).isEmpty) // the copy wins nothing ...
+    assert(wonBy(1) == cands.filter(_._2 == 4).map(_._1).toSet) // ... s1 keeps
+    val repeated = cands.filter(_._2 == 5).groupBy(_._1).filter(_._2.size > 1)
+    assert(repeated.size == 12)
+    repeated.foreach { case (kmer, occ) =>
+      val first = occ.map(_._4).min
+      assert(first < 45 && expected.contains((kmer, 5L, 105, first)))
+    }
+
+    val queries = Fasta.read(spark, faB).cache()
+    def hits(db: String) = PetaSearch.searchIndexed(spark, queries, db)
+      .select("queryId", "targetId", "bits").collect().map(_.toSeq).toSet
+    val ri = hits(dbInc)
+    assert(ri == hits(dbFull) && ri.nonEmpty)
+  }
+
   test("appendToTargetDb: append into an EMPTY existing DB (null max(seqId))") {
     val rnd = new scala.util.Random(13)
     def protein(n: Int) =
