@@ -37,13 +37,8 @@ object Registry {
 
 /** Parquet table loaders for the driver corpus (TESTDATA.md). */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // engine-default session tuning rides the table-load funnel so plain
-    // SparkEntry consumers get the same plans Bench/Verify measure
-    // (idempotent; see Tune)
-    Tune.session(spark)
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

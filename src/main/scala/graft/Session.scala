@@ -17,13 +17,25 @@ import org.apache.spark.sql.SparkSession
   *   - a 5000-entry codegen class cache: the suite generates well over the
   *     default 100 unique classes, so the cache thrashes and Bench's
   *     second pass recompiles every stage from scratch;
-  *   - [[Tune]]'s AQE coalescing floor (64k, or
-  *     `SPARK_GRAFT_MIN_PARTITION_SIZE`), set here rather than left to
-  *     `Tables.t`, so a main that reads parquet directly runs the plans
-  *     the bench times.
+  *   - AQE's partition-coalescing FLOOR
+  *     (`spark.sql.adaptive.coalescePartitions.minPartitionSize`, Spark
+  *     default 1MB) at 64k, or `SPARK_GRAFT_MIN_PARTITION_SIZE`:
+  *     columnar-compressed shuffle bytes underestimate CPU-bound row work
+  *     by orders of magnitude (a 1.2 MB hamming-verify stage is ~1M
+  *     candidate pairs), and the 1MB floor serialized such stages onto
+  *     one core. 64k keeps them wide; at production scale stage bytes
+  *     dwarf either floor, so the setting is inert there (measured r17:
+  *     mm_phash_pairs 3.6→2.0 s, dedup_ngram_jaccard 4.2→2.5 s, graph_bfs
+  *     9.7→5.1 s). Sessions built elsewhere (a `SparkEntry` consumer's,
+  *     the test suite's) keep Spark's 1MB.
   */
 object Session {
   val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  private val MinPartitionSizeKey =
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+  private def floor: String =
+    sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "64k")
 
   def apply(master: String = s"local[$cpus]"): SparkSession = {
     val spark = SparkSession.builder()
@@ -33,7 +45,7 @@ object Session {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config(Tune.MinPartitionSizeKey, Tune.floor)
+      .config(MinPartitionSizeKey, floor)
       .getOrCreate()
     spark.conf.set("spark.sql.shuffle.partitions",
       spark.sparkContext.defaultParallelism)

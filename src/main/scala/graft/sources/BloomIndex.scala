@@ -19,21 +19,23 @@ import org.apache.spark.sql.functions._
   *     rename-swap — geometry and bits commit in ONE atomic move, so a
   *     probe can never hash against a stale geometry (the failure mode a
   *     separate meta file written before/after the bits would reopen).
-  *   - probe: the key set explodes into the SAME contributions, bit-OR
-  *     collapsed per (key, word); a file is a candidate when every probe
-  *     word's mask is contained in the file's bits (`(bits & mask) = mask`
-  *     for all words — counted against the key's own distinct-word count,
-  *     so hash-collision-folded words can't under-count). The join runs
-  *     sidecar × (k·|keys|) rows; only matched FILE NAMES are collected
-  *     (bounded by the file count, the classic index-read contract).
-  *   - read: only candidate files are opened, with the exact IN filter
-  *     re-applied — false positives cost I/O, never correctness.
+  *   - read: through [[IndexedTable.table]]: a plain equality or `isin`
+  *     filter (or SQL WHERE) on the key column, whose planner bloom leg
+  *     probes the key set in ONE batched job. The keys explode into the
+  *     SAME contributions, bit-OR collapsed per (key, word); a file is a
+  *     candidate when every probe word's mask is contained in the file's
+  *     bits (`(bits & mask) = mask` for all words — counted against the
+  *     key's own distinct-word count, so hash-collision-folded words
+  *     can't under-count). The join runs sidecar × (k·|keys|) rows; only
+  *     matched FILE NAMES are collected (bounded by the file count, the
+  *     classic index-read contract). The full filter still runs over the
+  *     candidate files — false positives cost I/O, never correctness.
   *
   * Table layout: `build` hash-partitions rows by the key into `nFiles`
   * files, so all rows of one key land in ONE file and a hit reads one
   * file (+ fp). At 100 TB the sidecar is (files × m/64) longs — a TABLE,
   * scanned distributed; the driver sees only matched file names.
-  * Single-writer (like the other persisted indexes): a probe racing a
+  * Single-writer (like the other persisted indexes): a read racing a
   * full REBUILD can error on vanished data files, but never silently
   * drop rows.
   */
@@ -84,39 +86,48 @@ object BloomIndex {
     val kind = hashDomainOf(df.schema(keyCol).dataType)
     df.repartition(nFiles, col(keyCol))
       .write.mode("overwrite").parquet(tablePath)
+    val rows = bits(spark, Seq(tablePath), keyCol, kind, mBits, k, nFiles)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
+      IndexCommit.Replace, rows.write.mode("overwrite").parquet(_))))
+  }
+
+  /** The sidecar rows of the data `files`: per (file, word), the OR of the
+    * k contributions of every key, with the geometry, the key column and
+    * its hash domain as constant columns — so the planner
+    * ([[SkippingFileIndex]]) can recognize equality on the key and probe
+    * in the right domain.
+    */
+  private def bits(spark: SparkSession, files: Seq[String], keyCol: String,
+      kind: String, mBits: Int, k: Int, nFiles: Int): DataFrame =
     // Cast to the recorded domain on the BUILD side: xxhash64 is
     // input-type-sensitive, so an INT key column hashed at its native
     // type would never match a probe's LongType keys — a silent false
     // negative. Casting both sides to the domain type keeps build and
     // probe hashing the same bytes; string keys hash natively (no cast
     // loss is possible — the cast is identity).
-    val back = spark.read.parquet(tablePath)
+    spark.read.parquet(files: _*)
       .select(col(keyCol).cast(kind).as("k"), input_file_name().as("f"))
-    val bits = back
       .select(col("f"), explode(contribs(mBits, k)).as("c"))
       .groupBy(col("f"), col("c.w").as("w"))
       .agg(bit_or(col("c.m")).as("bits"))
       .withColumn("m_bits", lit(mBits))
       .withColumn("k_hashes", lit(k))
       .withColumn("n_files", lit(nFiles))
-      // the indexed column AND its hash domain ride with the bits so
-      // planner integration ([[SkippingFileIndex]]) can recognize
-      // equality predicates on it and probe in the right domain
       .withColumn("key_col", lit(keyCol))
       .withColumn("key_kind", lit(kind))
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
-      IndexCommit.Replace, bits.write.mode("overwrite").parquet(_))))
-  }
 
   /** Append a batch: new key-hash-partitioned files inside the table plus
     * their sidecar rows (geometry read from the pinned sidecar columns —
     * an append can never fork the (m, k) generation). The one-key-one-file
-    * read contract relaxes to one file PER COMMIT; probes stay exact
-    * because blooms are per-file. Crash window (data landed, sidecar rows
-    * not yet appended) is closed on the READ side: [[candidateFiles]]
-    * treats any table file the sidecar does not cover as an unconditional
-    * candidate — a torn append degrades to extra I/O, never to a missed
-    * row (the index's standing contract).
+    * read contract relaxes to one file PER COMMIT; reads stay exact
+    * because blooms are per-file. The batch's sidecar rows are staged as
+    * ONE file and published with one rename ([[IndexCommit]] `Add`), so
+    * each new data file is either fully covered or not covered at all.
+    * The crash window between the two (data landed, sidecar rows not yet
+    * published) is closed on the READ side: [[candidateFiles]] treats any
+    * table file the sidecar does not cover as an unconditional candidate —
+    * a torn append degrades to extra I/O, never to a missed row (the
+    * index's standing contract).
     */
   def append(df: DataFrame, keyCol: String, tablePath: String,
       nFiles: Int = 4): Unit = {
@@ -150,22 +161,14 @@ object BloomIndex {
       .write.mode("append").parquet(tablePath)
     val newFiles = ZoneMap.listDataFiles(spark, tablePath).toSet -- before
     if (newFiles.isEmpty) return // empty batch: nothing to index, no-op
-    spark.read.parquet(newFiles.toSeq: _*)
-      .select(col(keyCol).cast(kind).as("k"), input_file_name().as("f"))
-      .select(col("f"), explode(contribs(mBits, k)).as("c"))
-      .groupBy(col("f"), col("c.w").as("w"))
-      .agg(bit_or(col("c.m")).as("bits"))
-      .withColumn("m_bits", lit(mBits))
-      .withColumn("k_hashes", lit(k))
-      .withColumn("n_files", lit(nf))
-      .withColumn("key_col", lit(keyCol))
-      .withColumn("key_kind", lit(kind))
-      .write.mode("append").parquet(sidecarPath(tablePath))
+    val rows = bits(spark, newFiles.toSeq, keyCol, kind, mBits, k, nf)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
+      IndexCommit.Add, rows.coalesce(1).write.mode("overwrite").parquet(_))))
   }
 
   /** The column this table's bloom sidecar indexes, if the sidecar exists
-    * and records it (sidecars from before the `key_col` column are still
-    * probed fine explicitly, but the planner cannot claim them).
+    * and records it (the planner cannot claim sidecars from before the
+    * `key_col` column).
     */
   private[sources] def plannedKeyCol(spark: SparkSession,
       tablePath: String): Option[String] =
@@ -191,11 +194,12 @@ object BloomIndex {
   }
 
   /** Files that may contain any of `keys` (exact w.r.t. the table:
-    * every true container is returned; false positives possible). Files
-    * the sidecar does not cover — a torn append's crash window — are
-    * unconditional candidates, so coverage gaps cost I/O, not rows.
+    * every true container is returned; false positives possible) — the
+    * planner's bloom leg. Files the sidecar does not cover — a torn
+    * append's crash window — are unconditional candidates, so coverage
+    * gaps cost I/O, not rows.
     */
-  def candidateFiles(spark: SparkSession, tablePath: String,
+  private[sources] def candidateFiles(spark: SparkSession, tablePath: String,
       keys: Seq[Long]): Seq[String] = {
     import spark.implicits._
     candidateFilesOf(spark, tablePath, keys.toDF("k"))
@@ -204,14 +208,14 @@ object BloomIndex {
   /** String-domain twin of [[candidateFiles]] — probes hash the UTF-8
     * bytes natively, matching a sidecar built on a string key column.
     */
-  def candidateFilesStr(spark: SparkSession, tablePath: String,
+  private[sources] def candidateFilesStr(spark: SparkSession, tablePath: String,
       keys: Seq[String]): Seq[String] = {
     import spark.implicits._
     candidateFilesOf(spark, tablePath, keys.toDF("k"))
   }
 
   /** The shared probe: `probe` carries one key per row in column `k`,
-    * ALREADY in the sidecar's hash domain (the public wrappers pin the
+    * ALREADY in the sidecar's hash domain (the two wrappers pin the
     * Scala element type, so a domain mismatch cannot compile).
     */
   private def candidateFilesOf(spark: SparkSession, tablePath: String,
@@ -248,34 +252,5 @@ object BloomIndex {
     val uncovered = ZoneMap.listDataFiles(spark, tablePath)
       .filterNot(covered)
     (matched ++ uncovered).distinct.sorted
-  }
-
-  /** Point lookup through the index: open only candidate files, re-apply
-    * the exact IN filter. Content-identical to the full-scan filter by
-    * construction (bloom admits every true container; the residual filter
-    * kills false positives).
-    */
-  def lookup(spark: SparkSession, tablePath: String, keyCol: String,
-      keys: Seq[Long]): DataFrame = {
-    val files = candidateFiles(spark, tablePath, keys)
-    if (files.isEmpty)
-      spark.read.parquet(tablePath).limit(0)
-    else
-      spark.read.parquet(files: _*)
-        .filter(col(keyCol).isin(keys: _*))
-  }
-
-  /** String-key point lookup through the index — same contract as
-    * [[lookup]]: content-identical to the full-scan IN filter, candidate
-    * files bound the I/O.
-    */
-  def lookupStr(spark: SparkSession, tablePath: String, keyCol: String,
-      keys: Seq[String]): DataFrame = {
-    val files = candidateFilesStr(spark, tablePath, keys)
-    if (files.isEmpty)
-      spark.read.parquet(tablePath).limit(0)
-    else
-      spark.read.parquet(files: _*)
-        .filter(col(keyCol).isin(keys: _*))
   }
 }

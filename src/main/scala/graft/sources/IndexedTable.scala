@@ -9,15 +9,14 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Zone-map/bloom skipping integrated into Catalyst PLANNING — the
-  * lakehouse endgame for the sidecar family (public prior art:
-  * Delta/Iceberg expose their file-stats pruning through a custom file
-  * listing consulted by the scan, not through explicit probe calls).
+/** Zone-map/bloom skipping integrated into Catalyst PLANNING — the one
+  * read path of the sidecar family (public prior art: Delta/Iceberg
+  * expose their file-stats pruning through a custom file listing
+  * consulted by the scan, not through explicit probe calls).
   *
-  * [[ZoneMap.readRange]]/[[ZoneMap.readBox]] require the caller to name the
-  * probe interval; [[IndexedTable.table]] instead returns a DataFrame whose
-  * scan consults the sidecar AT PLAN TIME: Spark's `FileSourceStrategy`
-  * hands every pushed data predicate to `FileIndex.listFiles`, and
+  * [[IndexedTable.table]] returns a DataFrame whose scan consults the
+  * sidecar AT PLAN TIME: Spark's `FileSourceStrategy` hands every pushed
+  * data predicate to `FileIndex.listFiles`, and
   * [[SkipIndexBase]] translates the conjuncts it understands
   * (comparisons, equality, IN, string prefix, AND/OR) into per-file
   * admission against the per-file min/max bounds. A plain
@@ -30,10 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * When the table ALSO carries a [[BloomIndex]] sidecar (its `key_col`
   * rides with the bits), equality and IN predicates on that key add a
-  * second admission leg: one batched distributed bloom probe per plan,
-  * intersected with the zone-map leg — point lookups through plain SQL
-  * open only the files whose bloom admits the key, exactly like
-  * [[BloomIndex.lookup]] but with the planner doing the routing.
+  * second admission leg: one batched distributed bloom probe per plan
+  * ([[BloomIndex.candidateFiles]]), intersected with the zone-map leg —
+  * point lookups through plain SQL open only the files whose bloom admits
+  * the key.
   *
   * Conservatism contract (the [[ZoneMap]] read-side rules, verbatim):
   * a conjunct the translator does not understand admits every file; null
@@ -49,11 +48,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[Versioned]] manifest, file identity = full path — versioned data
   * dirs reuse part-file basenames across commits).
   *
-  * Scale shape: driver state is O(files × stat columns) — the same index
-  * the explicit probes load — read once per plan (and once per
-  * `refresh()`), not per partition. At 1000 executors the win is the same
-  * as Delta's: the pruned listing never reaches the scheduler, so task
-  * count scales with the SELECTED data, not the table.
+  * Scale shape: driver state is O(files × stat columns) — the sidecar
+  * and the live listing ([[ZoneMap.loadIndex]]) — read once per plan
+  * (and once per `refresh()`), not per partition. At 1000 executors the
+  * win is the same as Delta's: the pruned listing never reaches the
+  * scheduler, so task count scales with the SELECTED data, not the table.
   */
 object IndexedTable {
 

@@ -128,21 +128,23 @@ object SourceQueries {
 
   /** Bloom file-skipping point lookup (see [[BloomIndex]]): events are
     * rewritten key-hash-partitioned with a per-file bloom sidecar, then a
-    * point IN lookup runs THROUGH the index (only candidate files opened)
-    * while the oracle runs the same predicate over the original table —
-    * the index must be content-invisible. The skip win itself (1 file
-    * opened out of 16) is spec-asserted in BloomIndexSpec.
+    * SQL `IN` over a temp view of the [[IndexedTable]] runs THROUGH the
+    * index (only candidate files opened) while the oracle runs the same
+    * predicate over the original table — the index must be
+    * content-invisible. The skip win itself (1 file opened out of 16) is
+    * spec-asserted in BloomIndexSpec / IndexedTableSpec.
     */
   val srcBloomLookup = Q(
     "src_bloom_lookup",
     (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("bloom").toString + "/t"
       BloomIndex.build(graft.Tables.events(s, d), "user_id", dir, nFiles = 16)
-      BloomIndex.lookup(s, dir, "user_id", Seq(7L, 123L, 456L))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
-          round(col("value"), 3).as("value"))
-        .orderBy(col("event_id"))
+      IndexedTable.table(s, dir).createOrReplaceTempView("bloom_events")
+      s.sql("""SELECT event_id, user_id, event_type,
+                      date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts_s,
+                      round(value, 3) AS value
+               FROM bloom_events WHERE user_id IN (7, 123, 456)
+               ORDER BY event_id""")
     },
     Some("""
       SELECT event_id, user_id, event_type,
@@ -211,8 +213,9 @@ object SourceQueries {
   /** Bloom index build + APPEND + lookup under the same oracle as
     * src_bloom_lookup: the index is built on 80% of events, the rest
     * appended ([[BloomIndex.append]] — new files + their sidecar rows at
-    * the pinned geometry), and the point lookup must still equal the
-    * full-table filter — the house build/append/search contract.
+    * the pinned geometry), and the point lookup through the
+    * [[IndexedTable]] must still equal the full-table filter — the house
+    * build/append/search contract.
     */
   val srcBloomAppendedLookup = Q(
     "src_bloom_appended_lookup",
@@ -223,7 +226,8 @@ object SourceQueries {
         nFiles = 16)
       BloomIndex.append(ev.filter(col("event_id") % 5 === 0), "user_id", dir,
         nFiles = 4)
-      BloomIndex.lookup(s, dir, "user_id", Seq(7L, 123L, 456L))
+      IndexedTable.table(s, dir)
+        .filter(col("user_id").isin(7L, 123L, 456L))
         .select(col("event_id"), col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
           round(col("value"), 3).as("value"))
@@ -232,12 +236,12 @@ object SourceQueries {
     srcBloomLookup.oracle)
 
   /** Zone-map range read (see [[ZoneMap]]): events are rewritten
-    * range-clustered with a per-file min/max sidecar, then a BETWEEN
-    * probe runs THROUGH the index (only files whose [min, max] intersects
-    * the probe interval are opened) while the oracle runs the same
-    * predicate over the original table — the index must be
-    * content-invisible. The skip win itself (few files opened out of 16)
-    * is spec-asserted in ZoneMapSpec.
+    * range-clustered with a per-file min/max sidecar, then a SQL BETWEEN
+    * over a temp view of the [[IndexedTable]] runs THROUGH the index (only
+    * files whose [min, max] intersects the interval are opened) while the
+    * oracle runs the same predicate over the original table — the index
+    * must be content-invisible. The skip win itself (few files opened out
+    * of 16) is spec-asserted in IndexedTableSpec.
     */
   val srcZonemapRange = Q(
     "src_zonemap_range",
@@ -245,20 +249,22 @@ object SourceQueries {
       val dir = java.nio.file.Files.createTempDirectory("zmap").toString + "/t"
       ZoneMap.build(graft.Tables.events(s, d), Seq("user_id", "value"), dir,
         nFiles = 16)
-      ZoneMap.readRange(s, dir, "user_id", 100, 199)
-        .filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
-          round(col("value"), 3).as("value"))
-        .orderBy(col("event_id"))
+      IndexedTable.table(s, dir).createOrReplaceTempView("zm_events")
+      s.sql("""SELECT event_id, user_id, event_type,
+                      date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts_s,
+                      round(value, 3) AS value
+               FROM zm_events
+               WHERE user_id BETWEEN 100 AND 199 AND event_type = 'click'
+               ORDER BY event_id""")
     },
     srcZorderBox.oracle)
 
   /** Zone-map build + APPEND + range read under the same oracle: the
     * index is built on 80% of events, the rest appended
     * ([[ZoneMap.append]] — new clustered files + their stats rows at the
-    * pinned column set), and the range probe must still equal the
-    * full-table filter — the house build/append/search contract.
+    * pinned column set), and the range read through the [[IndexedTable]]
+    * must still equal the full-table filter — the house
+    * build/append/search contract.
     */
   val srcZonemapAppendedRange = Q(
     "src_zonemap_appended_range",
@@ -268,8 +274,9 @@ object SourceQueries {
       ZoneMap.build(ev.filter(col("event_id") % 5 =!= 0),
         Seq("user_id", "value"), dir, nFiles = 16)
       ZoneMap.append(ev.filter(col("event_id") % 5 === 0), dir, nFiles = 4)
-      ZoneMap.readRange(s, dir, "user_id", 100, 199)
-        .filter(col("event_type") === "click")
+      IndexedTable.table(s, dir)
+        .filter(col("user_id").between(100, 199) &&
+          col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
           round(col("value"), 3).as("value"))
@@ -281,8 +288,8 @@ object SourceQueries {
     * three micro-batches through `ZoneMap.appendBatch` (the
     * `zonemapSink` path), INCLUDING a redelivery of batch 0 mid-sequence
     * — the deterministic-replace idempotence means the replay must change
-    * nothing — then the range probe runs through the incrementally-built
-    * index and must equal the full-table filter.
+    * nothing — then the range read runs through the incrementally-built
+    * index ([[IndexedTable]]) and must equal the full-table filter.
     */
   val srcZonemapStreamedRange = Q(
     "src_zonemap_streamed_range",
@@ -295,8 +302,9 @@ object SourceQueries {
       // redelivery of batch 0 (same rows, same id): must converge, not dup
       ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), dir, 0L, cols)
       ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 2), dir, 2L, cols)
-      ZoneMap.readRange(s, dir, "user_id", 100, 199)
-        .filter(col("event_type") === "click")
+      IndexedTable.table(s, dir)
+        .filter(col("user_id").between(100, 199) &&
+          col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
           round(col("value"), 3).as("value"))
@@ -371,10 +379,11 @@ object SourceQueries {
   /** The classic lakehouse pairing: a Z-ORDER-clustered layout (each
     * file gets a tight bounding box in BOTH dims) indexed by a
     * STATS-ONLY zone-map sidecar ([[ZoneMap.buildStatsOnly]] — no data
-    * rewrite), probed with the 2-D [[ZoneMap.readBox]] (per-dimension
-    * min/max intersection). The oracle runs the same conjunctive box on
-    * the original table — layout + index together must be
-    * content-invisible; the 2-D file-prune win is spec-asserted.
+    * rewrite), read with a 2-D SQL WHERE over a temp view of the
+    * [[IndexedTable]] (per-dimension min/max admission, intersected). The
+    * oracle runs the same conjunctive box on the original table — layout
+    * + index together must be content-invisible; the 2-D file-prune win
+    * is spec-asserted.
     */
   val srcZorderZonemapBox = Q(
     "src_zorder_zonemap_box",
@@ -384,12 +393,14 @@ object SourceQueries {
       ZOrder.writeZOrdered(ev, dir, col("user_id"),
         (col("value") * 1000).cast("long"), bits = 12, nFiles = 32)
       ZoneMap.buildStatsOnly(s, dir, Seq("user_id", "value"))
-      ZoneMap.readBox(s, dir,
-        Seq(("user_id", 100.0, 199.0), ("value", 10.0, 30.0)))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
-          round(col("value"), 3).as("value"))
-        .orderBy(col("event_id"))
+      IndexedTable.table(s, dir).createOrReplaceTempView("zzb_events")
+      s.sql("""SELECT event_id, user_id, event_type,
+                      date_format(ts, 'yyyy-MM-dd HH:mm:ss.SSSSSS') AS ts_s,
+                      round(value, 3) AS value
+               FROM zzb_events
+               WHERE user_id BETWEEN 100 AND 199
+                 AND value BETWEEN 10.0 AND 30.0
+               ORDER BY event_id""")
     },
     Some("""
       SELECT event_id, user_id, event_type,
@@ -400,17 +411,19 @@ object SourceQueries {
       ORDER BY event_id"""))
 
   /** Lexicographic (string) zone maps: documents range-clustered on the
-    * lang code with per-file string min/max, probed with a BETWEEN over
-    * the dictionary range — the lang-code / date-string / URL-prefix
-    * skipping shape. Same content-invisibility oracle as the numeric
-    * family; the string-side prune win is spec-asserted.
+    * lang code with per-file string min/max, read through the
+    * [[IndexedTable]] with a DataFrame BETWEEN over the dictionary range —
+    * the lang-code / date-string / URL-prefix skipping shape. Same
+    * content-invisibility oracle as the numeric family; the string-side
+    * prune win is spec-asserted.
     */
   val srcZonemapStringRange = Q(
     "src_zonemap_string_range",
     (s, d) => {
       val dir = java.nio.file.Files.createTempDirectory("zmapstr2").toString + "/t"
       ZoneMap.build(T.documents(s, d), Seq("lang", "doc_id"), dir, nFiles = 8)
-      ZoneMap.readRangeStr(s, dir, "lang", "de", "es")
+      IndexedTable.table(s, dir)
+        .filter(col("lang").between("de", "es"))
         .select(col("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"), col("text"))
         .orderBy(col("doc_id"))
@@ -422,9 +435,10 @@ object SourceQueries {
       ORDER BY doc_id"""))
 
   /** PLANNER-integrated zone-map skipping ([[IndexedTable]]): the same
-    * table + predicate as src_zonemap_range, but the probe is a plain
-    * `.filter` — file pruning happens inside Catalyst planning via the
-    * custom FileIndex, with no index-aware call site. Content-invisible
+    * table + predicate as src_zonemap_range, through the DataFrame
+    * surface (a plain `.filter`) where that query uses SQL — file pruning
+    * happens inside Catalyst planning via the custom FileIndex, with no
+    * index-aware call site. Content-invisible
     * under the shared oracle; the plan-time skip itself (≤4 of 16 files,
     * SQL surface, OR/IN shapes, fallbacks) is IndexedTableSpec's.
     */
@@ -445,8 +459,9 @@ object SourceQueries {
     srcZorderBox.oracle)
 
   /** The SQL surface of the planner-integrated table over STRING stats:
-    * documents clustered on lang, probed by a WHERE through a temp view —
-    * lexicographic pruning with zero index-aware syntax.
+    * documents clustered on lang, read by a WHERE through a temp view
+    * (src_zonemap_string_range reads the same through a DataFrame
+    * `.filter`) — lexicographic pruning with zero index-aware syntax.
     */
   val srcZonemapPlannedSql = Q(
     "src_zonemap_planned_sql",
@@ -461,11 +476,12 @@ object SourceQueries {
     srcZonemapStringRange.oracle)
 
   /** Bloom point lookup through the PLANNER ([[IndexedTable]]): the same
-    * table + key set as src_bloom_lookup, but the probe is a plain
-    * `isin` filter — the scan's FileIndex recognizes the sidecar's
-    * recorded key column and routes the equality through one batched
-    * bloom probe. Content-invisible under the shared oracle; the ~1-file
-    * admission and the bloom×zonemap intersection are IndexedTableSpec's.
+    * table + key set as src_bloom_lookup, through a DataFrame `isin`
+    * where that query uses SQL — the scan's FileIndex recognizes the
+    * sidecar's recorded key column and routes the equality through one
+    * batched bloom probe. Content-invisible under the shared oracle; the
+    * ~1-file admission and the bloom×zonemap intersection are
+    * IndexedTableSpec's.
     */
   val srcBloomPlanned = Q(
     "src_bloom_planned",
@@ -482,10 +498,11 @@ object SourceQueries {
     srcBloomLookup.oracle)
 
   /** The z-order × zone-map box composition through the PLANNER: same
-    * layout + box as src_zorder_zonemap_box, probed as a plain 2-D
-    * conjunction — [[SkippingFileIndex]] intersects the per-dimension
-    * admissions (And of two ranges), so the Morton clustering's tight
-    * per-file bounding boxes prune with zero probe syntax.
+    * layout + box as src_zorder_zonemap_box, as a DataFrame 2-D
+    * conjunction where that query uses SQL — [[SkippingFileIndex]]
+    * intersects the per-dimension admissions (And of two ranges), so the
+    * Morton clustering's tight per-file bounding boxes prune with zero
+    * probe syntax.
     */
   val srcZorderPlanned = Q(
     "src_zorder_planned",
@@ -1496,10 +1513,11 @@ object SourceQueries {
 
   /** THREE-axis Morton clustering ([[ZOrder.clusteredN]] — the
     * (id, value, time)-shaped slice a telemetry corpus carves): the N-way
-    * interleave gives every file a tight bounding box in ALL dims, and
-    * [[ZoneMap.readBox]] (N-dim by construction) prunes on the 3-way
-    * intersection. Content-invisible under the shared-oracle rule; the
-    * 3-D-beats-2-D file counts are ZOrderSpec's.
+    * interleave gives every file a tight bounding box in ALL dims, and a
+    * triple-BETWEEN filter through the [[IndexedTable]] prunes on the
+    * 3-way intersection of the per-dimension admissions. Content-invisible
+    * under the shared-oracle rule; the 3-D-beats-2-D file counts are
+    * ZOrderSpec's.
     */
   lazy val srcZorder3Box: Q = Q(
     "src_zorder3_box",
@@ -1511,9 +1529,10 @@ object SourceQueries {
         bits = 10, nFiles = 32)
         .write.parquet(dir)
       ZoneMap.buildStatsOnly(s, dir, Seq("user_id", "value", "event_id"))
-      ZoneMap.readBox(s, dir, Seq(
-        ("user_id", 100.0, 399.0), ("value", 10.0, 40.0),
-        ("event_id", 0.0, 4999.0)))
+      IndexedTable.table(s, dir)
+        .filter(col("user_id").between(100, 399) &&
+          col("value").between(10.0, 40.0) &&
+          col("event_id").between(0, 4999))
         .select(col("event_id"), col("user_id"), col("event_type"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts_s"),
           round(col("value"), 3).as("value"))
@@ -1697,10 +1716,10 @@ object SourceQueries {
 
   /** String-key bloom sidecar ([[BloomIndex]] hashing UTF-8 natively —
     * the doc-id/URL key shape an LLM corpus actually has): point lookups
-    * on a derived string key open only bloom-admitted files, explicitly
-    * (`lookupStr`) and through the planner (a plain `isin` on the
-    * [[IndexedTable]]). Content-invisible under the shared oracle; the
-    * files-opened assertions are BloomIndexSpec's / IndexedTableSpec's.
+    * on a derived string key through the [[IndexedTable]] open only
+    * bloom-admitted files, by a SQL `IN` over a temp view here and by a
+    * DataFrame `isin` in src_bloom_string_planned. Content-invisible under
+    * the shared oracle; the files-opened assertions are IndexedTableSpec's.
     */
   lazy val srcBloomStringLookup: Q = Q(
     "src_bloom_string_lookup",
@@ -1709,10 +1728,10 @@ object SourceQueries {
       val docs = T.documents(s, d)
         .withColumn("doc_key", concat(lit("doc-"), col("doc_id")))
       BloomIndex.build(docs, "doc_key", dir, nFiles = 16)
-      BloomIndex.lookupStr(s, dir, "doc_key",
-        Seq("doc-7", "doc-123", "doc-456"))
-        .select(col("doc_id"), col("doc_key"), col("lang"), col("text"))
-        .orderBy(col("doc_id"))
+      IndexedTable.table(s, dir).createOrReplaceTempView("bloom_docs")
+      s.sql("""SELECT doc_id, doc_key, lang, text FROM bloom_docs
+               WHERE doc_key IN ('doc-7', 'doc-123', 'doc-456')
+               ORDER BY doc_id""")
     },
     Some("""
       SELECT doc_id, 'doc-' || CAST(doc_id AS VARCHAR) AS doc_key,

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Generalized per-file min/max (zone-map) sidecar for RANGE predicates —
@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * prior art: Netezza zone maps; ORC/Parquet footer stats; Delta/Iceberg
   * file-level column stats). [[BloomIndex]] buys equality locality,
   * [[ZOrder]] buys 2-D box locality; this buys 1-D range locality on any
-  * set of numeric columns: a `BETWEEN` probe opens only the files whose
-  * [min, max] interval intersects the probe interval. (The reference's
-  * analogue is its sorted k-mer table enabling the merge skip,
-  * `src/sra/comparekmertables.cpp:473-582` — sort so that a range touches
-  * a contiguous, identifiable slice of the storage.)
+  * set of numeric or string columns: a `BETWEEN` filter opens only the
+  * files whose [min, max] interval intersects the filter's interval.
+  * (The reference's analogue is its sorted k-mer table enabling the
+  * merge skip, `src/sra/comparekmertables.cpp:473-582` — sort so that a
+  * range touches a contiguous, identifiable slice of the storage.)
   *
   * Everything is plain SQL expressions — no UDF:
   *   - build: rows are RANGE-partitioned on the leading stat column
@@ -29,15 +29,16 @@ import org.apache.spark.sql.functions._
   *     pins the CALLER'S column order, so appends keep clustering on the
   *     same leading column the build chose. The sidecar lands via
   *     rename-swap: stats and column set commit in ONE atomic move.
-  *   - probe: a file is a candidate unless `max < lo || min > hi`
-  *     (null stats — all-null or uncovered column — never prune). The
-  *     sidecar is O(files × stat cols); a probe reads it and the live
-  *     file listing ONCE (driver state bounded by the file count — the
-  *     classic index-read contract).
-  *   - read: only candidate files are opened, with the exact range
-  *     predicate re-applied IN THE COLUMN'S NATIVE TYPE so it pushes
-  *     into the parquet scan — false positives cost I/O, never
-  *     correctness.
+  *   - read: through [[IndexedTable.table]] (or `partitionedTable`): a
+  *     plain `.filter` or SQL WHERE, whose pushed predicates
+  *     [[SkipIndexBase]] turns into per-file admission at plan time — a
+  *     file is a candidate unless `max < lo || min > hi` (null stats —
+  *     all-null or uncovered column — never prune). The sidecar is
+  *     O(files × stat cols); a plan reads it and the live file listing
+  *     ONCE (driver state bounded by the file count — the classic
+  *     index-read contract). The full predicate still runs over the
+  *     admitted files and pushes into the parquet scan — false positives
+  *     cost I/O, never correctness.
   *
   * Crash windows are closed on the READ side exactly like [[BloomIndex]]:
   * any table file the sidecar does not cover is an unconditional
@@ -226,9 +227,9 @@ object ZoneMap {
     * the data — the "index what's already there" path: stats reflect
     * whatever clustering the layout has (hash, range, Z-order, none).
     * Pair with [[graft.sources.ZOrder]]: a Morton-clustered layout gives
-    * every file a tight bounding box in BOTH dims, so the 2-D
-    * [[readBox]] probe prunes like the classic cluster-plus-stats
-    * lakehouse pairing.
+    * every file a tight bounding box in BOTH dims, so a 2-D box filter
+    * through [[IndexedTable.table]] prunes like the classic
+    * cluster-plus-stats lakehouse pairing.
     */
   def buildStatsOnly(spark: SparkSession, tablePath: String,
       statCols: Seq[String]): Unit = {
@@ -276,7 +277,7 @@ object ZoneMap {
     * committed, so transient absence during its repair is the correct
     * at-least-once surface. Crash with data landed / stats missing →
     * the uncovered-file fallback keeps probes exact meanwhile. Stale
-    * sidecar rows from a repair are neutralized by the probe's live-set
+    * sidecar rows from a repair are neutralized by the reader's live-set
     * intersection (and purged by [[rebuildStats]]). Bootstraps the
     * sidecar (pinning `statCols` and their order) on the table's first
     * commit. Single-writer per table.
@@ -327,12 +328,13 @@ object ZoneMap {
     else commitSidecar(spark, tablePath, stats)
   }
 
-  /** One probe's index state: the live file set and the collected sidecar
-    * rows (f, c, lo, hi) — both bounded by files × stat cols, read ONCE
-    * and shared across dimensions. A missing sidecar (torn first
-    * streaming commit) yields zero stats rows, which the candidate logic
-    * treats as "nothing covered": every live file is a candidate — the
-    * documented degrade-to-scan, never a crash.
+  /** The index state one plan reads ([[SkippingFileIndex]],
+    * [[PartitionedSkippingFileIndex]]): the live file set and the
+    * collected sidecar rows — both bounded by files × stat cols, read ONCE
+    * per plan. A missing sidecar (torn first streaming commit) yields zero
+    * stats rows, which [[SkipIndexBase]] treats as "nothing covered":
+    * every live file is a candidate — the documented degrade-to-scan,
+    * never a crash.
     */
   private[sources] final case class Stat(f: String, c: String,
       lo: Option[Double], hi: Option[Double],
@@ -354,128 +356,5 @@ object ZoneMap {
           .map(r => Stat(r.f, r.c, r.lo, r.hi, r.slo, r.shi,
             r.nulls, r.rows))
     (live, stats)
-  }
-
-  /** Candidate set for one dimension over loaded index state: admitted if
-    * the dimension's bounds (numeric or lexicographic, per the probe
-    * kind) intersect the interval or are null; uncovered live files
-    * always admitted; stale rows (non-live files) dropped.
-    */
-  private def candidatesFrom[T: Ordering](live: Set[String],
-      stats: Seq[Stat], c: String, lo: T, hi: T,
-      bounds: Stat => (Option[T], Option[T])): Set[String] = {
-    val ord = implicitly[Ordering[T]]
-    val forCol = stats.filter(_.c == c)
-    val matched = forCol.collect {
-      case s if {
-        val (flo, fhi) = bounds(s)
-        flo.isEmpty || fhi.isEmpty ||
-          !(ord.lt(fhi.get, lo) || ord.gt(flo.get, hi))
-      } => s.f
-    }.toSet.intersect(live)
-    val covered = forCol.map(_.f).toSet
-    matched ++ live.filterNot(covered)
-  }
-
-  private def numBounds(s: Stat) = (s.lo, s.hi)
-  private def strBounds(s: Stat) = (s.slo, s.shi)
-
-  /** Files that may contain rows with `c` in [lo, hi] (exact w.r.t. the
-    * table: every true container returned; false positives possible).
-    */
-  def candidateFiles(spark: SparkSession, tablePath: String,
-      c: String, lo: Double, hi: Double): Seq[String] = {
-    val (live, stats) = loadIndex(spark, tablePath)
-    candidatesFrom(live, stats, c, lo, hi, numBounds).toSeq.sorted
-  }
-
-  /** String-column variant: files whose LEXICOGRAPHIC [min, max] may
-    * intersect [lo, hi] — range skipping on lang codes, date strings,
-    * URL prefixes and the like.
-    */
-  def candidateFilesStr(spark: SparkSession, tablePath: String,
-      c: String, lo: String, hi: String): Seq[String] = {
-    val (live, stats) = loadIndex(spark, tablePath)
-    // code-point order, matching the UTF8String order the stats were
-    // computed under (JVM char order misorders supplementary planes)
-    candidatesFrom(live, stats, c, lo, hi, strBounds)(Utf8Order.ord)
-      .toSeq.sorted
-  }
-
-  /** Files that may contain a row inside EVERY interval of `box` — the
-    * N-dimensional probe: one listing + one sidecar read, per-dimension
-    * candidate sets intersected on the driver. Uncovered files are in
-    * every dimension's set, so the fallback survives the intersection.
-    */
-  def candidateFilesBox(spark: SparkSession, tablePath: String,
-      box: Seq[(String, Double, Double)]): Seq[String] = {
-    require(box.nonEmpty, "empty box")
-    val (live, stats) = loadIndex(spark, tablePath)
-    box.map { case (c, lo, hi) =>
-      candidatesFrom(live, stats, c, lo, hi, numBounds)
-    }.reduce(_ intersect _).toSeq.sorted
-  }
-
-  /** The residual range predicate in the COLUMN'S NATIVE type where the
-    * double bounds are losslessly expressible — a naive
-    * `cast(col AS double) BETWEEN lo AND hi` blocks parquet predicate
-    * pushdown (Catalyst does not unwrap long→double casts), silently
-    * losing row-group skipping inside the candidate files. Integral
-    * columns tighten to [ceil(lo), floor(hi)] (the identical row set for
-    * |values| < 2^53 — the sidecar's own exactness domain); double
-    * columns compare directly; anything else keeps the cast (correct,
-    * scan-filtered above the scan).
-    */
-  private def rangePred(df: DataFrame, c: String, lo: Double,
-      hi: Double): Column = {
-    import org.apache.spark.sql.types._
-    df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        col(c) >= math.ceil(lo).toLong && col(c) <= math.floor(hi).toLong
-      case DoubleType => col(c) >= lo && col(c) <= hi
-      case _ => col(c).cast("double").between(lo, hi)
-    }
-  }
-
-  /** Range read through the index: open only candidate files, re-apply
-    * the exact BETWEEN filter (pushed into the scan — see [[rangePred]]).
-    * Content-identical to the full-scan filter by construction.
-    */
-  def readRange(spark: SparkSession, tablePath: String,
-      c: String, lo: Double, hi: Double): DataFrame = {
-    val files = candidateFiles(spark, tablePath, c, lo, hi)
-    if (files.isEmpty)
-      spark.read.parquet(tablePath).limit(0)
-    else {
-      val base = spark.read.parquet(files: _*)
-      base.filter(rangePred(base, c, lo, hi))
-    }
-  }
-
-  /** String-range read through the index: open only lexicographically
-    * intersecting files, re-apply the exact BETWEEN (native string
-    * comparison — pushes into the scan unchanged).
-    */
-  def readRangeStr(spark: SparkSession, tablePath: String,
-      c: String, lo: String, hi: String): DataFrame = {
-    val files = candidateFilesStr(spark, tablePath, c, lo, hi)
-    if (files.isEmpty)
-      spark.read.parquet(tablePath).limit(0)
-    else
-      spark.read.parquet(files: _*).filter(col(c).between(lo, hi))
-  }
-
-  /** Box read through the index: open only files admitted by every
-    * dimension, re-apply the exact conjunctive range predicate.
-    */
-  def readBox(spark: SparkSession, tablePath: String,
-      box: Seq[(String, Double, Double)]): DataFrame = {
-    val files = candidateFilesBox(spark, tablePath, box)
-    val base =
-      if (files.isEmpty) spark.read.parquet(tablePath).limit(0)
-      else spark.read.parquet(files: _*)
-    box.foldLeft(base) { case (df, (c, lo, hi)) =>
-      df.filter(rangePred(base, c, lo, hi))
-    }
   }
 }

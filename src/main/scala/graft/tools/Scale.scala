@@ -149,7 +149,8 @@ object Scale {
       def run(replicas: Int): (Arm, Map[Long, Long]) = {
         val (db, fa, one) = (s"target/scale/bio_db_x$replicas",
           copies(0, replicas), copies(replicas, replicas + 1))
-        r.arm(s"buildTargetDb x$replicas")(PetaSearch.buildTargetDb(spark, fa, db))
+        r.arm(s"buildTargetDb x$replicas", warm = true)(
+          PetaSearch.buildTargetDb(spark, fa, db))
         val unique = spark.read.parquet(s"$db/kmers").count()
         r.phase(s"appendToTargetDb x$replicas+1")(
           PetaSearch.appendToTargetDb(spark, one, db))
@@ -161,7 +162,7 @@ object Scale {
         val targets = queries.crossJoin(spark.range(replicas).toDF("dbId"))
           .select(col("dbId"), col("seqId"), col("seq"), col("seqLen"))
           .localCheckpoint()
-        val a = r.arm(s"searchPartitioned x$replicas")(
+        val a = r.arm(s"searchPartitioned x$replicas", warm = true)(
           PetaSearch.searchPartitioned(spark, queries, targets).count())
         (a, PetaSearch.searchPartitioned(spark, queries, targets)
           .groupBy("dbId").count().collect()

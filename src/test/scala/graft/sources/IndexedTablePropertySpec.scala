@@ -16,12 +16,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class IndexedTablePropertySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private lazy val table: String = {
-    val d = java.nio.file.Files.createTempDirectory("idxprop").toString + "/t"
-    ZoneMap.build(graft.Tables.events(spark, "/root/testdata/sf0.01"),
-      Seq("user_id", "value"), d, nFiles = 8)
-    d
-  }
+  private def ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
+
+  private def newTable(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
   private def randomPredicate(rnd: scala.util.Random, depth: Int): Column = {
     def leaf(): Column = rnd.nextInt(7) match {
@@ -43,9 +41,12 @@ class IndexedTablePropertySpec extends AnyFunSuite {
       randomPredicate(rnd, depth - 1) || randomPredicate(rnd, depth - 1)
   }
 
-  test("40 seeded random predicate trees: planner == raw scan, row-exact") {
-    val t = IndexedTable.table(spark, table)
-    val raw = spark.read.parquet(table)
+  /** The 40 seeded trees over the indexed table at `d`: the planner's
+    * read equals the raw scan's, row for row.
+    */
+  private def fortyTrees(d: String): Unit = {
+    val t = IndexedTable.table(spark, d)
+    val raw = spark.read.parquet(d)
     val rnd = new scala.util.Random(4217)
     (1 to 40).foreach { i =>
       val pred = randomPredicate(rnd, 2)
@@ -58,8 +59,40 @@ class IndexedTablePropertySpec extends AnyFunSuite {
     }
   }
 
+  test("40 seeded random predicate trees: planner == raw scan, row-exact") {
+    val d = newTable("idxprop")
+    ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 8)
+    fortyTrees(d)
+  }
+
+  test("the 40 trees over a ZoneMap.append-ed table") {
+    val d = newTable("idxpropapp")
+    ZoneMap.build(ev.filter(col("event_id") % 5 =!= 0),
+      Seq("user_id", "value"), d, nFiles = 8)
+    ZoneMap.append(ev.filter(col("event_id") % 5 === 0), d, nFiles = 4)
+    fortyTrees(d)
+  }
+
+  test("the 40 trees over an appendBatch-streamed, redelivered table") {
+    val d = newTable("idxpropstr")
+    val cols = Seq("user_id", "value")
+    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), d, 0L, cols)
+    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 1), d, 1L, cols)
+    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), d, 0L, cols)
+    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 2), d, 2L, cols)
+    fortyTrees(d)
+  }
+
+  test("the 40 trees over a bloom table after BloomIndex.append") {
+    val d = newTable("idxpropbloom")
+    BloomIndex.build(ev.filter(col("event_id") % 5 =!= 0), "user_id", d,
+      nFiles = 8)
+    BloomIndex.append(ev.filter(col("event_id") % 5 === 0), "user_id", d)
+    fortyTrees(d)
+  }
+
   test("25 seeded random STRING predicates over lexicographic stats") {
-    val d = java.nio.file.Files.createTempDirectory("idxstr").toString + "/t"
+    val d = newTable("idxstr")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
     ZoneMap.build(docs, Seq("lang", "doc_id"), d, nFiles = 8)
     val t = IndexedTable.table(spark, d)
@@ -89,7 +122,6 @@ class IndexedTablePropertySpec extends AnyFunSuite {
 
   test("25 seeded random trees over a VERSIONED snapshot (ManifestFileIndex)") {
     val dir = java.nio.file.Files.createTempDirectory("vprop").toString + "/t"
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
     Versioned.append(ev.filter(col("event_id") % 2 === 0)
       .repartitionByRange(6, col("user_id")), dir)
     Versioned.append(ev.filter(col("event_id") % 2 === 1)
@@ -109,7 +141,6 @@ class IndexedTablePropertySpec extends AnyFunSuite {
 
   test("25 seeded random trees over a HIVE-PARTITIONED table (both prunes)") {
     val d = java.nio.file.Files.createTempDirectory("pprop").toString + "/t"
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.01")
     ev.withColumn("dt", date_format(col("ts"), "yyyy-MM-dd"))
       .repartitionByRange(60, col("dt"), col("user_id"))
       .write.partitionBy("dt").parquet(d)

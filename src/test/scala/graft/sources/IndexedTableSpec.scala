@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.sources.Planned.plannedFiles
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
@@ -20,18 +21,6 @@ class IndexedTableSpec extends AnyFunSuite {
 
   private def newTable(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
-
-  /** Files the PLANNER admitted for this query (via the scan's own
-    * FileIndex + its extracted data filters).
-    */
-  private def plannedFiles(df: DataFrame): Int = {
-    val scan = df.queryExecution.sparkPlan.collectFirst {
-      case f: FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in plan"))
-    scan.relation.location
-      .listFiles(scan.partitionFilters, scan.dataFilters)
-      .map(_.files.size).sum
-  }
 
   private def assertSameRows(got: DataFrame, want: DataFrame): Unit =
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)

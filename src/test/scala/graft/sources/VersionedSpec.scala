@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.sources.Planned.plannedFiles
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -529,15 +530,6 @@ class VersionedSpec extends AnyFunSuite {
       .filter(col("event_type") =!= "view")
     assert(got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-  }
-
-  private def plannedFiles(df: org.apache.spark.sql.DataFrame): Int = {
-    val scan = df.queryExecution.sparkPlan.collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in plan"))
-    scan.relation.location
-      .listFiles(scan.partitionFilters, scan.dataFilters)
-      .map(_.files.size).sum
   }
 
   test("indexedRead: manifest file stats prune a plain filter at plan time") {

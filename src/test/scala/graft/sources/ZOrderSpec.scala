@@ -1,6 +1,8 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.sources.Planned.plannedFiles
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -89,25 +91,22 @@ class ZOrderSpec extends AnyFunSuite {
       (col("value") * 1000).cast("long"), col("event_id")),
       bits = 10, nFiles = 32).write.parquet(d)
     ZoneMap.buildStatsOnly(spark, d, Seq("user_id", "value", "event_id"))
-    val full = Seq(("user_id", 100.0, 399.0), ("value", 10.0, 40.0),
-      ("event_id", 0.0, 4999.0))
+    val full = Seq(col("user_id").between(100, 399),
+      col("value").between(10.0, 40.0), col("event_id").between(0, 4999))
+    def box(dims: Seq[Column]) = IndexedTable.table(spark, d)
+      .filter(dims.reduce(_ && _))
     // content-exact vs the raw triple filter
-    val got = ZoneMap.readBox(spark, d, full)
-    val want = spark.read.parquet(d)
-      .filter(col("user_id").between(100, 399) &&
-        col("value").between(10.0, 40.0) &&
-        col("event_id").between(0, 4999))
+    val got = box(full)
+    val want = spark.read.parquet(d).filter(full.reduce(_ && _))
     assert(got.count() > 0 && got.count() == want.count())
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // the 3-way intersection admits no more files than any 2-D sub-box,
     // and strictly fewer than the table
-    def nFiles(box: Seq[(String, Double, Double)]) =
-      ZoneMap.candidateFilesBox(spark, d, box).size
-    val n3 = nFiles(full)
+    val n3 = plannedFiles(got)
     assert(n3 < 32, s"3-D box did not prune: $n3 of 32")
     full.combinations(2).foreach { sub =>
-      assert(n3 <= nFiles(sub),
-        s"3-D admission ($n3) worse than 2-D ${sub.map(_._1)}")
+      assert(n3 <= plannedFiles(box(sub)),
+        s"3-D admission ($n3) worse than 2-D $sub")
     }
   }
 

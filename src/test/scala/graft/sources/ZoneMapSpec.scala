@@ -1,13 +1,16 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.sources.Planned.plannedFiles
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Zone-map sidecar: range reads are content-identical to the full-scan
-  * filter, a narrow range probe opens FEW files (the clustering + stats
-  * actually prune), appends keep probes exact, a torn append costs I/O
-  * never rows, and null stats / second-column probes never prune wrongly.
+/** Zone-map sidecar, read through [[IndexedTable]]: range reads are
+  * content-identical to the full-scan filter, a narrow range opens FEW
+  * files (the clustering + stats actually prune), appends keep reads
+  * exact, a torn append costs I/O never rows, and null stats /
+  * second-column filters never prune wrongly.
   */
 class ZoneMapSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -17,33 +20,38 @@ class ZoneMapSpec extends AnyFunSuite {
   private def newTable(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/t"
 
-  test("readRange is content-identical to the full-scan BETWEEN filter") {
-    val d = newTable("zmap")
-    ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 16)
-    val got = ZoneMap.readRange(spark, d, "user_id", 100, 199)
-    val want = spark.read.parquet(d).filter(col("user_id").between(100, 199))
-    assert(got.count() > 0)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+  /** `pred` over the indexed table at `d`, through the planner. */
+  private def read(d: String, pred: Column): DataFrame =
+    IndexedTable.table(spark, d).filter(pred)
+
+  /** Assert the planner's read of `pred` equals the raw scan's, row for
+    * row; returns the planner's read.
+    */
+  private def exact(d: String, pred: Column): DataFrame = {
+    val got = read(d, pred)
+    val want = spark.read.parquet(d).filter(pred)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"$pred differs from the raw scan")
+    got
   }
+
+  private def liveFiles(d: String): Int =
+    spark.read.parquet(d).inputFiles.length
 
   test("a narrow range probe opens few files, not the table") {
     val d = newTable("zmapskip")
     ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 16)
-    val total = spark.read.parquet(d).inputFiles.length
-    assert(total == 16)
+    assert(liveFiles(d) == 16)
     // user_id spans [0, ~150) at sf0.01; a 20-wide band (~13% of the
     // domain) should live in a small number of range-clustered files
-    val cand = ZoneMap.candidateFiles(spark, d, "user_id", 100, 119)
-    assert(cand.size <= 4, s"expected <=4 candidate files, got ${cand.size}")
+    val n = plannedFiles(read(d, col("user_id").between(100, 119)))
+    assert(n <= 4, s"expected <=4 candidate files, got $n")
   }
 
   test("probe on the SECOND stat column is exact (no clustering, still safe)") {
     val d = newTable("zmap2nd")
     ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 16)
-    val got = ZoneMap.readRange(spark, d, "value", 10.0, 20.0)
-    val want = spark.read.parquet(d)
-      .filter(col("value").cast("double").between(10.0, 20.0))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    exact(d, col("value").between(10.0, 20.0))
   }
 
   test("append: range read over base+appended == full-scan; probes stay pruned") {
@@ -51,13 +59,11 @@ class ZoneMapSpec extends AnyFunSuite {
     ZoneMap.build(ev.filter(col("event_id") % 5 =!= 0),
       Seq("user_id", "value"), d, nFiles = 16)
     ZoneMap.append(ev.filter(col("event_id") % 5 === 0), d, nFiles = 4)
-    val got = ZoneMap.readRange(spark, d, "user_id", 100, 199)
-    val want = spark.read.parquet(d).filter(col("user_id").between(100, 199))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    exact(d, col("user_id").between(100, 199))
     // 16 base + 4 appended files; a narrow band hits few of each commit
-    val cand = ZoneMap.candidateFiles(spark, d, "user_id", 100, 119)
-    assert(cand.size <= 6, s"expected <=6 candidate files, got ${cand.size}")
-    assert(cand.size < spark.read.parquet(d).inputFiles.length)
+    val n = plannedFiles(read(d, col("user_id").between(100, 119)))
+    assert(n <= 6, s"expected <=6 candidate files, got $n")
+    assert(n < liveFiles(d))
   }
 
   test("append of an empty batch is a no-op") {
@@ -76,12 +82,10 @@ class ZoneMapSpec extends AnyFunSuite {
     ev.filter(col("event_id") % 5 === 0)
       .repartitionByRange(4, col("user_id"))
       .write.mode("append").parquet(d)
-    val got = ZoneMap.readRange(spark, d, "user_id", 100, 199)
-    val want = spark.read.parquet(d).filter(col("user_id").between(100, 199))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    exact(d, col("user_id").between(100, 199))
     // the uncovered files ARE candidates even for an out-of-domain range
-    val cand = ZoneMap.candidateFiles(spark, d, "user_id", -2000, -1000)
-    assert(cand.size == 4, s"expected the 4 uncovered files, got ${cand.size}")
+    val n = plannedFiles(read(d, col("user_id").between(-2000, -1000)))
+    assert(n == 4, s"expected the 4 uncovered files, got $n")
   }
 
   test("zonemapSink: streamed ingest == batch content, probes exact") {
@@ -95,9 +99,7 @@ class ZoneMapSpec extends AnyFunSuite {
     val got = spark.read.parquet(d)
     assert(got.count() == ev.count())
     assert(got.exceptAll(ev).isEmpty && ev.exceptAll(got).isEmpty)
-    val ranged = ZoneMap.readRange(spark, d, "user_id", 100, 119)
-    val want = spark.read.parquet(d).filter(col("user_id").between(100, 119))
-    assert(ranged.exceptAll(want).isEmpty && want.exceptAll(ranged).isEmpty)
+    exact(d, col("user_id").between(100, 119))
   }
 
   test("appendBatch redelivery converges: same id + same rows change nothing") {
@@ -114,13 +116,10 @@ class ZoneMapSpec extends AnyFunSuite {
     val after = spark.read.parquet(d)
     assert(after.count() == ev.count())
     assert(after.exceptAll(ev).isEmpty && ev.exceptAll(after).isEmpty)
-    // probes stay exact despite the stale sidecar rows the replay left
-    val got = ZoneMap.readRange(spark, d, "user_id", 100, 119)
-    val want = after.filter(col("user_id").between(100, 119))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    // and still pruned: batches cluster their own rows, probe hits few
-    val cand = ZoneMap.candidateFiles(spark, d, "user_id", 100, 119)
-    assert(cand.size < spark.read.parquet(d).inputFiles.length)
+    // reads stay exact despite the stale sidecar rows the replay left
+    val got = exact(d, col("user_id").between(100, 119))
+    // and still pruned: batches cluster their own rows, the band hits few
+    assert(plannedFiles(got) < liveFiles(d))
   }
 
   test("first appendBatch pins the stat-column set for later batches") {
@@ -136,51 +135,10 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(cols == Set("user_id"))
   }
 
-  test("stats-only build over a Z-ordered layout: 2-D box prunes and is exact") {
-    val d = newTable("zzbox")
-    ZOrder.writeZOrdered(ev, d, col("user_id"),
-      (col("value") * 1000).cast("long"), bits = 12, nFiles = 32)
-    ZoneMap.buildStatsOnly(spark, d, Seq("user_id", "value"))
-    val box = Seq(("user_id", 100.0, 119.0), ("value", 10.0, 30.0))
-    val got = ZoneMap.readBox(spark, d, box)
-    val want = spark.read.parquet(d)
-      .filter(col("user_id").between(100, 119) &&
-        col("value").between(10.0, 30.0))
-    assert(got.count() > 0)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-    // the 2-D intersection must beat EITHER single dimension alone
-    val both = ZoneMap.candidateFilesBox(spark, d, box).size
-    val dimA = ZoneMap.candidateFiles(spark, d, "user_id", 100.0, 119.0).size
-    val dimB = ZoneMap.candidateFiles(spark, d, "value", 10.0, 30.0).size
-    assert(both <= dimA && both <= dimB)
-    assert(both < 32, s"box must prune some of the 32 files, got $both")
-  }
-
-  test("readBox on an unclustered dim still returns exact content") {
+  test("a box on an unclustered dim still returns exact content") {
     val d = newTable("zmapboxflat")
     ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 16)
-    val box = Seq(("user_id", 50.0, 90.0), ("value", 0.0, 15.0))
-    val got = ZoneMap.readBox(spark, d, box)
-    val want = spark.read.parquet(d)
-      .filter(col("user_id").between(50, 90) && col("value").between(0.0, 15.0))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
-  }
-
-  test("the residual range filter reaches the parquet scan (PushedFilters)") {
-    // the probe filters on cast(col AS double) for type-genericity;
-    // Catalyst's UnwrapCastInBinaryComparison must strip the cast on the
-    // integral column so the predicate pushes into the scan — a plan
-    // where the scan reads everything and filters above would silently
-    // lose row-group skipping at 100 TB
-    val d = newTable("zmappush")
-    ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 8)
-    val plan = ZoneMap.readRange(spark, d, "user_id", 100, 119)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: ["), s"no pushdown section:\n$plan")
-    assert(plan.contains("GreaterThanOrEqual(user_id") ||
-      plan.contains("user_id), 100"),
-      s"user_id bound not pushed:\n${plan.linesIterator.filter(
-        _.contains("PushedFilters")).mkString("\n")}")
+    exact(d, col("user_id").between(50, 90) && col("value").between(0.0, 15.0))
   }
 
   test("committed-batch redelivery is a no-op fast path (file names stable)") {
@@ -209,7 +167,9 @@ class ZoneMapSpec extends AnyFunSuite {
     // part names — the old names' stats rows go stale
     new java.io.File(s"$d/b0_torn.parquet").createNewFile()
     ZoneMap.appendBatch(b0, d, 0L, cols)
-    val before = ZoneMap.readRange(spark, d, "user_id", 100, 119)
+    val band = col("user_id").between(100, 119)
+    val before = exact(d, band)
+    val (rowsBefore, nBefore) = (before.collect().toSet, plannedFiles(before))
     val staleCount = spark.read.parquet(d + "_zonemap").count()
     ZoneMap.rebuildStats(spark, d)
     val cleanCount = spark.read.parquet(d + "_zonemap").count()
@@ -217,9 +177,10 @@ class ZoneMapSpec extends AnyFunSuite {
       s"rebuild should shrink the sidecar ($staleCount -> $cleanCount)")
     // exactly live-files × 2 columns rows remain
     assert(cleanCount ==
-      spark.read.parquet(d).inputFiles.length.toLong * cols.length)
-    val after = ZoneMap.readRange(spark, d, "user_id", 100, 119)
-    assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty)
+      liveFiles(d).toLong * cols.length)
+    val after = exact(d, band)
+    assert(after.collect().toSet == rowsBefore)
+    assert(plannedFiles(after) == nBefore)
     // and the repaired table's content is still exactly the full log
     val got = spark.read.parquet(d)
     assert(got.exceptAll(ev).isEmpty && ev.exceptAll(got).isEmpty)
@@ -233,12 +194,9 @@ class ZoneMapSpec extends AnyFunSuite {
       if (f.isDirectory) f.listFiles().foreach(rmr); f.delete()
     }
     rmr(new java.io.File(d + "_zonemap"))
-    val nFiles = spark.read.parquet(d).inputFiles.length
-    val cand = ZoneMap.candidateFiles(spark, d, "user_id", 100, 119)
-    assert(cand.size == nFiles, "every live file must be a candidate")
-    val got = ZoneMap.readRange(spark, d, "user_id", 100, 119)
-    val want = spark.read.parquet(d).filter(col("user_id").between(100, 119))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    val got = exact(d, col("user_id").between(100, 119))
+    assert(plannedFiles(got) == liveFiles(d),
+      "every live file must be a candidate")
   }
 
   test("appends keep clustering on the BUILD'S leading column, not sorted order") {
@@ -250,46 +208,42 @@ class ZoneMapSpec extends AnyFunSuite {
     val lead = spark.read.parquet(d + "_zonemap")
       .filter(col("ci") === 0).select(col("c")).distinct().collect()
     assert(lead.map(_.getString(0)).toSeq == Seq("value"))
-    // and a narrow value-band probe stays pruned across both commits
-    val cand = ZoneMap.candidateFiles(spark, d, "value", 1.0, 5.0)
-    assert(cand.size < spark.read.parquet(d).inputFiles.length)
-    val got = ZoneMap.readRange(spark, d, "value", 1.0, 5.0)
-    val want = spark.read.parquet(d).filter(col("value").between(1.0, 5.0))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    // and a narrow value-band read stays pruned across both commits
+    val got = exact(d, col("value").between(1.0, 5.0))
+    assert(plannedFiles(got) < liveFiles(d))
   }
 
   test("string zone maps: lexicographic range prunes files and is exact") {
     val d = newTable("zmapstrcol")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
     ZoneMap.build(docs, Seq("lang", "doc_id"), d, nFiles = 8)
-    val got = ZoneMap.readRangeStr(spark, d, "lang", "de", "es")
-    val want = spark.read.parquet(d).filter(col("lang").between("de", "es"))
+    val got = exact(d, col("lang").between("de", "es"))
     assert(got.count() > 0)
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // 5 langs clustered into 8 files: a 3-lang dictionary range must not
     // open files holding only languages outside it
-    val cand = ZoneMap.candidateFilesStr(spark, d, "lang", "de", "es")
-    assert(cand.size < spark.read.parquet(d).inputFiles.length,
-      s"string band should prune some of the 8 files, got ${cand.size}")
+    val n = plannedFiles(got)
+    assert(n < liveFiles(d),
+      s"string band should prune some of the 8 files, got $n")
     // an out-of-dictionary range opens nothing
-    assert(ZoneMap.candidateFilesStr(spark, d, "lang", "ru", "sv").isEmpty)
-    assert(ZoneMap.readRangeStr(spark, d, "lang", "ru", "sv").count() == 0)
+    val none = read(d, col("lang").between("ru", "sv"))
+    assert(plannedFiles(none) == 0)
+    assert(none.count() == 0)
   }
 
   test("numeric probes on a mixed-type sidecar ignore the string rows") {
     val d = newTable("zmapmixed")
     val docs = graft.Tables.documents(spark, "/root/testdata/sf0.01")
     ZoneMap.build(docs, Seq("lang", "doc_id"), d, nFiles = 8)
-    val got = ZoneMap.readRange(spark, d, "doc_id", 0, 100)
-    val want = spark.read.parquet(d).filter(col("doc_id").between(0, 100))
-    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    exact(d, col("doc_id").between(0, 100))
   }
 
   test("null stats never prune: an all-null column admits every file") {
     val d = newTable("zmapnull")
     val withNull = ev.withColumn("maybe", lit(null).cast("double"))
     ZoneMap.build(withNull, Seq("user_id", "maybe"), d, nFiles = 8)
-    val cand = ZoneMap.candidateFiles(spark, d, "maybe", 0.0, 1.0)
-    assert(cand.size == 8, s"null stats must admit all 8 files, got ${cand.size}")
+    // null-safe equality implies no IS NOT NULL, so only the bounds
+    // decide (a plain range would also prune on the null counts)
+    val n = plannedFiles(exact(d, col("maybe") <=> 0.5))
+    assert(n == 8, s"null stats must admit all 8 files, got $n")
   }
 }
