@@ -348,7 +348,7 @@ object PetaSearch {
     * append is NOT idempotent: the batch lands in `sequences/` before that
     * commit, so a crash before the pin leaves stale totals, and rerunning
     * the append adds the batch to `sequences/` a second time under new
-    * ids. Making it idempotent is ROADMAP item 2.
+    * ids. Making it idempotent is ROADMAP item 1's bio-append bullet.
     */
   def appendToTargetDb(spark: SparkSession, targetFasta: String,
       dbPath: String, params: Params = Params()): Unit = {

@@ -21,17 +21,10 @@ object Maintenance {
   /** Rewrite `dir` (optionally hive-partitioned by `partitionCols`) into a
     * compact layout: rows hash-route by the partition columns so each
     * partition directory lands as ONE file (or `numFiles` files for the
-    * unpartitioned case). Content-identical — row set, schema, and
-    * partition values are preserved byte-for-byte; only file boundaries
-    * change.
-    */
-  def compactParquetDir(spark: SparkSession, dir: String,
-      partitionCols: Seq[String], numFiles: Int = 32): Unit =
-    compact(spark, dir, partitionCols, numFiles, None)
-
-  /** With `pin`, files of a stream batch that never pinned are dropped
-    * first, so compaction cannot fold them in under a name its replay
-    * would not find.
+    * unpartitioned case). Content-identical — only file boundaries
+    * change. With `pin`, files of a stream batch that never pinned are
+    * dropped first, so compaction cannot fold them in under a name its
+    * replay would not find.
     */
   private def compact(spark: SparkSession, dir: String,
       partitionCols: Seq[String], numFiles: Int, pin: Option[String]): Unit = {

@@ -120,14 +120,14 @@ object BloomIndex {
     * their sidecar rows (geometry read from the pinned sidecar columns —
     * an append can never fork the (m, k) generation). The one-key-one-file
     * read contract relaxes to one file PER COMMIT; reads stay exact
-    * because blooms are per-file. The batch's sidecar rows are staged as
-    * ONE file and published with one rename ([[IndexCommit]] `Add`), so
-    * each new data file is either fully covered or not covered at all.
-    * The crash window between the two (data landed, sidecar rows not yet
-    * published) is closed on the READ side: [[candidateFiles]] treats any
-    * table file the sidecar does not cover as an unconditional candidate —
-    * a torn append degrades to extra I/O, never to a missed row (the
-    * index's standing contract).
+    * because blooms are per-file. The files, then the batch's sidecar
+    * rows staged as ONE file, publish through [[IndexCommit]] `Add`
+    * ([[ZoneMap.appendIndexed]]), so each new data file is either fully
+    * covered or not covered at all. The crash window between the two
+    * (data landed, sidecar rows not yet published) is closed on the READ
+    * side: [[candidateFiles]] treats any table file the sidecar does not
+    * cover as an unconditional candidate — a torn append degrades to extra
+    * I/O, never to a missed row (the index's standing contract).
     */
   def append(df: DataFrame, keyCol: String, tablePath: String,
       nFiles: Int = 4): Unit = {
@@ -156,14 +156,11 @@ object BloomIndex {
           g.getFieldRepetitionCount("key_kind") > 0)
         g.getString("key_kind", 0)
       else "long"
-    val before = ZoneMap.listDataFiles(spark, tablePath).toSet
-    df.repartition(nFiles, col(keyCol))
-      .write.mode("append").parquet(tablePath)
-    val newFiles = ZoneMap.listDataFiles(spark, tablePath).toSet -- before
-    if (newFiles.isEmpty) return // empty batch: nothing to index, no-op
-    val rows = bits(spark, newFiles.toSeq, keyCol, kind, mBits, k, nf)
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
-      IndexCommit.Add, rows.coalesce(1).write.mode("overwrite").parquet(_))))
+    ZoneMap.appendIndexed(spark, tablePath, sidecarPath(tablePath))(
+      df.repartition(nFiles, col(keyCol)).write.mode("overwrite").parquet(_)) {
+      (files, stage) => bits(spark, files, keyCol, kind, mBits, k, nf)
+        .coalesce(1).write.mode("overwrite").parquet(stage)
+    }
   }
 
   /** The column this table's bloom sidecar indexes, if the sidecar exists

@@ -73,6 +73,10 @@ private[graft] object IndexCommit {
   /** The stream batch this thread commits for, if any. */
   def streamBatch: Option[Long] = batch.get
 
+  /** The live name [[Add]] gives staged file `name` on this thread. */
+  private[sources] def addedName(name: String): String =
+    streamBatch.fold(name)(b => s"b$b-$name")
+
   /** Stage every output (concurrently), publish them in order, then write
     * `pin` = (meta dir, fields), with the stream batch as its watermark.
     */
@@ -184,7 +188,7 @@ private[graft] object IndexCommit {
           else if (s.isDirectory) add(s.getPath, new Path(to, n))
           else {
             fs.mkdirs(to)
-            move(fs, s.getPath, new Path(to, streamBatch.fold(n)(b => s"b$b-$n")))
+            move(fs, s.getPath, new Path(to, addedName(n)))
           }
         }
         add(stage, live)

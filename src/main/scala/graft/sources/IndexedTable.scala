@@ -56,8 +56,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object IndexedTable {
 
-  /** Open an indexed table (zone-mapped via [[ZoneMap.build]]/`append`/
-    * `appendBatch`, bloom-indexed via [[BloomIndex.build]], or both) as a
+  /** Open an indexed table (zone-mapped via [[ZoneMap.build]]/`append`,
+    * bloom-indexed via [[BloomIndex.build]], or both) as a
     * DataFrame whose scan prunes files from any pushed predicate at
     * planning time.
     */

@@ -3,7 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -262,12 +262,14 @@ private[graft] object ManifestIO {
   /** Read every data file of sidecar directory `dir` (driver-side, no
     * Spark job). Reads both [[writeSidecar]]'s files and legacy
     * Spark-written parts; sidecars predating the nulls/rows columns read
-    * with those fields absent (None — which never prunes).
+    * with those fields absent (None — which never prunes). A missing
+    * `dir` reads as no rows.
     */
   def readSidecar(conf: Configuration, dir: String): Seq[SidecarRow] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
-    val parts = fs.listStatus(p).filter { s =>
+    val all = if (fs.exists(p)) fs.listStatus(p) else Array.empty[FileStatus]
+    val parts = all.filter { s =>
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !n.startsWith(".")
     }.sortBy(_.getPath.getName)

@@ -285,11 +285,12 @@ object SourceQueries {
     srcZorderBox.oracle)
 
   /** The STREAMED zone-map table under the same oracle: events fold in as
-    * three micro-batches through `ZoneMap.appendBatch` (the
-    * `zonemapSink` path), INCLUDING a redelivery of batch 0 mid-sequence
-    * — the deterministic-replace idempotence means the replay must change
-    * nothing — then the range read runs through the incrementally-built
-    * index ([[IndexedTable]]) and must equal the full-table filter.
+    * three micro-batches through `ZoneMap.append` inside
+    * `IndexCommit.inBatch` (the `zonemapSink` path), INCLUDING a
+    * redelivery of batch 0 mid-sequence — at or below the pinned
+    * watermark, the replay must change nothing — then the range read
+    * runs through the incrementally-built index ([[IndexedTable]]) and
+    * must equal the full-table filter.
     */
   val srcZonemapStreamedRange = Q(
     "src_zonemap_streamed_range",
@@ -297,11 +298,13 @@ object SourceQueries {
       val dir = java.nio.file.Files.createTempDirectory("zmapstr").toString + "/t"
       val ev = graft.Tables.events(s, d)
       val cols = Seq("user_id", "value")
-      ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), dir, 0L, cols)
-      ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 1), dir, 1L, cols)
+      def batch(id: Long): Unit = IndexCommit.inBatch(id)(ZoneMap.append(
+        ev.filter(col("event_id") % 3 === id), dir, statCols = cols))
+      batch(0)
+      batch(1)
       // redelivery of batch 0 (same rows, same id): must converge, not dup
-      ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), dir, 0L, cols)
-      ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 2), dir, 2L, cols)
+      batch(0)
+      batch(2)
       IndexedTable.table(s, dir)
         .filter(col("user_id").between(100, 199) &&
           col("event_type") === "click")

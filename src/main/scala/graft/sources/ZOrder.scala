@@ -91,12 +91,15 @@ object ZOrder {
     * are derived, never stored, so differing bucket bounds per append
     * cannot affect content — only each file set's internal locality).
     * Box queries stay exactly correct; locality degrades as appends
-    * accumulate, and [[compactZOrdered]] restores it.
+    * accumulate, and [[compactZOrdered]] restores it. The files publish
+    * through [[IndexCommit]] `Add`: a crash leaves each one old or new.
     */
   def appendZOrdered(df: DataFrame, path: String, exprA: Column,
       exprB: Column, bits: Int = 16, nFiles: Int = 4): Unit =
-    zOrderedWriter(df, exprA, exprB, bits, nFiles)
-      .mode("append").parquet(path)
+    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
+      path.stripSuffix("/"), IndexCommit.Add,
+      zOrderedWriter(df, exprA, exprB, bits, nFiles)
+        .mode("overwrite").parquet(_))))
 
   /** Re-cluster the whole table (original + appends) into one fresh
     * Morton layout — the LSM-style maintenance counterpart of

@@ -40,15 +40,21 @@ import org.apache.spark.sql.functions._
   *     admitted files and pushes into the parquet scan — false positives
   *     cost I/O, never correctness.
   *
-  * Crash windows are closed on the READ side exactly like [[BloomIndex]]:
-  * any table file the sidecar does not cover is an unconditional
-  * candidate, and a missing sidecar altogether (torn FIRST streaming
-  * commit) degrades to a full-file-list scan — extra I/O, never a missed
-  * row. Single-writer, like the other persisted indexes.
+  * Writes: an [[append]] publishes its files and then their stats rows
+  * through [[IndexCommit]] `Add`, data first — the write protocol of every
+  * persisted index — and its stream face pins a replay watermark beside
+  * the table. The window between the two publishes is closed on the READ
+  * side exactly like [[BloomIndex]]: any table file the sidecar does not
+  * cover is an unconditional candidate, and a missing sidecar altogether
+  * degrades to a full-file-list scan — extra I/O, never a missed row.
+  * Single-writer, like the other persisted indexes.
   */
 object ZoneMap {
 
   private def sidecarPath(table: String) = table.stripSuffix("/") + "_zonemap"
+
+  /** The one-row pin beside a streamed table: its replay watermark. */
+  private def pinPath(table: String) = table.stripSuffix("/") + "_meta"
 
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -177,35 +183,21 @@ object ZoneMap {
     * O(files × stat cols) of metadata.
     */
   private def commitSidecar(spark: SparkSession, tablePath: String,
-      rows: Seq[ManifestIO.SidecarRow]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+      rows: Seq[ManifestIO.SidecarRow]): Unit =
     IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
-      IndexCommit.Replace, { stage =>
-        fsOf(spark, tablePath).mkdirs(new Path(stage))
-        ManifestIO.writeSidecar(conf, s"$stage/part-00000-zm.parquet", rows)
-      })))
+      IndexCommit.Replace, writeRows(spark, rows))))
+
+  /** Write sidecar `rows` as one part file into stage directory `stage`. */
+  private def writeRows(spark: SparkSession,
+      rows: Seq[ManifestIO.SidecarRow])(stage: String): Unit = {
+    fsOf(spark, stage).mkdirs(new Path(stage))
+    ManifestIO.writeSidecar(spark.sparkContext.hadoopConfiguration,
+      s"$stage/part-${java.util.UUID.randomUUID}-zm.parquet", rows)
   }
 
-  /** Append sidecar rows as one new part file: staged under a hidden
-    * name inside the sidecar directory, then renamed visible — readers
-    * (Spark and [[ManifestIO.readSidecar]] alike) skip dot-files, so a
-    * torn write is never read as data.
+  /** The pinned stat columns in their ORIGINAL (clustering) order; none
+    * before the first commit.
     */
-  private def appendSidecar(spark: SparkSession, tablePath: String,
-      rows: Seq[ManifestIO.SidecarRow]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = fsOf(spark, tablePath)
-    val side = new Path(sidecarPath(tablePath))
-    fs.mkdirs(side)
-    val name = s"part-${java.util.UUID.randomUUID}-zm.parquet"
-    val tmp = new Path(side, s".$name.tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, false)
-    ManifestIO.writeSidecar(conf, tmp.toString, rows)
-    require(fs.rename(tmp, new Path(side, name)),
-      s"sidecar append failed at $side")
-  }
-
-  /** The pinned stat columns in their ORIGINAL (clustering) order. */
   private def pinnedCols(spark: SparkSession, tablePath: String): Seq[String] =
     ManifestIO.readSidecar(spark.sparkContext.hadoopConfiguration,
         sidecarPath(tablePath))
@@ -213,11 +205,13 @@ object ZoneMap {
 
   /** Rewrite `df` range-clustered on `statCols.head` into `nFiles` files
     * at `tablePath` and build the per-file min/max sidecar over all
-    * `statCols` (numeric columns).
+    * `statCols` (numeric columns). A rebuild first drops the stream pin:
+    * it resets the replay watermark like every index rebuild.
     */
   def build(df: DataFrame, statCols: Seq[String], tablePath: String,
       nFiles: Int = 16): Unit = {
     require(statCols.nonEmpty, "need at least one stat column")
+    fsOf(df.sparkSession, tablePath).delete(new Path(pinPath(tablePath)), true)
     df.repartitionByRange(nFiles, col(statCols.head))
       .write.mode("overwrite").parquet(tablePath)
     buildStatsOnly(df.sparkSession, tablePath, statCols)
@@ -239,10 +233,11 @@ object ZoneMap {
   }
 
   /** Recompute the sidecar over the table's LIVE files at the PINNED
-    * column set — the maintenance pass that purges stale rows (replayed
-    * streaming batches leave rows for replaced part names; they are
-    * read-safe but accumulate bytes). Rename-swapped like every sidecar
-    * commit; probes before/after are identical by construction.
+    * column set — the maintenance pass for files no stats row covers (an
+    * append without a batch that crashed after its data published leaves
+    * them; they are read-safe but never pruned). Replace-committed like
+    * every sidecar build; reads before/after are identical by
+    * construction.
     */
   def rebuildStats(spark: SparkSession, tablePath: String): Unit =
     buildStatsOnly(spark, tablePath, pinnedCols(spark, tablePath))
@@ -250,91 +245,75 @@ object ZoneMap {
   /** Append a batch: new range-clustered files plus their stats rows at
     * the PINNED stat-column set and ORDER (read from the sidecar — an
     * append can never fork the column set or switch the clustering
-    * column). Per-file ranges of different commits may overlap (each
-    * commit clusters only its own rows); probes stay exact because stats
-    * are per-file.
+    * column); on a table's first commit `statCols` pins them. Per-file
+    * ranges of different commits may overlap (each commit clusters only
+    * its own rows); reads stay exact because stats are per-file.
+    *
+    * The files, then their stats rows, publish through [[IndexCommit]]
+    * `Add` ([[appendIndexed]]). Run inside [[IndexCommit.inBatch]] — the
+    * stream face, `EventsStream.zonemapSink` — the files are named
+    * `b<id>-…` and the stats commit pins the batch id in the one-row
+    * `<table>_meta` beside the table: a batch at or below that watermark
+    * is a replay and returns, and the files of a batch that never pinned
+    * leave the table and the sidecar before the next append runs, so a
+    * replay lands its batch once and leaves no stale stats row.
     */
-  def append(df: DataFrame, tablePath: String, nFiles: Int = 4): Unit = {
+  def append(df: DataFrame, tablePath: String, nFiles: Int = 4,
+      statCols: Seq[String] = Nil): Unit = {
     val spark = df.sparkSession
-    val statCols = pinnedCols(spark, tablePath)
-    val before = listDataFiles(spark, tablePath).toSet
-    df.repartitionByRange(nFiles, col(statCols.head))
-      .write.mode("append").parquet(tablePath)
-    val newFiles = listDataFiles(spark, tablePath).toSet -- before
-    if (newFiles.isEmpty) return // empty batch: nothing to index, no-op
-    appendSidecar(spark, tablePath,
-      statRows(spark, newFiles.toSeq, statCols))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pin = pinPath(tablePath)
+    // the pin first: its watermark decides which batch files stay
+    IndexCommit.recover(conf, Seq(pin, tablePath, sidecarPath(tablePath)),
+      IndexCommit.streamBatch.map(_ => pin))
+    if (IndexCommit.streamBatch.exists(_ <= IndexCommit.watermark(conf, pin)))
+      return
+    val cols = Some(pinnedCols(spark, tablePath)).filter(_.nonEmpty)
+      .getOrElse(statCols)
+    require(cols.nonEmpty, "need at least one stat column")
+    appendIndexed(spark, tablePath, sidecarPath(tablePath), Some(pin))(
+      df.repartitionByRange(nFiles, col(cols.head))
+        .write.mode("overwrite").parquet(_)) { (files, stage) =>
+      writeRows(spark, statRows(spark, files, cols))(stage)
+    }
   }
 
-  /** Micro-batch append into DETERMINISTIC `b<id>_`-prefixed part files —
-    * the streaming face (see `EventsStream.zonemapSink`); the table stays
-    * FLAT (no nested dirs for partition discovery to misread).
-    * Redelivery semantics: a batch whose files are all present AND
-    * sidecar-covered is already committed — the replay returns without
-    * touching the table (no delete window for concurrent readers); only
-    * a TORN attempt (files present but stats missing, or a partial move)
-    * is cleared and rewritten, and a torn batch was never visible as
-    * committed, so transient absence during its repair is the correct
-    * at-least-once surface. Crash with data landed / stats missing →
-    * the uncovered-file fallback keeps probes exact meanwhile. Stale
-    * sidecar rows from a repair are neutralized by the reader's live-set
-    * intersection (and purged by [[rebuildStats]]). Bootstraps the
-    * sidecar (pinning `statCols` and their order) on the table's first
-    * commit. Single-writer per table.
+  /** The append of both sidecar indexes: `writeData` stages the batch's
+    * files, published into the table with [[IndexCommit]] `Add`; the
+    * stage listing names them as live files; `stageRows(files, stage)`
+    * stages their sidecar rows, published into `sidecar` with `Add` after
+    * the data, and inside a stream batch `pin` takes the batch id last.
+    * Each data file is thus covered by its rows or not at all, and an
+    * empty batch publishes nothing.
     */
-  def appendBatch(df: DataFrame, tablePath: String, batchId: Long,
-      statCols: Seq[String], nFiles: Int = 4): Unit = {
-    val spark = df.sparkSession
-    val root = new Path(tablePath)
-    val side = new Path(sidecarPath(tablePath))
+  private[sources] def appendIndexed(spark: SparkSession, tablePath: String,
+      sidecar: String, pin: Option[String] = None)(writeData: String => Unit)(
+      stageRows: (Seq[String], String) => Unit): Unit = {
     val fs = fsOf(spark, tablePath)
-    val sideExists = fs.exists(side)
-    val pinned = if (sideExists) pinnedCols(spark, tablePath) else statCols
-    require(pinned.nonEmpty, "need at least one stat column")
-    val prefix = s"b${batchId}_"
-    val existing =
-      if (fs.exists(root))
-        fs.listStatus(root).map(_.getPath.getName)
-          .filter(_.startsWith(prefix)).toSet
-      else { fs.mkdirs(root); Set.empty[String] }
-    if (existing.nonEmpty && sideExists) {
-      // fully-committed fast path: every prefixed file covered by stats
-      val coveredNames = ManifestIO.readSidecar(
-          spark.sparkContext.hadoopConfiguration, sidecarPath(tablePath))
-        .map(r => r.f.substring(r.f.lastIndexOf('/') + 1)).toSet
-      if (existing.subsetOf(coveredNames)) return
+    var staged = Seq.empty[String]
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(tablePath,
+      IndexCommit.Add, { stage =>
+        writeData(stage)
+        staged = listDataFiles(spark, stage).map(new Path(_).getName)
+      })))
+    if (staged.nonEmpty) {
+      // qualified + toUri: the spelling `listDataFiles` gives the table
+      val files = staged.map(n => fs.makeQualified(
+        new Path(tablePath, IndexCommit.addedName(n))).toUri.toString)
+      val conf = spark.sparkContext.hadoopConfiguration
+      IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecar,
+        IndexCommit.Add, stageRows(files, _))),
+        pin.flatMap(IndexCommit.batchPin(conf, _)))
     }
-    // torn attempt (or first delivery): clear this batch's remnants and
-    // rewrite — exactly once on data, per batch id
-    val stage = new Path(s"${tablePath.stripSuffix("/")}__stage_b$batchId")
-    if (fs.exists(stage)) fs.delete(stage, true)
-    existing.foreach(n => fs.delete(new Path(root, n), false))
-    df.repartitionByRange(nFiles, col(pinned.head))
-      .write.mode("errorifexists").parquet(stage.toString)
-    val moved = fs.listStatus(stage)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val dst = new Path(root, prefix + s.getPath.getName)
-        require(fs.rename(s.getPath, dst), s"could not move ${s.getPath}")
-        // qualified + toUri: the `file:///…` spelling input_file_name()
-        // uses (replaces the old read-back of the moved files, which paid
-        // a schema-inference open just to canonicalize paths)
-        fs.makeQualified(dst).toUri.toString
-      }.toSeq
-    fs.delete(stage, true)
-    if (moved.isEmpty) return
-    val stats = statRows(spark, moved, pinned)
-    if (fs.exists(side)) appendSidecar(spark, tablePath, stats)
-    else commitSidecar(spark, tablePath, stats)
   }
 
   /** The index state one plan reads ([[SkippingFileIndex]],
     * [[PartitionedSkippingFileIndex]]): the live file set and the
     * collected sidecar rows — both bounded by files × stat cols, read ONCE
-    * per plan. A missing sidecar (torn first streaming commit) yields zero
-    * stats rows, which [[SkipIndexBase]] treats as "nothing covered":
-    * every live file is a candidate — the documented degrade-to-scan,
-    * never a crash.
+    * per plan. A missing sidecar (a first append torn before its stats)
+    * yields zero stats rows, which [[SkipIndexBase]] treats as "nothing
+    * covered": every live file is a candidate — the documented
+    * degrade-to-scan, never a crash.
     */
   private[sources] final case class Stat(f: String, c: String,
       lo: Option[Double], hi: Option[Double],
@@ -344,17 +323,12 @@ object ZoneMap {
   private[sources] def loadIndex(spark: SparkSession, tablePath: String)
       : (Set[String], Seq[Stat]) = {
     val live = listDataFiles(spark, tablePath).toSet
-    val stats =
-      if (!fsOf(spark, tablePath).exists(new Path(sidecarPath(tablePath))))
-        Seq.empty
-      else
-        // driver-side read (no Spark job for O(files × cols) metadata);
-        // sidecars predating the nulls/rows columns read as None — which
-        // never prunes
-        ManifestIO.readSidecar(spark.sparkContext.hadoopConfiguration,
-            sidecarPath(tablePath))
-          .map(r => Stat(r.f, r.c, r.lo, r.hi, r.slo, r.shi,
-            r.nulls, r.rows))
+    // driver-side read (no Spark job for O(files × cols) metadata);
+    // sidecars predating the nulls/rows columns read as None — which
+    // never prunes
+    val stats = ManifestIO.readSidecar(spark.sparkContext.hadoopConfiguration,
+        sidecarPath(tablePath))
+      .map(r => Stat(r.f, r.c, r.lo, r.hi, r.slo, r.shi, r.nulls, r.rows))
     (live, stats)
   }
 }

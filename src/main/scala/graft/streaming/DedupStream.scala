@@ -119,7 +119,7 @@ object DedupStream {
           excludeProbeFromStored = true)
       } else IndexCommit.inBatch(batchId)(graft.ops.Dedup.appendToDedupIndex(
         batch, idCol, textCol, indexPath, rowsPerBand, threshold, maxBucket))
-    pairs.write.mode("overwrite").parquet(s"$pairsOutPath/batch=$batchId")
+    EventsStream.publishBatch(pairsOutPath, batchId, pairs)
   }
 
   /** Read-or-create the pinned bucket count of a hash-bucketed on-disk
@@ -168,14 +168,14 @@ object DedupStream {
     *
     * 100 TB write shape: labels persist PARTITIONED by node-hash bucket,
     * and each trigger rewrites ONLY the buckets holding relabeled nodes
-    * (dynamic partition overwrite). Bucketing by NODE — not component —
+    * (a partition swap). Bucketing by NODE — not component —
     * is what makes the partial rewrite sound: a node's bucket never
     * changes, so relabeling can never migrate a row out of a partition
     * and leave a stale copy behind. Per-batch write cost is
     * O(|touched buckets|), not O(|all labels|).
     *
     * Replay-safe end to end: the signature append is guarded by the
-    * batchId high-watermark, the batch's pairs directory overwrites
+    * batchId high-watermark, the batch's pairs directory replaces
     * itself, and the label merge is IDEMPOTENT — re-merging pairs already
     * folded in relabels the same components to the same minima, so a
     * redelivered batch rewrites the same buckets with the same rows. The
@@ -200,7 +200,7 @@ object DedupStream {
     import spark.implicits._
     // nBuckets is part of the table's on-disk layout: a different value on
     // a later run would bucket delta nodes differently and leave stale
-    // duplicate rows in old partitions (dynamic overwrite only touches
+    // duplicate rows in old partitions (the swap only touches
     // partitions that receive rows). Pin it next to the table and fail
     // loudly on mismatch — BEFORE anything is appended this trigger.
     val storedBuckets = pinnedBuckets(spark,
@@ -275,11 +275,12 @@ object DedupStream {
     * `isin` over ≤ nHashBuckets collected values — directory-level
     * partition pruning, not a corpus scan); the near-dup stage is the
     * O(batch) pruned index cascade. Nothing per trigger scales with
-    * corpus size. Every per-batch directory write is an idempotent
-    * overwrite and the signature append rides the shared batchId
-    * high-watermark, so a replayed batch rewrites identical bytes and
-    * appends nothing (the stored-hash probe filters `batch < batchId`, so
-    * a replay never sees its own committed hashes).
+    * corpus size. The three per-batch directories publish in one
+    * commit, each an idempotent replace (`EventsStream.batchDir`), and
+    * the signature append rides the shared batchId high-watermark, so a
+    * replayed batch rewrites the same rows and appends nothing (the
+    * stored-hash probe filters `batch < batchId`, so a replay never sees
+    * its own committed hashes).
     */
   def curateStreamSink(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, outPath: String,
@@ -346,12 +347,11 @@ object DedupStream {
     val kept = exact.join(pairs.select(col("b").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-    kept.drop("_h").write.mode("overwrite")
-      .parquet(s"$base/docs/batch=$batchId")
-    pairs.write.mode("overwrite").parquet(s"$base/pairs/batch=$batchId")
-    exact.select(col("_h").as("h"), hb(col("_h")).as("hb"))
-      .write.mode("overwrite").partitionBy("hb")
-      .parquet(s"$hashesPath/batch=$batchId")
+    IndexCommit.commit(spark, Seq(
+      EventsStream.batchDir(s"$base/docs", batchId, kept.drop("_h")),
+      EventsStream.batchDir(s"$base/pairs", batchId, pairs),
+      EventsStream.batchDir(hashesPath, batchId,
+        exact.select(col("_h").as("h"), hb(col("_h")).as("hb")), "hb")))
   }
 
   /** The persisted replay high-watermark: the `batch_id` of the index's

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.sources.IndexCommit
 
 /** Structured Streaming ingest path (SURVEY §2.10 extension — the reference
   * is strictly batch; this is the streaming face of the same event-table
@@ -16,6 +17,24 @@ object EventsStream {
 
   final case class SessionUpdate(user_id: Long, n_events: Long,
       start: java.sql.Timestamp, end: java.sql.Timestamp, closed: Boolean)
+
+  /** A `batch=<id>` sink's output: the batch is staged as
+    * `<root>__stage/batch=<id>` and published with [[IndexCommit]]
+    * `ReplaceParts`, which swaps that one directory in whole. A replay
+    * replaces its own directory, a crash leaves it old or new, and the
+    * stage and the old copy are siblings of `root`, never partitions a
+    * reader of `root` discovers.
+    */
+  private[streaming] def batchDir(root: String, batchId: Long, df: DataFrame,
+      partitionBy: String*): IndexCommit.Output =
+    IndexCommit.Output(root.stripSuffix("/"), IndexCommit.ReplaceParts,
+      stage => df.write.mode("overwrite").partitionBy(partitionBy: _*)
+        .parquet(s"$stage/batch=$batchId"))
+
+  /** Publish `df` as batch `batchId` of the sink at `root` ([[batchDir]]). */
+  private[streaming] def publishBatch(root: String, batchId: Long,
+      df: DataFrame): Unit =
+    IndexCommit.commit(df.sparkSession, Seq(batchDir(root, batchId, df)))
 
   /** Normalize an event-time column to TIMESTAMP for `withWatermark`, which
     * rejects TIMESTAMP_NTZ outright (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) —
@@ -192,11 +211,9 @@ object EventsStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.ops.AsofJoin.asofBackward(batch, right, keys, tsCol,
-          payloadCols, leftCols = leftCols, tolerance = tolerance,
-          allowExactMatches = allowExactMatches)
-          .write.mode("overwrite")
-          .parquet(s"${outPath.stripSuffix("/")}/batch=$batchId")
+        publishBatch(outPath, batchId, graft.ops.AsofJoin.asofBackward(batch,
+          right, keys, tsCol, payloadCols, leftCols = leftCols,
+          tolerance = tolerance, allowExactMatches = allowExactMatches))
     }
 
   /** Stream-static SCD2 enrichment — the streaming face of
@@ -225,29 +242,31 @@ object EventsStream {
       scd2Path: String, tsCol: String, outPath: String): Unit = {
     val hist = graft.relational.Scd2.historyFor(batch.sparkSession,
       scd2Path, batch.select(col("user_id")))
-    graft.relational.Scd2.lookupAsOf(batch, hist, tsCol)
-      .write.mode("overwrite")
-      .parquet(s"${outPath.stripSuffix("/")}/batch=$batchId")
+    publishBatch(outPath, batchId,
+      graft.relational.Scd2.lookupAsOf(batch, hist, tsCol))
   }
 
   /** Streaming maintenance of the hourly last-value table behind
     * q47_resample_ffill: each micro-batch folds its events into a
     * persisted (user_id, h, ts, event_id, v) table — the per-hour winner
     * is the max over the immutable (ts, event_id) order, SAME pick as the
-    * batch resample — partitioned by event DATE with dynamic partition
-    * overwrite, so a trigger rewrites only the dates its events touch
-    * (O(touched-dates), which for a live feed is the current day or two,
-    * never the table's history).
+    * batch resample — partitioned by event DATE, and a trigger rewrites
+    * only the dates its events touch (O(touched-dates), which for a live
+    * feed is the current day or two, never the table's history). The
+    * rewritten dates swap in through [[IndexCommit]] `ReplaceParts`: a
+    * crash leaves each date old or new and the next trigger's recovery
+    * puts a half-swapped set back whole, so no date ever goes missing
+    * from the `prev` a later trigger folds into.
     *
     * NO replay watermark, by design: the fold is a SEMILATTICE — union +
     * max over a total order is commutative, associative, idempotent — so
     * foreachBatch redelivery, batch re-ordering, and LATE DATA (an
     * earlier-ts event arriving in a later trigger) all converge to the
-    * same table as a batch rebuild over the full log. A replayed batch
-    * rewrites identical bytes; nothing can tear. (Contrast scd2Sink,
-    * whose collapse-fold is order-sensitive and needs the tuple
-    * watermark.) Downstream, the q47 span/grid/fill chain runs over this
-    * table instead of raw events.
+    * same table as a batch rebuild over the full log, and a replayed
+    * batch rewrites the same rows. (Contrast scd2Sink, whose
+    * collapse-fold is order-sensitive and needs the tuple watermark.)
+    * Downstream, the q47 span/grid/fill chain runs over this table
+    * instead of raw events.
     */
   def resampleSink(events: DataFrame, tablePath: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -385,16 +404,14 @@ object EventsStream {
 
   /** Streaming ingest into a [[graft.sources.ZoneMap]]-indexed table:
     * each micro-batch lands as range-clustered files + their min/max
-    * sidecar rows (`ZoneMap.appendBatch` — O(batch) per trigger), so the
-    * table stays RANGE-SKIPPABLE while it grows and a reader's BETWEEN
-    * probe keeps opening only intersecting files mid-stream. Exactly-once
-    * on data WITHOUT a marker: the batch's part files carry a
-    * deterministic `b<id>_` prefix and redelivery clears-and-rewrites
-    * them (same batch id ⇒ same rows in Structured Streaming), so replays
-    * converge instead of duplicating; replaced files' stale sidecar rows
-    * are neutralized by the probe's live-file intersection. Crash with
-    * data landed but stats missing degrades to the uncovered-file
-    * fallback — extra I/O, never a missed row. Single-writer per table
+    * sidecar rows (`ZoneMap.append` inside [[IndexCommit.inBatch]] —
+    * O(batch) per trigger), so the table stays RANGE-SKIPPABLE while it
+    * grows and a reader's BETWEEN filter keeps opening only intersecting
+    * files mid-stream. Exactly-once under replay: the stats commit pins
+    * the batch id in `<table>_meta`, a redelivered batch at or below it
+    * returns, and the files of a batch that crashed before its pin are
+    * dropped from the table and the sidecar before it lands again. The
+    * first batch pins `statCols` and their order. Single-writer per table
     * (the house persisted-index contract).
     */
   def zonemapSink(events: DataFrame, tablePath: String,
@@ -402,13 +419,14 @@ object EventsStream {
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     events.writeStream.foreachBatch {
       (batch: DataFrame, batchId: Long) =>
-        graft.sources.ZoneMap.appendBatch(batch, tablePath, batchId,
-          statCols, nFiles)
+        IndexCommit.inBatch(batchId)(
+          graft.sources.ZoneMap.append(batch, tablePath, nFiles, statCols))
     }
 
   /** One micro-batch of [[resampleSink]], exposed for replay testing. */
   def processResampleBatch(batch: DataFrame, tablePath: String): Unit = {
     val spark = batch.sparkSession
+    IndexCommit.recover(spark.sparkContext.hadoopConfiguration, Seq(tablePath))
     val cols = Seq("user_id", "h", "ts", "event_id", "v", "d")
     val bh = batch
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -438,7 +456,7 @@ object EventsStream {
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             bh.select(cols.map(col): _*).schema)
       }
-    // eager snapshot BEFORE overwriting directories the plan reads from
+    // eager snapshot BEFORE replacing directories the plan reads from
     val merged = prev.unionByName(bh.select(cols.map(col): _*))
       .groupBy(col("user_id"), col("h"), col("d"))
       .agg(max(struct(col("ts"), col("event_id"), col("v"))).as("m"))
@@ -451,10 +469,9 @@ object EventsStream {
     // the maintained table then accumulates small files batch over
     // batch, and each later trigger (and the final read) pays the
     // listing + per-file open
-    merged.hint("rebalance", col("d")).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("d")
-      .parquet(tablePath)
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(tablePath,
+      IndexCommit.ReplaceParts, merged.hint("rebalance", col("d"))
+        .write.mode("overwrite").partitionBy("d").parquet(_))))
   }
 
   /** Persist the drift BASELINE for [[driftSink]]: the reference
@@ -541,8 +558,8 @@ object EventsStream {
     * lands per trigger (the retrain-gate signal a pipeline alerts on).
     * Per-trigger cost: one count aggregation of the batch into ≤10 bins
     * + a broadcast-size join against the 10-row baseline — nothing
-    * scales with history. Overwrite-per-batch-dir keeps redelivery
-    * idempotent (same rows → same PSI → identical bytes).
+    * scales with history. Replacing its own `batch=<id>` directory
+    * ([[batchDir]]) keeps redelivery idempotent (same rows → same PSI).
     */
   def driftSink(events: DataFrame, valueCol: String, baselinePath: String,
       outPath: String)
@@ -562,10 +579,9 @@ object EventsStream {
         val (psi, n) = psiFromHist(spark,
           histogram(batch, valueCol, mn, mx), p)
         if (n > 0)
-          Seq((batchId, n, math.rint(psi * 1e6) / 1e6))
-            .toDF("batch_id", "n_rows", "psi").coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"${outPath.stripSuffix("/")}/batch=$batchId")
+          publishBatch(outPath, batchId,
+            Seq((batchId, n, math.rint(psi * 1e6) / 1e6))
+              .toDF("batch_id", "n_rows", "psi").coalesce(1))
     }
 
   /** Streaming data-quality gate — q57's streaming face: every
@@ -577,8 +593,8 @@ object EventsStream {
     * conditional-sum aggregation of the batch; Unique/ForeignKey rules
     * (if any) add their key-domain jobs — against a STATIC dimension for
     * FK, so the stream side never holds growing state. Redelivery is
-    * idempotent: same rows → same metrics → identical bytes under
-    * overwrite-per-batch-dir.
+    * idempotent: same rows → same metrics, replacing the batch's own
+    * directory ([[batchDir]]).
     */
   def dqSink(events: DataFrame, rules: Seq[graft.ops.DataQuality.Rule],
       outPath: String)
@@ -591,10 +607,9 @@ object EventsStream {
         val b = batch.localCheckpoint()
         try {
           if (b.head(1).nonEmpty)
-            graft.ops.DataQuality.validate(b, rules)
-              .withColumn("batch_id", lit(batchId))
-              .coalesce(1).write.mode("overwrite")
-              .parquet(s"${outPath.stripSuffix("/")}/batch=$batchId")
+            publishBatch(outPath, batchId,
+              graft.ops.DataQuality.validate(b, rules)
+                .withColumn("batch_id", lit(batchId)).coalesce(1))
         } finally b.unpersist()
     }
 
@@ -606,7 +621,7 @@ object EventsStream {
     * the summary rows — re-reading sketches, never data (the q46
     * incremental-statistics contract applied to frequency). Redelivery
     * is idempotent: a replayed batch aggregates to the identical summary
-    * and overwrites its own directory byte-for-byte. Compaction is free:
+    * and replaces its own directory ([[batchDir]]). Compaction is free:
     * any subset of summary rows may be merged into one row at any time
     * (mergeable-summaries associativity), shrinking the read fan-in
     * without touching data.
@@ -622,12 +637,10 @@ object EventsStream {
   /** One micro-batch of [[heavyHittersSink]], exposed for replay tests. */
   def processHeavyHittersBatch(batch: DataFrame, batchId: Long,
       keyCol: String, m: Int, tablePath: String): Unit = {
-    val summary = batch
+    publishBatch(tablePath, batchId, batch
       .agg(graft.ops.FreqSketch.misraGries(
         col(keyCol).cast("string"), m).as("sk"))
-      .coalesce(1)
-    summary.write.mode("overwrite")
-      .parquet(s"${tablePath.stripSuffix("/")}/batch=$batchId")
+      .coalesce(1))
   }
 
   /** Read back the maintained summaries and return the current top-k

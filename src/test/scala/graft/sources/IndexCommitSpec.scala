@@ -208,6 +208,29 @@ class IndexCommitSpec extends AnyFunSuite {
     (i.toLong, Array.tabulate(4)(j => ((i % 3) * 10 + j).toDouble + 1.0)))
     .toDF("vec_id", "embedding").coalesce(1)
   private val isT = col("doc_id") % 2 === 0
+  private def keyed(from: Long, to: Long) = spark.range(from, to)
+    .select((col("id") % 97).as("user_id"), col("id").as("event_id"))
+    .coalesce(1)
+
+  /** A zone-mapped table's state: its rows, its stats rows without their
+    * file keys, whether those keys name exactly the live files (no stale
+    * and no missing row), and the stream watermark beside it.
+    */
+  private def zoneState(t: String): Seq[Any] = {
+    val side = rows(s"${t}_zonemap")
+    val keys = side.map(r => "f: (\\S+)".r.findFirstMatchIn(r).get.group(1))
+      .map(new Path(_).getName).toSet
+    val fs = new Path(t).getFileSystem(conf)
+    val live = fs.listStatus(new Path(t)).map(_.getPath.getName)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    Seq(rows(t), side.map(_.replaceAll("f: \\S+ ", "")).sorted, keys == live,
+      IndexCommit.watermark(conf, s"${t}_meta"))
+  }
+
+  /** Hourly resample input: (event_id, ts, user_id, value). */
+  private def hourly(rows: (Long, String, Long, Double)*): DataFrame =
+    rows.toDF("event_id", "ts", "user_id", "value")
+      .withColumn("ts", to_timestamp(col("ts"))).coalesce(1)
 
   /** A small protein FASTA of `n` records from `seed`. */
   private def fasta(n: Int, seed: Int): String = {
@@ -283,6 +306,36 @@ class IndexCommitSpec extends AnyFunSuite {
           s"$ds/idx")
         replayEquals(ds, () => DedupStream.processDsirBatch(docs(9 until 12), 1L,
           "doc_id", "text", isT, s"$ds/idx"))(state(ds, "idx/buckets"))
+      },
+      { () =>
+        // the zone-map sink's batch: its files, then their stats rows and
+        // the pin beside the table
+        val zm = fresh("iczonemap")
+        def zmBatch(from: Long, b: Long): Unit = IndexCommit.inBatch(b)(
+          ZoneMap.append(keyed(from, from + 60), s"$zm/t", nFiles = 2,
+            statCols = Seq("user_id", "event_id")))
+        zmBatch(0, 0L)
+        replayEquals(zm, () => zmBatch(60, 1L))(zoneState(s"$zm/t"))
+      },
+      { () =>
+        // the resample fold: the second batch touches a date the first
+        // wrote, and its replay reads that date back as `prev`
+        val rs = fresh("icresample")
+        EventsStream.processResampleBatch(hourly(
+          (1L, "2024-01-01 01:10:00", 1L, 1.0), (2L, "2024-01-02 03:10:00", 1L, 2.0),
+          (3L, "2024-01-02 05:10:00", 2L, 3.0)), s"$rs/t")
+        replayEquals(rs, () => EventsStream.processResampleBatch(hourly(
+          (4L, "2024-01-02 07:10:00", 1L, 4.0), (5L, "2024-01-02 03:20:00", 1L, 5.0),
+          (6L, "2024-01-03 01:10:00", 2L, 6.0)), s"$rs/t"))(state(rs, "t"))
+      },
+      { () =>
+        // a `batch=<id>` sink
+        val hh = fresh("icheavy")
+        def hhBatch(from: Long, b: Long): Unit =
+          EventsStream.processHeavyHittersBatch(keyed(from, from + 40), b,
+            "user_id", 4, s"$hh/t")
+        hhBatch(0, 0L)
+        replayEquals(hh, () => hhBatch(40, 1L))(state(hh, "t"))
       })
   }
 
@@ -380,7 +433,7 @@ class IndexCommitSpec extends AnyFunSuite {
       * clean append (point 0) leaves.
       */
     def between(root: String, dir: String, build: String => Unit,
-        append: String => Unit): Unit = {
+        append: String => Unit, also: String => Unit = _ => ()): Unit = {
       build(s"$root/idx")
       val before = rows(s"$root/idx/$dir")
       var after = Seq.empty[String]
@@ -388,6 +441,7 @@ class IndexCommitSpec extends AnyFunSuite {
         val now = rows(s"$root/idx/$dir")
         if (n == 0) after = now
         assert(before.diff(now).isEmpty && now.diff(after).isEmpty)
+        also(s"$root/idx/$dir")
       }
     }
     concurrently(
@@ -446,6 +500,28 @@ class IndexCommitSpec extends AnyFunSuite {
           val want = ss.read.parquet(s"$bl/t").filter(p)
           assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
         }
+      },
+      { () =>
+        // the zone-map append: its files, then their stats rows; a file
+        // the sidecar does not cover is admitted, so the planner's read
+        // equals the raw scan at every point
+        val p = col("user_id").between(10L, 40L)
+        between(fresh("icazonemap"), "t",
+          i => ZoneMap.build(keyed(0, 300), Seq("user_id", "event_id"), s"$i/t",
+            nFiles = 4),
+          i => ZoneMap.append(keyed(300, 600), s"$i/t", nFiles = 2),
+          { t =>
+            val got = IndexedTable.table(spark, t).filter(p)
+            val want = spark.read.parquet(t).filter(p)
+            assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+          })
+      },
+      { () =>
+        between(fresh("icazorder"), "t",
+          i => ZOrder.writeZOrdered(keyed(0, 300), s"$i/t", col("user_id"),
+            col("event_id"), bits = 4, nFiles = 4),
+          i => ZOrder.appendZOrdered(keyed(300, 600), s"$i/t", col("user_id"),
+            col("event_id"), bits = 4, nFiles = 2))
       },
       { () =>
         // the bio append's `sequences/` append precedes its commit (it is

@@ -76,10 +76,9 @@ class IndexedTablePropertySpec extends AnyFunSuite {
   test("the 40 trees over an appendBatch-streamed, redelivered table") {
     val d = newTable("idxpropstr")
     val cols = Seq("user_id", "value")
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), d, 0L, cols)
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 1), d, 1L, cols)
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 0), d, 0L, cols)
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 3 === 2), d, 2L, cols)
+    // batch 0 is redelivered after batch 1
+    Seq(0L, 1L, 0L, 2L).foreach(b => IndexCommit.inBatch(b)(ZoneMap.append(
+      ev.filter(col("event_id") % 3 === b), d, statCols = cols)))
     fortyTrees(d)
   }
 

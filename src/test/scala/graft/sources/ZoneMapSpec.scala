@@ -38,6 +38,11 @@ class ZoneMapSpec extends AnyFunSuite {
   private def liveFiles(d: String): Int =
     spark.read.parquet(d).inputFiles.length
 
+  /** Stream batch `id` of `df` into `d`, as `EventsStream.zonemapSink` does. */
+  private def batch(df: DataFrame, d: String, id: Long,
+      cols: Seq[String]): Unit =
+    IndexCommit.inBatch(id)(ZoneMap.append(df, d, statCols = cols))
+
   test("a narrow range probe opens few files, not the table") {
     val d = newTable("zmapskip")
     ZoneMap.build(ev, Seq("user_id", "value"), d, nFiles = 16)
@@ -107,16 +112,18 @@ class ZoneMapSpec extends AnyFunSuite {
     val cols = Seq("user_id", "value")
     val (b0, b1) = (ev.filter(col("event_id") % 2 === 0),
       ev.filter(col("event_id") % 2 === 1))
-    ZoneMap.appendBatch(b0, d, 0L, cols)
-    ZoneMap.appendBatch(b1, d, 1L, cols)
+    batch(b0, d, 0L, cols)
+    batch(b1, d, 1L, cols)
     val before = spark.read.parquet(d)
     assert(before.count() == ev.count())
-    // replay batch 0
-    ZoneMap.appendBatch(b0, d, 0L, cols)
+    // replay batch 0: at or below the pinned watermark
+    batch(b0, d, 0L, cols)
     val after = spark.read.parquet(d)
     assert(after.count() == ev.count())
     assert(after.exceptAll(ev).isEmpty && ev.exceptAll(after).isEmpty)
-    // reads stay exact despite the stale sidecar rows the replay left
+    // the replay left no stale stats row: live files × stat columns
+    assert(spark.read.parquet(d + "_zonemap").count() ==
+      liveFiles(d).toLong * cols.length)
     val got = exact(d, col("user_id").between(100, 119))
     // and still pruned: batches cluster their own rows, the band hits few
     assert(plannedFiles(got) < liveFiles(d))
@@ -124,10 +131,9 @@ class ZoneMapSpec extends AnyFunSuite {
 
   test("first appendBatch pins the stat-column set for later batches") {
     val d = newTable("zmappin")
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 2 === 0), d, 0L,
-      Seq("user_id"))
+    batch(ev.filter(col("event_id") % 2 === 0), d, 0L, Seq("user_id"))
     // later batch asks for a different set — the pinned set must win
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 2 === 1), d, 1L,
+    batch(ev.filter(col("event_id") % 2 === 1), d, 1L,
       Seq("value", "event_id"))
     import spark.implicits._
     val cols = spark.read.parquet(d + "_zonemap")
@@ -145,10 +151,10 @@ class ZoneMapSpec extends AnyFunSuite {
     val d = newTable("zmapfast")
     val cols = Seq("user_id", "value")
     val b0 = ev.filter(col("event_id") % 2 === 0)
-    ZoneMap.appendBatch(b0, d, 0L, cols)
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 2 === 1), d, 1L, cols)
+    batch(b0, d, 0L, cols)
+    batch(ev.filter(col("event_id") % 2 === 1), d, 1L, cols)
     val namesBefore = spark.read.parquet(d).inputFiles.toSet
-    ZoneMap.appendBatch(b0, d, 0L, cols) // clean replay
+    batch(b0, d, 0L, cols) // clean replay
     val namesAfter = spark.read.parquet(d).inputFiles.toSet
     assert(namesAfter == namesBefore,
       "a fully-committed batch replay must not touch the table")
@@ -156,39 +162,33 @@ class ZoneMapSpec extends AnyFunSuite {
     assert(got.count() == ev.count())
   }
 
-  test("rebuildStats purges stale repair rows; probes identical before/after") {
+  test("rebuildStats covers files a torn append left uncovered") {
     val d = newTable("zmaprebuild")
     val cols = Seq("user_id", "value")
-    val b0 = ev.filter(col("event_id") % 2 === 0)
-    ZoneMap.appendBatch(b0, d, 0L, cols)
-    ZoneMap.appendBatch(ev.filter(col("event_id") % 2 === 1), d, 1L, cols)
-    // simulate a TORN batch-0 attempt (an uncovered prefixed remnant):
-    // the redelivery takes the repair path, clears + rewrites b0 with new
-    // part names — the old names' stats rows go stale
-    new java.io.File(s"$d/b0_torn.parquet").createNewFile()
-    ZoneMap.appendBatch(b0, d, 0L, cols)
+    ZoneMap.build(ev.filter(col("event_id") % 2 === 0), cols, d, nFiles = 8)
+    // a torn append: its files published, its stats rows never did
+    ev.filter(col("event_id") % 2 === 1)
+      .repartitionByRange(4, col("user_id"))
+      .write.mode("append").parquet(d)
     val band = col("user_id").between(100, 119)
     val before = exact(d, band)
     val (rowsBefore, nBefore) = (before.collect().toSet, plannedFiles(before))
-    val staleCount = spark.read.parquet(d + "_zonemap").count()
     ZoneMap.rebuildStats(spark, d)
-    val cleanCount = spark.read.parquet(d + "_zonemap").count()
-    assert(cleanCount < staleCount,
-      s"rebuild should shrink the sidecar ($staleCount -> $cleanCount)")
-    // exactly live-files × 2 columns rows remain
-    assert(cleanCount ==
+    // exactly live-files × 2 columns rows, at the pinned column order
+    assert(spark.read.parquet(d + "_zonemap").count() ==
       liveFiles(d).toLong * cols.length)
     val after = exact(d, band)
     assert(after.collect().toSet == rowsBefore)
-    assert(plannedFiles(after) == nBefore)
-    // and the repaired table's content is still exactly the full log
+    // the once-uncovered files now prune like the rest
+    assert(plannedFiles(after) < nBefore,
+      s"rebuild should prune the covered files (${plannedFiles(after)} vs $nBefore)")
     val got = spark.read.parquet(d)
     assert(got.exceptAll(ev).isEmpty && ev.exceptAll(got).isEmpty)
   }
 
   test("a missing sidecar (torn FIRST commit) degrades to scan, not a crash") {
     val d = newTable("zmapnoside")
-    ZoneMap.appendBatch(ev, d, 0L, Seq("user_id", "value"))
+    batch(ev, d, 0L, Seq("user_id", "value"))
     // simulate: crash before the first sidecar commit landed
     def rmr(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmr); f.delete()
