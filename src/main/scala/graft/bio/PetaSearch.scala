@@ -281,15 +281,16 @@ object PetaSearch {
     *  - `sequences/`: the ingested FASTA (the [[Fasta.read]] columns),
     *    parquet. [[searchIndexed]] joins it in the align stage; callers
     *    join it for m8 names; [[appendToTargetDb]] reads its max id and
-    *    appends new batches to it.
+    *    adds each batch `k` as files named `b<k>-…`.
     *  - `kmers/`: the unique-k-mer index (kmer, seqId, seqLen, tpos),
     *    range-partitioned by kmer and sorted within partitions
     *    (DELTA_BINARY_PACKED runs + min/max pruning). [[searchIndexed]]'s
     *    prefilter joins it; [[appendToTargetDb]] merges a batch into it.
-    *  - `meta/`: one row (dbResCount, nSeqs), both int64, written on the
-    *    driver. [[searchIndexed]] takes the evaluer's residue total from
-    *    it; [[appendToTargetDb]] adds a batch's totals to it. A DB without
-    *    `meta/` still works: both fall back to scanning `sequences/`.
+    *  - `meta/`: one row (dbResCount, nSeqs, and after an append its
+    *    `batch_id`), all int64, written on the driver. [[searchIndexed]]
+    *    takes the evaluer's residue total from it; [[appendToTargetDb]]
+    *    adds a batch's totals to it. A DB without `meta/` still works:
+    *    both fall back to scanning `sequences/`.
     * Each directory is committed through `sources.IndexCommit`:
     * `sequences/`, then `kmers/`, then `meta/` as the pin.
     */
@@ -306,14 +307,15 @@ object PetaSearch {
       totals(persisted))
   }
 
-  /** `kmers/` (the A1 winners of `candidates`, see [[KmerIndex.write]])
-    * through a whole-directory swap, then the (dbResCount, nSeqs) pin.
+  /** `before`, `kmers/` (the A1 winners of `candidates`, see
+    * [[KmerIndex.write]]) as a swap, then the (dbResCount, nSeqs) pin.
     */
   private def commitKmers(spark: SparkSession, dbPath: String,
-      candidates: DataFrame, t: (Long, Long)): Unit =
+      candidates: DataFrame, t: (Long, Long),
+      before: Seq[IndexCommit.Output] = Nil): Unit =
     IndexCommit.commit(spark,
-      Seq(IndexCommit.Output(s"$dbPath/kmers", IndexCommit.Replace,
-        KmerIndex.write(candidates, _))),
+      before :+ IndexCommit.Output(s"$dbPath/kmers", IndexCommit.Replace,
+        KmerIndex.write(candidates, _)),
       pin = Some(s"$dbPath/meta" -> Seq("dbResCount" -> t._1, "nSeqs" -> t._2)))
 
   /** (residues, sequences) of a sequence table; 0 residues when empty. */
@@ -344,33 +346,36 @@ object PetaSearch {
     * The reference has no equivalent (createkmertable always rebuilds its
     * table whole).
     *
-    * The merged `kmers/` and the new totals commit like a build's, but the
-    * append is NOT idempotent: the batch lands in `sequences/` before that
-    * commit, so a crash before the pin leaves stale totals, and rerunning
-    * the append adds the batch to `sequences/` a second time under new
-    * ids. Making it idempotent is ROADMAP item 1's bio-append bullet.
+    * The append is one [[IndexCommit]] batch, one above the watermark
+    * `meta/` pins: its `sequences/` files (`Add`, named `b<batch>-…`), the
+    * merged `kmers/` (`Replace`), then the pin with the new totals and the
+    * batch id. Recovery first drops the files of a batch that never pinned,
+    * so a replay of the same batch after a crash at any point equals a
+    * clean run — even when `kmers/` was swapped before the pin, since the
+    * A1 max is idempotent.
     */
   def appendToTargetDb(spark: SparkSession, targetFasta: String,
       dbPath: String, params: Params = Params()): Unit = {
-    IndexCommit.recover(spark.sparkContext.hadoopConfiguration,
-      Seq("sequences", "kmers", "meta").map(d => s"$dbPath/$d"))
-    val existing = spark.read.parquet(s"$dbPath/sequences")
-    // coalesce: an empty existing table yields a null max (getLong would NPE)
-    val offset = existing
-      .agg(coalesce(max(col("seqId")), lit(-1L))).head().getLong(0) + 1
-    // old-corpus totals are snapshotted BEFORE the new batch lands — the
-    // pre-metadata fallback scans `existing`'s path, and a post-append scan
-    // would double-count the batch
-    val (oldRes, oldN) = readDbMeta(spark, dbPath).getOrElse(totals(existing))
-    val newSeqs = Fasta.read(spark, targetFasta)
-      .withColumn("seqId", col("seqId") + lit(offset))
-    newSeqs.write.mode("append").parquet(s"$dbPath/sequences")
-    val appended = spark.read.parquet(s"$dbPath/sequences")
-      .filter(col("seqId") >= offset)
-    val merged = spark.read.parquet(s"$dbPath/kmers").unionByName(
-      KmerIndex.candidates(appended, params.k, params.mode.kmerAlphabet))
-    val (batchRes, batchN) = totals(appended)
-    commitKmers(spark, dbPath, merged, (oldRes + batchRes, oldN + batchN))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val pin = s"$dbPath/meta"
+    // the pin first: its watermark decides which batch files stay
+    IndexCommit.recover(conf,
+      Seq(pin, s"$dbPath/kmers", s"$dbPath/sequences"), Some(pin))
+    IndexCommit.inBatch(IndexCommit.watermark(conf, pin) + 1) {
+      val existing = spark.read.parquet(s"$dbPath/sequences")
+      // coalesce: an empty existing table yields a null max (getLong would NPE)
+      val offset = existing
+        .agg(coalesce(max(col("seqId")), lit(-1L))).head().getLong(0) + 1
+      val (oldRes, oldN) = readDbMeta(spark, dbPath).getOrElse(totals(existing))
+      val newSeqs = Fasta.read(spark, targetFasta)
+        .withColumn("seqId", col("seqId") + lit(offset))
+      val (batchRes, batchN) = totals(newSeqs)
+      val merged = spark.read.parquet(s"$dbPath/kmers").unionByName(
+        KmerIndex.candidates(newSeqs, params.k, params.mode.kmerAlphabet))
+      commitKmers(spark, dbPath, merged, (oldRes + batchRes, oldN + batchN),
+        Seq(IndexCommit.Output(s"$dbPath/sequences", IndexCommit.Add,
+          newSeqs.write.mode("overwrite").parquet(_))))
+    }
   }
 
   /** Query a persisted target DB (the reference's `petasearch` against

@@ -76,7 +76,8 @@ object BloomIndex {
     }: _*)
 
   /** Rewrite `df` key-hash-partitioned into `nFiles` files at `tablePath`
-    * and build the per-file bloom sidecar.
+    * and build the per-file bloom sidecar: the table, then the sidecar,
+    * each through an [[IndexCommit]] `Replace` ([[ZoneMap.commitIndexed]]).
     */
   def build(df: DataFrame, keyCol: String, tablePath: String,
       nFiles: Int = 16, mBits: Int = 65536, k: Int = 4): Unit = {
@@ -84,11 +85,12 @@ object BloomIndex {
       s"bad geometry: mBits=$mBits k=$k nFiles=$nFiles")
     val spark = df.sparkSession
     val kind = hashDomainOf(df.schema(keyCol).dataType)
-    df.repartition(nFiles, col(keyCol))
-      .write.mode("overwrite").parquet(tablePath)
-    val rows = bits(spark, Seq(tablePath), keyCol, kind, mBits, k, nFiles)
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
-      IndexCommit.Replace, rows.write.mode("overwrite").parquet(_))))
+    ZoneMap.commitIndexed(spark, tablePath, sidecarPath(tablePath),
+      IndexCommit.Replace)(
+      df.repartition(nFiles, col(keyCol)).write.mode("overwrite").parquet(_)) {
+      (files, stage) => bits(spark, files, keyCol, kind, mBits, k, nFiles)
+        .write.mode("overwrite").parquet(stage)
+    }
   }
 
   /** The sidecar rows of the data `files`: per (file, word), the OR of the
@@ -122,7 +124,7 @@ object BloomIndex {
     * read contract relaxes to one file PER COMMIT; reads stay exact
     * because blooms are per-file. The files, then the batch's sidecar
     * rows staged as ONE file, publish through [[IndexCommit]] `Add`
-    * ([[ZoneMap.appendIndexed]]), so each new data file is either fully
+    * ([[ZoneMap.commitIndexed]]), so each new data file is either fully
     * covered or not covered at all. The crash window between the two
     * (data landed, sidecar rows not yet published) is closed on the READ
     * side: [[candidateFiles]] treats any table file the sidecar does not
@@ -134,10 +136,13 @@ object BloomIndex {
     val spark = df.sparkSession
     // an append on a different column than the build would poison the
     // planner's bloom admission (equality pruned against bits of another
-    // column) — fail loudly instead
-    plannedKeyCol(spark, tablePath).foreach { kc =>
+    // column) — fail loudly instead. The sidecar pins the hash domain
+    // (long for sidecars from before key_kind): same column ⇒ same
+    // domain, so an append never forks the hash generation.
+    val kind = plannedKeyMeta(spark, tablePath).fold("long") { case (kc, kk) =>
       require(kc == keyCol,
         s"bloom index at $tablePath is keyed on '$kc', append got '$keyCol'")
+      kk
     }
     // geometry rides as constant columns of every sidecar row — ONE
     // driver-side record read replaces the old head() Spark jobs
@@ -147,29 +152,13 @@ object BloomIndex {
         s"bloom sidecar at ${sidecarPath(tablePath)} is empty"))
     val (mBits, k) = (g.getInteger("m_bits", 0), g.getInteger("k_hashes", 0))
     val nf = g.getInteger("n_files", 0)
-    // the domain is pinned by the sidecar (legacy sidecars predate
-    // key_kind: they were all long-domain); an append in another domain
-    // would fork the hash generation — the keyCol require above already
-    // rejects a different column, and same column ⇒ same domain
-    val kind =
-      if (g.getType.containsField("key_kind") &&
-          g.getFieldRepetitionCount("key_kind") > 0)
-        g.getString("key_kind", 0)
-      else "long"
-    ZoneMap.appendIndexed(spark, tablePath, sidecarPath(tablePath))(
+    ZoneMap.commitIndexed(spark, tablePath, sidecarPath(tablePath),
+      IndexCommit.Add)(
       df.repartition(nFiles, col(keyCol)).write.mode("overwrite").parquet(_)) {
       (files, stage) => bits(spark, files, keyCol, kind, mBits, k, nf)
         .coalesce(1).write.mode("overwrite").parquet(stage)
     }
   }
-
-  /** The column this table's bloom sidecar indexes, if the sidecar exists
-    * and records it (the planner cannot claim sidecars from before the
-    * `key_col` column).
-    */
-  private[sources] def plannedKeyCol(spark: SparkSession,
-      tablePath: String): Option[String] =
-    plannedKeyMeta(spark, tablePath).map(_._1)
 
   /** (key column, hash domain) of this table's bloom sidecar, if it
     * exists and records its key column. Sidecars from before `key_kind`

@@ -79,11 +79,14 @@ object ZOrder {
     * The layout lands as `nFiles` range-partitioned, internally z-sorted
     * parquet files under `path`; the z column itself is NOT stored (it is
     * derivable — storing it would change the schema the oracle compares).
+    * The table publishes through an [[IndexCommit]] `Replace` (readers see
+    * the old or the new layout, never a mix), so re-clustering a table in
+    * place — `writeZOrdered(spark.read.parquet(path), path, …)`, the
+    * compaction of its appends — is content-identical.
     */
   def writeZOrdered(df: DataFrame, path: String, exprA: Column,
       exprB: Column, bits: Int = 16, nFiles: Int = 32): Unit =
-    zOrderedWriter(df, exprA, exprB, bits, nFiles)
-      .mode("overwrite").parquet(path)
+    commitZOrdered(df, path, IndexCommit.Replace, exprA, exprB, bits, nFiles)
 
   /** Append a batch to an existing z-ordered table WITHOUT touching its
     * files — O(batch), the streaming-ingest write shape. The batch is
@@ -91,29 +94,20 @@ object ZOrder {
     * are derived, never stored, so differing bucket bounds per append
     * cannot affect content — only each file set's internal locality).
     * Box queries stay exactly correct; locality degrades as appends
-    * accumulate, and [[compactZOrdered]] restores it. The files publish
-    * through [[IndexCommit]] `Add`: a crash leaves each one old or new.
+    * accumulate, and a [[writeZOrdered]] of the table's own read restores
+    * it. The files publish through [[IndexCommit]] `Add`: a crash leaves
+    * each one old or new.
     */
   def appendZOrdered(df: DataFrame, path: String, exprA: Column,
       exprB: Column, bits: Int = 16, nFiles: Int = 4): Unit =
-    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
-      path.stripSuffix("/"), IndexCommit.Add,
-      zOrderedWriter(df, exprA, exprB, bits, nFiles)
-        .mode("overwrite").parquet(_))))
+    commitZOrdered(df, path, IndexCommit.Add, exprA, exprB, bits, nFiles)
 
-  /** Re-cluster the whole table (original + appends) into one fresh
-    * Morton layout — the LSM-style maintenance counterpart of
-    * [[appendZOrdered]], committed as an [[IndexCommit]] `Replace` like
-    * every compactor in `ops.Maintenance` (readers see old or new layout,
-    * never a mix). Content-identical; single-writer window.
-    */
-  def compactZOrdered(spark: org.apache.spark.sql.SparkSession,
-      path: String, exprA: Column, exprB: Column, bits: Int = 16,
-      nFiles: Int = 32): Unit = {
-    val base = path.stripSuffix("/")
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(base, IndexCommit.Replace,
-      writeZOrdered(spark.read.parquet(base), _, exprA, exprB, bits, nFiles))))
-  }
+  private def commitZOrdered(df: DataFrame, path: String,
+      publish: IndexCommit.Publish, exprA: Column, exprB: Column, bits: Int,
+      nFiles: Int): Unit =
+    IndexCommit.commit(df.sparkSession, Seq(IndexCommit.Output(
+      path.stripSuffix("/"), publish, clustered(df, exprA, exprB, bits, nFiles)
+        .write.mode("overwrite").parquet(_))))
 
   /** `df` Morton-clustered IN-ROW but not yet written: range-partitioned
     * and sorted on the (derived, then dropped) z-value. Feed it to any
@@ -151,8 +145,4 @@ object ZOrder {
       .sortWithinPartitions("_z")
       .drop("_z")
   }
-
-  private def zOrderedWriter(df: DataFrame, exprA: Column, exprB: Column,
-      bits: Int, nFiles: Int) =
-    clustered(df, exprA, exprB, bits, nFiles).write
 }

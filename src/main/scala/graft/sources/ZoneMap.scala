@@ -40,13 +40,14 @@ import org.apache.spark.sql.functions._
   *     admitted files and pushes into the parquet scan — false positives
   *     cost I/O, never correctness.
   *
-  * Writes: an [[append]] publishes its files and then their stats rows
-  * through [[IndexCommit]] `Add`, data first — the write protocol of every
-  * persisted index — and its stream face pins a replay watermark beside
-  * the table. The window between the two publishes is closed on the READ
-  * side exactly like [[BloomIndex]]: any table file the sidecar does not
-  * cover is an unconditional candidate, and a missing sidecar altogether
-  * degrades to a full-file-list scan — extra I/O, never a missed row.
+  * Writes: a [[build]] publishes its files and then their stats rows
+  * through [[IndexCommit]] `Replace`, an [[append]] through `Add`, data
+  * first — the write protocol of every persisted index — and the append's
+  * stream face pins a replay watermark beside the table. The window
+  * between the two publishes is closed on the READ side exactly like
+  * [[BloomIndex]]: any table file the sidecar does not cover is an
+  * unconditional candidate, and a missing sidecar altogether degrades to
+  * a full-file-list scan — extra I/O, never a missed row.
   * Single-writer, like the other persisted indexes.
   */
 object ZoneMap {
@@ -177,22 +178,16 @@ object ZoneMap {
     }
   }
 
-  /** Land freshly computed sidecar rows atomically: one driver-written
-    * part file, committed as an [[IndexCommit]] `Replace` — the one commit
-    * idiom every sidecar write shares. No Spark job: the sidecar is
-    * O(files × stat cols) of metadata.
+  /** Stage the [[statRows]] of the live data `files` over `cols` as one
+    * driver-written part file: the sidecar is O(files × stat cols) of
+    * metadata.
     */
-  private def commitSidecar(spark: SparkSession, tablePath: String,
-      rows: Seq[ManifestIO.SidecarRow]): Unit =
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
-      IndexCommit.Replace, writeRows(spark, rows))))
-
-  /** Write sidecar `rows` as one part file into stage directory `stage`. */
-  private def writeRows(spark: SparkSession,
-      rows: Seq[ManifestIO.SidecarRow])(stage: String): Unit = {
+  private def stageStats(spark: SparkSession, cols: Seq[String])(
+      files: Seq[String], stage: String): Unit = {
     fsOf(spark, stage).mkdirs(new Path(stage))
     ManifestIO.writeSidecar(spark.sparkContext.hadoopConfiguration,
-      s"$stage/part-${java.util.UUID.randomUUID}-zm.parquet", rows)
+      s"$stage/part-${java.util.UUID.randomUUID}-zm.parquet",
+      statRows(spark, files, cols))
   }
 
   /** The pinned stat columns in their ORIGINAL (clustering) order; none
@@ -205,16 +200,17 @@ object ZoneMap {
 
   /** Rewrite `df` range-clustered on `statCols.head` into `nFiles` files
     * at `tablePath` and build the per-file min/max sidecar over all
-    * `statCols` (numeric columns). A rebuild first drops the stream pin:
-    * it resets the replay watermark like every index rebuild.
+    * `statCols` (numeric columns), each a `Replace` ([[commitIndexed]]).
+    * Last, like every rebuild's pin, the stream watermark resets.
     */
   def build(df: DataFrame, statCols: Seq[String], tablePath: String,
       nFiles: Int = 16): Unit = {
     require(statCols.nonEmpty, "need at least one stat column")
-    fsOf(df.sparkSession, tablePath).delete(new Path(pinPath(tablePath)), true)
-    df.repartitionByRange(nFiles, col(statCols.head))
-      .write.mode("overwrite").parquet(tablePath)
-    buildStatsOnly(df.sparkSession, tablePath, statCols)
+    val spark = df.sparkSession
+    commitIndexed(spark, tablePath, sidecarPath(tablePath), IndexCommit.Replace)(
+      df.repartitionByRange(nFiles, col(statCols.head))
+        .write.mode("overwrite").parquet(_))(stageStats(spark, statCols))
+    fsOf(spark, tablePath).delete(new Path(pinPath(tablePath)), true)
   }
 
   /** Build the sidecar over an EXISTING table layout WITHOUT rewriting
@@ -229,7 +225,8 @@ object ZoneMap {
       statCols: Seq[String]): Unit = {
     require(statCols.nonEmpty, "need at least one stat column")
     val files = listDataFiles(spark, tablePath)
-    commitSidecar(spark, tablePath, statRows(spark, files, statCols))
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecarPath(tablePath),
+      IndexCommit.Replace, stageStats(spark, statCols)(files, _))))
   }
 
   /** Recompute the sidecar over the table's LIVE files at the PINNED
@@ -250,7 +247,7 @@ object ZoneMap {
     * its own rows); reads stay exact because stats are per-file.
     *
     * The files, then their stats rows, publish through [[IndexCommit]]
-    * `Add` ([[appendIndexed]]). Run inside [[IndexCommit.inBatch]] — the
+    * `Add` ([[commitIndexed]]). Run inside [[IndexCommit.inBatch]] — the
     * stream face, `EventsStream.zonemapSink` — the files are named
     * `b<id>-…` and the stats commit pins the batch id in the one-row
     * `<table>_meta` beside the table: a batch at or below that watermark
@@ -271,39 +268,40 @@ object ZoneMap {
     val cols = Some(pinnedCols(spark, tablePath)).filter(_.nonEmpty)
       .getOrElse(statCols)
     require(cols.nonEmpty, "need at least one stat column")
-    appendIndexed(spark, tablePath, sidecarPath(tablePath), Some(pin))(
-      df.repartitionByRange(nFiles, col(cols.head))
-        .write.mode("overwrite").parquet(_)) { (files, stage) =>
-      writeRows(spark, statRows(spark, files, cols))(stage)
-    }
+    commitIndexed(spark, tablePath, sidecarPath(tablePath), IndexCommit.Add,
+      Some(pin))(df.repartitionByRange(nFiles, col(cols.head))
+        .write.mode("overwrite").parquet(_))(stageStats(spark, cols))
   }
 
-  /** The append of both sidecar indexes: `writeData` stages the batch's
-    * files, published into the table with [[IndexCommit]] `Add`; the
+  /** The one write of both sidecar indexes, build and append: `writeData`
+    * stages the data files, published into the table with `publish`
+    * ([[IndexCommit]] `Replace` for a build, `Add` for an append); the
     * stage listing names them as live files; `stageRows(files, stage)`
-    * stages their sidecar rows, published into `sidecar` with `Add` after
-    * the data, and inside a stream batch `pin` takes the batch id last.
-    * Each data file is thus covered by its rows or not at all, and an
-    * empty batch publishes nothing.
+    * stages their sidecar rows, published into `sidecar` with the same
+    * mode after the data, and inside a stream batch `pin` takes the batch
+    * id last. Each data file is thus covered by its rows or not at all,
+    * and an empty batch publishes nothing.
     */
-  private[sources] def appendIndexed(spark: SparkSession, tablePath: String,
-      sidecar: String, pin: Option[String] = None)(writeData: String => Unit)(
+  private[sources] def commitIndexed(spark: SparkSession, tablePath: String,
+      sidecar: String, publish: IndexCommit.Publish, pin: Option[String] = None)(
+      writeData: String => Unit)(
       stageRows: (Seq[String], String) => Unit): Unit = {
     val fs = fsOf(spark, tablePath)
     var staged = Seq.empty[String]
-    IndexCommit.commit(spark, Seq(IndexCommit.Output(tablePath,
-      IndexCommit.Add, { stage =>
+    IndexCommit.commit(spark, Seq(IndexCommit.Output(tablePath, publish,
+      { stage =>
         writeData(stage)
         staged = listDataFiles(spark, stage).map(new Path(_).getName)
       })))
     if (staged.nonEmpty) {
       // qualified + toUri: the spelling `listDataFiles` gives the table
-      val files = staged.map(n => fs.makeQualified(
-        new Path(tablePath, IndexCommit.addedName(n))).toUri.toString)
+      val named =
+        if (publish == IndexCommit.Add) staged.map(IndexCommit.addedName) else staged
+      val files =
+        named.map(n => fs.makeQualified(new Path(tablePath, n)).toUri.toString)
       val conf = spark.sparkContext.hadoopConfiguration
-      IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecar,
-        IndexCommit.Add, stageRows(files, _))),
-        pin.flatMap(IndexCommit.batchPin(conf, _)))
+      IndexCommit.commit(spark, Seq(IndexCommit.Output(sidecar, publish,
+        stageRows(files, _))), pin.flatMap(IndexCommit.batchPin(conf, _)))
     }
   }
 

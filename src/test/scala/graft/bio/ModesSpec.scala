@@ -90,13 +90,22 @@ class ModesSpec extends AnyFunSuite {
       Array.fill(n)("ACDEFGHIKLMNPQRSTVWY"(rnd.nextInt(20))).mkString
     val batchA = (0 until 6).map(i => (s"a$i", protein(80 + i)))
     val batchB = (0 until 5).map(i => (s"b$i", protein(90 + i)))
+    val batchC = (0 until 4).map(i => (s"c$i", protein(70 + i)))
     val faA = writeFasta(batchA)
     val faB = writeFasta(batchB)
-    val faAll = writeFasta(batchA ++ batchB)
+    val faC = writeFasta(batchC)
+    val faAll = writeFasta(batchA ++ batchB ++ batchC)
     val dbInc = java.nio.file.Files.createTempDirectory("dbinc").toString
     val dbFull = java.nio.file.Files.createTempDirectory("dbfull").toString
     PetaSearch.buildTargetDb(spark, faA, dbInc)
-    PetaSearch.appendToTargetDb(spark, faB, dbInc)
+    // two successive batches: 0, then 1, each pinned as the watermark
+    val conf = spark.sparkContext.hadoopConfiguration
+    Seq(faB, faC).zipWithIndex.foreach { case (fa, b) =>
+      PetaSearch.appendToTargetDb(spark, fa, dbInc)
+      assert(graft.sources.IndexCommit.watermark(conf, s"$dbInc/meta") == b)
+      assert(new java.io.File(s"$dbInc/sequences").list()
+        .exists(_.startsWith(s"b$b-")))
+    }
     PetaSearch.buildTargetDb(spark, faAll, dbFull)
 
     // A1 argmax is associative -> merged index must EQUAL the full rebuild
@@ -107,9 +116,12 @@ class ModesSpec extends AnyFunSuite {
     val mf = spark.read.parquet(s"$dbFull/meta").head()
     assert(mi.getAs[Long]("dbResCount") == mf.getAs[Long]("dbResCount"))
     assert(mi.getAs[Long]("nSeqs") == mf.getAs[Long]("nSeqs"))
+    def seqs(db: String) =
+      spark.read.parquet(s"$db/sequences").collect().map(_.toSeq).toSet
+    assert(seqs(dbInc) == seqs(dbFull))
 
     // and the indexed search path returns identical hits
-    val queries = Fasta.read(spark, faB).cache()
+    val queries = Fasta.read(spark, writeFasta(batchB ++ batchC)).cache()
     val ri = PetaSearch.searchIndexed(spark, queries, dbInc)
       .select("queryId", "targetId", "bits").collect().map(_.toSeq).toSet
     val rf = PetaSearch.searchIndexed(spark, queries, dbFull)

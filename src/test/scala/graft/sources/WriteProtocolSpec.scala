@@ -7,21 +7,26 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every live-directory write in main publishes through [[IndexCommit]].
   * The writes that bypass a stage have a recognizable spelling: Spark's
   * dynamic partition overwrite, an append-mode write, or a `batch=<id>`
-  * directory written in place. This scans the main sources for them and
-  * fails on any code line not on the list below, each exception with its
-  * reason. An entry that no longer matches anything fails too, so the
-  * list only shrinks with the code.
+  * directory written in place; and, in the index layers (`sources/`,
+  * `bio/`), an overwrite-mode parquet write whose target is not the stage
+  * an [[IndexCommit.Output]] is handed (`_` or `stage`). This scans the
+  * main sources for them and fails on any code line not on the list
+  * below, each exception with its reason. An entry that no longer matches
+  * anything fails too, so the list only shrinks with the code.
   */
 class WriteProtocolSpec extends AnyFunSuite {
 
-  private val Pattern =
-    """partitionOverwriteMode|mode\("append"\)|batch=\$batchId""".r
+  /** (pattern, the directories under src/main/scala it scans). */
+  private val patterns = Seq(
+    """partitionOverwriteMode|mode\("append"\)|batch=\$batchId""".r ->
+      Seq("graft/"),
+    """mode\("overwrite"\)\.parquet\((?!_\)|stage\))""".r ->
+      Seq("graft/sources/", "graft/bio/"))
 
   /** (file under src/main/scala, text on the line, reason). */
   private val allowed = Seq(
-    ("graft/bio/PetaSearch.scala", """newSeqs.write.mode("append")""",
-      "the bio append: an idempotent one needs a batch identity, and the " +
-        "segmented append redesigns its commit"),
+    ("graft/bio/KmerIndex.scala", """.write.mode("overwrite").parquet(path)""",
+      "KmerIndex.write: writes the stage its IndexCommit output is handed"),
     ("graft/streaming/EventsStream.scala", """.parquet(s"$stage/batch=$batchId")""",
       "batchDir: the one batch-directory write, into an IndexCommit stage"),
     ("graft/streaming/DedupStream.scala",
@@ -53,8 +58,11 @@ class WriteProtocolSpec extends AnyFunSuite {
     val hits = scalaFiles(root).flatMap { f =>
       val rel = root.toPath.relativize(f.toPath).toString
       val src = scala.io.Source.fromFile(f, "UTF-8")
+      val scanned = patterns.collect {
+        case (p, dirs) if dirs.exists(rel.startsWith) => p
+      }
       try src.getLines().zipWithIndex.collect {
-        case (line, i) if Pattern.findFirstIn(line).isDefined && !{
+        case (line, i) if scanned.exists(_.findFirstIn(line).isDefined) && !{
             val t = line.trim
             t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
           } => (rel, i + 1, line.trim)
